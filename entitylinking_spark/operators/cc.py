@@ -44,7 +44,10 @@ def _driver_cc(edges: DataFrame) -> DataFrame:
 
     spark = edges.sparkSession
     src_type = edges.schema["src"].dataType
-    pdf = edges.toPandas()
+    # a null endpoint never joins two components (as in the star loop,
+    # where null comparisons drop the edge); factorize would code it -1,
+    # and parent[-1] would alias it to the last node
+    pdf = edges.dropna(subset=["src", "dst"]).toPandas()
     # factorize to dense ints; keep original values for label selection
     codes_l, uniq = pd.factorize(
         pd.concat([pdf["src"], pdf["dst"]], ignore_index=True), sort=False
@@ -143,8 +146,12 @@ def connected_components(
     on_iteration: optional callback(iteration:int, edge_count:int) — used by
     the pipeline to checkpoint the frontier (resume support).
     assume_distinct: skip the initial dedup shuffle when the caller already
-    guarantees distinct (src != dst) edges (the ER pipeline does — it
-    distincts the union of near-dup and exact-dup edges itself).
+    guarantees distinct (src != dst) edges. The ER core's new edges are
+    distinct by construction: near pairs are unique via candidate_pairs'
+    (id_l, id_r) groupBy, there is one exact edge per non-rep row, and the
+    two sets are disjoint (non-reps never enter candidate pairs). Only a
+    fold's prior star edges can repeat an edge, so the core passes False
+    when it has them.
     driver_max_edges: graphs at or under this many (distinct) edges are
     finished by one bounded driver union-find (identical labels — see
     _driver_cc); larger graphs run the star loop. 0 forces the loop.

@@ -220,7 +220,9 @@ def link_mentions(mentions: DataFrame, entities: DataFrame, top_k: int = 10,
     """Full flow: returns (mention_id, entity_id, score, candidates array).
 
     Mentions with no candidate at all come back with NULL entity_id — the
-    reference's fallback ladder end state (core.py:154-164).
+    reference's fallback ladder end state (core.py:154-164). The gold
+    `label_document_id` column is carried through only when the mentions
+    have it.
     """
     ranked = rank_candidates(
         candidate_channels(mentions, entities, use_bm25=use_bm25), top_k=top_k
@@ -236,7 +238,6 @@ def link_mentions(mentions: DataFrame, entities: DataFrame, top_k: int = 10,
         F.col("_cands")[0]["score"].alias("score"),
         F.transform(F.col("_cands"), lambda c: c["document_id"]).alias("candidates"),
     )
-    return (
-        mentions.select("mention_id", "corpus", "label_document_id")
-        .join(best, "mention_id", "left")
-    )
+    keep = [c for c in ("mention_id", "corpus", "label_document_id")
+            if c in mentions.columns]
+    return mentions.select(*keep).join(best, "mention_id", "left")

@@ -2,12 +2,14 @@
 
 Extension beyond the reference (which is pure batch — SURVEY.md §2.9):
 as new file snapshots arrive (e.g. from streaming/ingest.stream_keyed),
-each increment resolves clusters WITHOUT re-scoring the old corpus:
+each increment resolves clusters WITHOUT re-scoring the old corpus.
+`resolve_increment` is the second entry into the resolution core in
+plans/pipeline.py (`resolve` is the first, a fold into an empty state):
 
-  * candidate pairs are generated over the combined rep set, but old×old
-    pairs are dropped INSIDE the block self-join (is_new flag carried
-    through block_candidates/candidate_pairs), so incremental pair volume
-    is ~ new×affected, not corpus²;
+  * it keys and materializes only the batch's rows, flags them `is_new`
+    against the carried state, and hands the combined rows to the core,
+    which drops old×old pairs INSIDE the block self-join, so incremental
+    pair volume is ~ new×affected, not corpus²;
   * the previous clustering re-enters connected components as its star
     edges (row -> cluster min). Transitive closure of a union satisfies
     closure(closure(old) ∪ new) == closure(old ∪ new), so the incremental
@@ -45,15 +47,11 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
 
-from entitylinking_spark.operators.blocking import (
-    ERConfig,
-    block_candidates,
-    shingle_blacklist,
-    with_keys,
-)
-from entitylinking_spark.operators.cc import connected_components
-from entitylinking_spark.operators.pairs import candidate_pairs
-from entitylinking_spark.operators.scoring import matched_edges, score_pairs
+from entitylinking_spark.operators.blocking import ERConfig, with_keys
+# not called here (the core calls it through plans.pipeline), but kept as a
+# name of every plan module: perfbench/spans.py wraps it in each of them
+from entitylinking_spark.operators.cc import connected_components  # noqa: F401
+from entitylinking_spark.plans.pipeline import _census, _resolve_core
 
 
 @dataclass
@@ -103,18 +101,9 @@ def resolve_increment(
     elif cfg.suppress_shingle_df is None:
         blacklist = None  # suppression disabled by config — nothing to pin
     else:
-        # censused once, here, on the first increment — PINNED thereafter.
-        # "Censused and found nothing" / "below the corpus gate" both pin
-        # an EMPTY array, never None: None would mean "not computed" and
-        # make a later replay resolve(..., blacklist=None) re-census the
-        # grown corpus (ADVICE r4 — see the module caveat).
-        blacklist = None
-        if new_files.count() >= cfg.suppress_min_corpus:
-            blacklist = shingle_blacklist(new_files, cfg)
-        if blacklist is None:
-            import numpy as np
-
-            blacklist = np.empty(0, dtype=np.uint64)
+        # censused once, here, on the first increment — PINNED thereafter,
+        # as an array even when empty (see the module caveat)
+        blacklist = _census(new_files, cfg)
     new_keyed_full = with_keys(new_files, cfg, id_col=id_col,
                                blacklist=blacklist)
     new_keyed = new_keyed_full.drop("content").localCheckpoint(eager=True)
@@ -122,57 +111,22 @@ def resolve_increment(
         new_keyed_full.select("row_id", "content").localCheckpoint(eager=True)
     )
 
+    flagged = new_keyed.withColumn("is_new", F.lit(True))
     if state is None:
-        all_keyed, all_content = new_keyed, new_content
-        prior_edges = None
+        all_keyed, all_content, prior_edges = new_keyed, new_content, None
     else:
         all_keyed = state.keyed.unionByName(new_keyed)
         all_content = state.content.unionByName(new_content)
+        flagged = state.keyed.withColumn("is_new", F.lit(False)).unionByName(flagged)
         prior_edges = state.clusters.filter(
             F.col("row_id") != F.col("cluster_id")
         ).select(
             F.col("cluster_id").alias("src"), F.col("row_id").alias("dst")
         )
 
-    # new flag via join (no driver-side id list): rows present in new_keyed
-    new_ids = new_keyed.select("row_id").withColumn("is_new", F.lit(True))
-    keyed_flagged = all_keyed.join(new_ids, "row_id", "left").withColumn(
-        "is_new", F.coalesce(F.col("is_new"), F.lit(False))
-    )
-
-    # exact-dup fast path over the COMBINED corpus: rep = min row_id per
-    # content_sha (deterministic regardless of how the corpus was split
-    # into increments); only new-involving exact edges are emitted — the
-    # old ones are inside prior clusters
-    reps = keyed_flagged.groupBy("content_sha").agg(
-        F.min("row_id").alias("rep_id"), F.max("is_new").alias("any_new")
-    )
-    exact_edges = (
-        keyed_flagged.select("row_id", "content_sha", "is_new")
-        .join(reps, "content_sha")
-        .filter(F.col("row_id") != F.col("rep_id"))
-        .filter(F.col("is_new") | F.col("any_new"))
-        .select(F.col("rep_id").alias("src"), F.col("row_id").alias("dst"))
-    )
-    rep_rows = keyed_flagged.join(
-        reps.select(F.col("rep_id").alias("row_id")), "row_id", "left_semi"
-    ).persist()
-
-    blocks = block_candidates(rep_rows, cfg)  # carries is_new
-    pairs = candidate_pairs(blocks, cfg).persist()
-    n_pairs = pairs.count()
-    scored = score_pairs(pairs, rep_rows, cfg, content_df=all_content)
-    near_edges = matched_edges(scored, cfg)
-
-    edges = near_edges.unionByName(exact_edges)
-    if prior_edges is not None:
-        edges = edges.unionByName(prior_edges)
-    clusters = connected_components(
-        edges.distinct(), all_ids=all_keyed.select("row_id"),
-        assume_distinct=True,
-    )
-    pairs.unpersist()
-    rep_rows.unpersist()
+    core = _resolve_core(flagged, all_content, cfg, prior_edges)
+    for df in core.persisted:
+        df.unpersist()
     # O(new) state carry (round-4 verdict #2): ONLY this increment's rows
     # were materialized (new_keyed / new_content localCheckpoints above);
     # the accumulated frames are lazy unions over the per-increment
@@ -184,15 +138,16 @@ def resolve_increment(
     return IncrementalState(
         keyed=all_keyed,
         content=all_content,
-        clusters=clusters,
-        n_pairs_scored=n_pairs,
+        clusters=core.clusters,
+        n_pairs_scored=core.n_pairs,
         blacklist=blacklist,
         delta_keyed=new_keyed,
         delta_content=new_content,
     )
 
 
-# ---------------------------------------------------------------------------\n# durable state (driver-restartable streaming; bounded in-memory plan)
+# ---------------------------------------------------------------------------
+# durable state (driver-restartable streaming; bounded in-memory plan)
 # ---------------------------------------------------------------------------
 #
 # The in-memory IncrementalState dies with the driver, and its lazy union

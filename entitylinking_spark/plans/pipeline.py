@@ -1,23 +1,30 @@
-"""End-to-end entity-resolution pipeline.
+"""End-to-end entity resolution: one resolution core, two entries.
 
 repo_files -> keys -> blocks -> salted pair join -> Arrow scoring ->
 threshold edges -> large-star/small-star CC -> clusters, with an
 exact-duplicate fast path (group by content_sha) so near-dup machinery only
 ever sees one representative per distinct content.
 
+`_resolve_core` is the only place that chain is built. Since
+closure(closure(old) ∪ new) == closure(old ∪ new), batch is a fold into an
+empty state: `resolve()` marks every row new and passes no prior edges,
+adding the shingle census, CheckpointStore stages (a re-run with the same
+checkpoint dir resumes after the last complete stage) and metrics;
+`plans/incremental.resolve_increment()` marks only its batch new and passes
+the prior clusters' star edges. The core calls every layer through this
+module's globals.
+
 This is the Spark-first re-expression of the reference's linking flow
-(/root/reference/Sparkle/linking.py:85-97 -> core.py:30-166): candidate
-generation (core.py:100-120) becomes the block join, pairwise judgment
+(Sparkle/linking.py:85-97 -> core.py:30-166): candidate generation
+(core.py:100-120) becomes the block join, pairwise judgment
 (algorithms.py:268-355) becomes the scorer, and graph propagation
 (e2e/systems/graph_system.py:953-1006) becomes connected components.
-
-Every stage optionally checkpoints (CheckpointStore); a re-run with the
-same checkpoint dir resumes after the last complete stage.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -54,10 +61,11 @@ class ERResult:
 
 
 # Bumped whenever a STAGE TABLE's schema or semantics change between
-# releases (e.g. round 4 added jw_evaluated to pairs_scored): a checkpoint
-# dir written by older code must invalidate instead of resuming with a
-# stage table the current code can't consume.
-_STAGE_CONTRACT_VERSION = 2
+# releases (round 4 added jw_evaluated to pairs_scored; the shared core
+# added is_new to blocks): a checkpoint dir written by older code must
+# invalidate instead of resuming with a stage table the current code can't
+# consume.
+_STAGE_CONTRACT_VERSION = 3
 
 
 def _fingerprint(cfg: ERConfig, repo_files: DataFrame, id_col: str | None) -> str:
@@ -85,6 +93,96 @@ def _fingerprint(cfg: ERConfig, repo_files: DataFrame, id_col: str | None) -> st
     return hashlib.sha256(payload.encode()).hexdigest()[:16]
 
 
+def _census(files: DataFrame, cfg: ERConfig):
+    """Shingle blacklist (numpy uint64) for corpus-frequency suppression.
+
+    At 500k rows, 83% of round-1 candidate pairs were boilerplate-band
+    negatives; suppressing their shingles removes those pairs at the
+    source. Corpus-size gate (round-2 verdict #2): below
+    suppress_min_corpus the census is fixed cost with no pair explosion to
+    prevent, so one count() (metadata-only on parquet) decides. "Censused,
+    nothing suppressed" is an EMPTY array, never None: with_keys treats the
+    two alike, and the fold pins it (see plans/incremental.py)."""
+    import numpy as np
+
+    blacklist = None
+    if files.count() >= cfg.suppress_min_corpus:
+        blacklist = shingle_blacklist(files, cfg)
+    return np.empty(0, dtype=np.uint64) if blacklist is None else blacklist
+
+
+class _Core(NamedTuple):
+    clusters: DataFrame
+    scored: DataFrame
+    census: DataFrame
+    n_pairs: int | None  # None when pairs_scored was resumed from a stage
+    persisted: list
+
+
+def _resolve_core(keyed: DataFrame, content: DataFrame, cfg: ERConfig,
+                  prior_edges: DataFrame | None = None,
+                  stage=lambda name, compute: compute()) -> _Core:
+    """Resolve slim keyed rows (no content; `is_new` flags the rows being
+    added) given the star edges of the clustering already computed over
+    the old rows. Only new-involving pairs and edges are generated — the
+    old×old ones are inside `prior_edges`.
+
+    `content` is (row_id, content) for the verify join; `stage(name,
+    compute)` may checkpoint the blocks, pairs_scored, edges and clusters
+    tables. The caller unpersists `persisted` once done with `scored`."""
+    # exact-duplicate fast path (sha grouping; no pairs generated): rep =
+    # min row_id per content_sha over ALL rows — deterministic however the
+    # corpus was split into folds; edge (rep -> row) for non-reps
+    reps = keyed.groupBy("content_sha").agg(
+        F.min("row_id").alias("rep_id"), F.max("is_new").alias("any_new")
+    )
+    exact_edges = (
+        keyed.select("row_id", "content_sha", "is_new")
+        .join(reps, "content_sha")
+        .filter(F.col("row_id") != F.col("rep_id"))
+        .filter(F.col("is_new") | F.col("any_new"))
+        .select(F.col("rep_id").alias("src"), F.col("row_id").alias("dst"))
+    )
+    # scanned by blocks + census + 2 feature joins
+    rep_rows = keyed.join(
+        reps.select(F.col("rep_id").alias("row_id")), "row_id", "left_semi"
+    ).persist()
+    persisted = [rep_rows]
+
+    # ---- blocking + census + salted pair join over representatives ------
+    blocks = stage("blocks", lambda: block_candidates(rep_rows, cfg))  # carries is_new
+    census = block_census(blocks)
+    n_pairs = None
+
+    def compute_scored() -> DataFrame:
+        nonlocal n_pairs
+        # the scorer fans out into THREE union branches (pruned / equal-name
+        # fast path / JW survivors); unpersisted, each branch would re-run
+        # the whole block self-join + dedup. The pair list is slim (two ids
+        # + block key) — persist and materialize once.
+        pairs = candidate_pairs(blocks, cfg, census=census).persist()
+        persisted.append(pairs)
+        n_pairs = pairs.count()
+        return score_pairs(pairs, rep_rows, cfg, content_df=content)
+
+    scored = stage("pairs_scored", compute_scored).persist()
+    persisted.append(scored)
+
+    # ---- edges + connected components -----------------------------------
+    def compute_edges() -> DataFrame:
+        edges = matched_edges(scored, cfg).unionByName(exact_edges)
+        return edges if prior_edges is None else edges.unionByName(prior_edges)
+
+    edges = stage("edges", compute_edges)
+    clusters = stage("clusters", lambda: connected_components(
+        edges, all_ids=keyed.select("row_id"),
+        # new edges are distinct by construction (see assume_distinct);
+        # only prior star edges can repeat one
+        assume_distinct=prior_edges is None,
+    ))
+    return _Core(clusters, scored, census, n_pairs, persisted)
+
+
 def resolve(
     repo_files: DataFrame,
     cfg: ERConfig = ERConfig(),
@@ -106,35 +204,26 @@ def resolve(
     m = MetricsCollector()
     persisted: list[DataFrame] = []
 
-    # corpus-frequency shingle suppression: one sampled census job before
-    # the signature pass. At 500k rows, 83% of round-1 candidate pairs were
-    # boilerplate-band negatives — suppressing their shingles removes the
-    # pairs at the source (the dominant cost at scale was generating and
-    # scoring them, not the census).
-    if blacklist is None and cfg.suppress_shingle_df is not None \
+    pinned = blacklist is not None
+    if not pinned and cfg.suppress_shingle_df is not None \
             and not store.is_complete("keyed", fingerprint=fp):
-        # corpus-size gate (round-2 verdict #2): below suppress_min_corpus
-        # the census is fixed cost with no pair explosion to prevent —
-        # one count() (metadata-only on parquet) decides
-        if repo_files.count() >= cfg.suppress_min_corpus:
-            blacklist = shingle_blacklist(repo_files, cfg)
-        if collect_metrics:
-            m.record("shingle_suppression",
-                     n_suppressed=0 if blacklist is None else int(len(blacklist)))
-    elif blacklist is not None and collect_metrics:
-        m.record("shingle_suppression", pinned=True,
-                 n_suppressed=int(len(blacklist)))
+        blacklist = _census(repo_files, cfg)
+    if collect_metrics and blacklist is not None:
+        m.record("shingle_suppression", n_suppressed=int(len(blacklist)),
+                 pinned=pinned)
 
-    keyed_full = store.get_or_compute(
-        "keyed", lambda: with_keys(repo_files, cfg, id_col=id_col, blacklist=blacklist),
-        fingerprint=fp,
+    def stage(name: str, compute) -> DataFrame:
+        return store.get_or_compute(name, compute, fingerprint=fp)
+
+    keyed_full = stage(
+        "keyed", lambda: with_keys(repo_files, cfg, id_col=id_col, blacklist=blacklist)
     )
     # persist WITHOUT content: serializing multi-KB content strings into the
     # cache is the dominant cost of this stage, and only the verify join
     # reads content — through a column-pruned scan of the source instead.
     # (On the checkpointed path keyed_full is a parquet read, where column
     # pruning at the scan achieves the same thing with no persist.)
-    keyed = keyed_full.drop("content")
+    keyed = keyed_full.drop("content").withColumn("is_new", F.lit(True))
     if not store.enabled:
         # persist AND materialize now: the slim keyed is referenced ~8x in
         # the DAG below; on a cold cache, concurrent branches of the first
@@ -142,57 +231,19 @@ def resolve(
         keyed = keyed.persist()
         keyed.count()
         persisted.append(keyed)
-    content_df = keyed_full.select("row_id", "content")
 
-    # ---- exact-duplicate fast path (sha grouping; no pairs generated) ----
-    # rep = min row_id per content_sha; edge (row -> rep) for non-reps.
-    reps = keyed.groupBy("content_sha").agg(F.min("row_id").alias("rep_id"))
-    exact_edges = (
-        keyed.select("row_id", "content_sha")
-        .join(reps, "content_sha")
-        .filter(F.col("row_id") != F.col("rep_id"))
-        .select(F.col("rep_id").alias("src"), F.col("row_id").alias("dst"))
-    )
-    rep_rows = keyed.join(
-        reps.select(F.col("rep_id").alias("row_id")), "row_id", "left_semi"
-    )
-    if not store.enabled:
-        rep_rows = rep_rows.persist()  # scanned by blocks + census + 2 feature joins
-        persisted.append(rep_rows)
-
-    # ---- blocking + census + salted pair join over representatives ------
-    blocks = store.get_or_compute("blocks", lambda: block_candidates(rep_rows, cfg),
-                                 fingerprint=fp)
-    census = block_census(blocks)
+    core = _resolve_core(keyed, keyed_full.select("row_id", "content"), cfg,
+                         stage=stage)
+    persisted += core.persisted
     if collect_metrics:
-        m.record("blocks", **m.block_stats(census, cfg.block_cap, cfg.skip_block_threshold))
-
-    pairs = candidate_pairs(blocks, cfg, census=census)
-    if not store.is_complete("pairs_scored", fingerprint=fp):
-        # the scorer fans out into THREE union branches (pruned / equal-name
-        # fast path / JW survivors); unpersisted, each branch would re-run
-        # the whole block self-join + dedup — even inside a single
-        # checkpoint write job. The pair list is slim (two ids + block key)
-        # — persist and materialize once.
-        pairs = pairs.persist()
-        pairs.count()
-        persisted.append(pairs)
-    scored = store.get_or_compute(
-        "pairs_scored", lambda: score_pairs(pairs, rep_rows, cfg, content_df=content_df),
-        fingerprint=fp,
-    )
-    if not store.enabled:
-        scored = scored.persist()
-        persisted.append(scored)
-    if collect_metrics:
+        m.record("blocks", **m.block_stats(core.census, cfg.block_cap,
+                                           cfg.skip_block_threshold))
         # score_pairs emits jw_evaluated itself (ADVICE r3: the band
-        # predicate lives in ONE place — reconstructing it here drifted
-        # from scoring.py on exact-hash-equal pairs)
-        jw_evald = F.col("jw_evaluated")
-        stats = scored.agg(
+        # predicate lives in ONE place)
+        stats = core.scored.agg(
             F.count("*").alias("n"),
             F.sum(F.col("name_sim").isNotNull().cast("long")).alias("survivors"),
-            F.sum(jw_evald.cast("long")).alias("jw_pairs"),
+            F.sum(F.col("jw_evaluated").cast("long")).alias("jw_pairs"),
         ).collect()[0]
         n_pairs = int(stats["n"])
         survivors = int(stats["survivors"] or 0)
@@ -208,35 +259,12 @@ def resolve(
             # reached the Python Jaro-Winkler kernel
             jw_pairs=jw_pairs,
             jw_pair_frac=round(jw_pairs / n_pairs, 4) if n_pairs else 0.0,
-            **m.partition_sizes(scored),
+            **m.partition_sizes(core.scored),
         )
+        m.record("clusters", **core.clusters.agg(
+            F.count("*").alias("n_rows"),
+            F.countDistinct("cluster_id").alias("n_clusters"),
+        ).first().asDict())
 
-    # ---- edges + connected components -----------------------------------
-    near_edges = matched_edges(scored, cfg)
-    # No distinct (round 6): the union is distinct BY CONSTRUCTION — pairs
-    # are deduped by candidate_pairs' (id_l,id_r) groupBy and score_pairs
-    # emits each exactly once; exact edges are one (rep -> row) per row_id;
-    # the two sets cannot overlap (non-reps never enter candidate pairs).
-    # Dropping the insurance shuffle saves a full pass over the edge set.
-    edges = store.get_or_compute(
-        "edges", lambda: near_edges.unionByName(exact_edges),
-        fingerprint=fp,
-    )
-
-    def compute_clusters() -> DataFrame:
-        def on_iter(it: int, n_edges: int):
-            if collect_metrics:
-                m.record(f"cc_iter_{it}", n_edges=n_edges)
-        # edges were already distinct-ed above — skip CC's initial dedup
-        return connected_components(
-            edges, all_ids=keyed.select("row_id"), on_iteration=on_iter,
-            assume_distinct=True,
-        )
-
-    clusters = store.get_or_compute("clusters", compute_clusters, fingerprint=fp)
-    if collect_metrics:
-        m.record("clusters", n_rows=clusters.count(),
-                 n_clusters=clusters.select("cluster_id").distinct().count())
-
-    return ERResult(clusters=clusters, scored_pairs=scored, keyed=keyed_full,
-                    metrics=m, _persisted=persisted)
+    return ERResult(clusters=core.clusters, scored_pairs=core.scored,
+                    keyed=keyed_full, metrics=m, _persisted=persisted)

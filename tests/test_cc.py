@@ -127,3 +127,22 @@ def test_driver_fast_path_numeric_ids(spark):
     got = {r["row_id"]: r["cluster_id"]
            for r in connected_components(e).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+
+
+def test_null_endpoint_never_joins_components(spark):
+    """A null endpoint must not alias to another node on the driver
+    union-find path: labels equal the star loop's (driver_max_edges=0).
+    assume_distinct=True skips the (src != dst) filter that would
+    otherwise drop null-endpoint edges before either path sees them."""
+    edges = [("a", "b"), ("c", None), (None, "d"), ("d", "e")]
+    e = spark.createDataFrame(edges, "src string, dst string")
+    id_df = spark.createDataFrame([(i,) for i in "abcdef"], ["row_id"])
+    fast = {r["row_id"]: r["cluster_id"]
+            for r in connected_components(
+                e, all_ids=id_df, assume_distinct=True).collect()}
+    loop = {r["row_id"]: r["cluster_id"]
+            for r in connected_components(
+                e, all_ids=id_df, assume_distinct=True,
+                driver_max_edges=0).collect()}
+    assert fast == loop == {"a": "a", "b": "a", "c": "c", "d": "d",
+                            "e": "d", "f": "f"}

@@ -112,6 +112,9 @@ def test_contract_version_invalidates_old_checkpoints(spark, tmp_path):
         r_old = resolve(df, cfg, id_col="row_id", checkpoint_dir=ckpt,
                         collect_metrics=False)
         old = sorted((r["row_id"], r["cluster_id"]) for r in r_old.clusters.collect())
+    # the stage written under the old contract is stale under the current one
+    assert not pl.CheckpointStore(ckpt, spark).is_complete(
+        "blocks", fingerprint=pl._fingerprint(cfg, df, "row_id"))
 
     # current contract: every stage marker is stale -> full recompute, and
     # the new-schema column is present end to end

@@ -64,6 +64,8 @@ def test_incremental_pair_volume_is_new_involving(spark, fixture):
     assert s2.n_pairs_scored < batch_pairs * 0.6, (
         f"increment scored {s2.n_pairs_scored} vs batch {batch_pairs}"
     )
+    # batch and fold run the same core: one fold of every row == batch
+    assert resolve_increment(df, None, CFG, id_col="row_id").n_pairs_scored == batch_pairs
 
 
 def test_pinned_suppression_equals_batch(spark, fixture):

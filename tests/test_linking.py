@@ -61,6 +61,16 @@ def test_link_mentions_end_to_end(spark):
     assert hits == len(labeled)
 
 
+def test_link_mentions_without_labels(spark):
+    """Unlabelled mentions (no gold label_document_id column) link the
+    same way; the output simply has no label column."""
+    m, e = _dfs(spark)
+    got = link_mentions(m.drop("label_document_id"), e)
+    assert "label_document_id" not in got.columns
+    want = {r["mention_id"]: r["entity_id"] for r in link_mentions(m, e).collect()}
+    assert {r["mention_id"]: r["entity_id"] for r in got.collect()} == want
+
+
 def test_rank_candidates_deterministic_order(spark):
     m, e = _dfs(spark)
     ranked = rank_candidates(candidate_channels(m, e), top_k=5)

@@ -171,8 +171,7 @@ def oov_rate(docs: DataFrame, vocab: DataFrame, id_col: str = "doc_id",
     Plan: one explode + a BROADCAST left join against the vocab (vocabs
     are dimension-sized by construction — `vocabulary(top_k=...)`), one
     map-side-combined per-doc agg. oov_rate is a single division of two
-    exact longs, so it compares bit-equal across engines (the
-    quality_scores convention)."""
+    exact longs, so it compares bit-equal across engines."""
     toks = docs.select(
         F.col(id_col), F.explode_outer(tokenize(text_col)).alias("tok")
     )

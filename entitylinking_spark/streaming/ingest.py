@@ -151,125 +151,6 @@ def stream_resolve(
     return writer.start(), holder
 
 
-def stream_curate(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    schema: str,
-    benchmark: DataFrame | None = None,
-    config=None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    state_holder: dict | None = None,
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
-):
-    """Streaming curation: the plans/curation funnel over arriving docs.
-
-    Every stage of `curate` except exact dedup is a stateless expression,
-    so it runs per micro-batch unchanged. Dedup needs cross-batch memory:
-    each batch is annotated by the usual within-batch min-id sha window,
-    then OR-ed with membership in an accumulating seen-sha table (the
-    sha of the SCRUBBED text, same as batch curate dedups on). Both
-    sinks are PARTITIONED by `_batch_id` and written with dynamic
-    partition overwrite, so an at-least-once replay of a crashed fold
-    overwrites its own partition instead of double-appending — restart
-    is idempotent with no driver-memory state needed; the seen-table
-    read excludes the current batch's partition (self-matches would
-    wrongly flag a replayed batch as duplicate of itself).
-
-    Determinism contract: with batches arriving in `id_col` order (the
-    append-only ingest case), the drained output equals batch
-    `curate` over the full corpus EXACTLY — the first-seen sha keeper is
-    then also the min-id keeper (tests/test_streaming.py proves it).
-    Out-of-order arrival keeps first-SEEN-wins semantics instead: same
-    keep-count, possibly different representative rows.
-
-    Returns (query, holder); holder["n_batches"] counts folded batches.
-    Curated rows land under `{output_dir}/curated` (one verdict row per
-    doc, append-only); seen shas under `{output_dir}/_seen_sha`.
-
-    The optional model-classifier stage (config.model_n_buckets) is
-    stateless and streams unchanged; config.domain_cap is REJECTED here —
-    a global rank applied per micro-batch would multiply the cap by the
-    batch count (run caps as a batch pass over the drained output).
-    """
-    import os
-
-    from entitylinking_spark.plans.curation import curate
-
-    if config is not None and getattr(config, "domain_cap", None) is not None:
-        raise ValueError(
-            "domain_cap is a GLOBAL rank over the corpus; applied per "
-            "micro-batch it would keep cap docs per domain PER BATCH. "
-            "Run cap_per_domain as a batch pass over the drained curated "
-            "table instead (the model-classifier stage is stateless and "
-            "streams fine)."
-        )
-    holder = state_holder if state_holder is not None else {}
-    out_dir = os.path.join(output_dir, "curated")
-    seen_dir = os.path.join(output_dir, "_seen_sha")
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(input_dir)
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        bid = int(batch_id)
-        ann = curate(batch_df, benchmark, config,
-                     id_col=id_col, text_col=text_col)
-        sha = F.sha2(F.col("text").cast("string"), 256)
-        keyed = ann.withColumn("_sha", sha)
-        if os.path.isdir(seen_dir):
-            # decontam-style probe: broadcast THIS batch's shas (small by
-            # definition) and semi-join them into the seen-table scan —
-            # one map-side pass over the accumulated shas, zero shuffle
-            # of the big side, hit list bounded by the batch. (The scan
-            # itself is O(total shas) per batch; a Bloom-filter sidecar
-            # or a bucketed seen table is the upgrade path when that
-            # read dominates.)
-            batch_shas = keyed.select("_sha").distinct()
-            hits = (
-                spark.read.parquet(seen_dir)
-                # exclude own partition: a crashed attempt's leftovers
-                # must not flag the replayed batch as its own duplicate
-                .filter(F.col("_batch_id") != bid)
-                .join(F.broadcast(batch_shas), "_sha", "leftsemi")
-                .select("_sha").distinct().withColumn("_seen", F.lit(True))
-            )
-            keyed = keyed.join(F.broadcast(hits), "_sha", "left").withColumn(
-                "is_duplicate",
-                F.col("is_duplicate") | F.coalesce(F.col("_seen"), F.lit(False)),
-            ).drop("_seen")
-        keyed = keyed.withColumn(
-            "keep", F.col("keep") & ~F.col("is_duplicate")
-        ).withColumn("_batch_id", F.lit(bid)).persist()
-        for path, frame in (
-            (out_dir, keyed.drop("_sha")),
-            (seen_dir, keyed.select("_sha", "_batch_id").distinct()),
-        ):
-            (
-                frame.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(path)
-            )
-        keyed.unpersist()
-        holder["n_batches"] = holder.get("n_batches", 0) + 1
-        holder["last_batch_id"] = bid
-
-    writer = src.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), holder
-
-
 def stream_corpus_monitor(
     events: DataFrame,
     window: str = "1 hour",

@@ -1,6 +1,5 @@
 """Round-3 ADVICE fixes: jw_evaluated contract, visible coarse-gate clamp,
-fingerprint charset validation, malformed-WAV errors (the WAV case lives in
-test_media_decoders.py)."""
+fingerprint charset validation."""
 
 import dataclasses
 

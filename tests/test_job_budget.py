@@ -17,7 +17,7 @@ from entitylinking_spark.synthdata import generate_repo_files
 CFG = ERConfig(suppress_shingle_df=None)
 
 MAX_JOBS_RESOLVE = 33
-MAX_JOBS_FIRST_FOLD = 35
+MAX_JOBS_FIRST_FOLD = 32
 MAX_JOBS_LATER_FOLD = 33
 
 

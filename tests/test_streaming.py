@@ -99,76 +99,6 @@ def test_stream_resolve_restart_resumes_from_store(spark, tmp_path):
     assert inc == batch
 
 
-def test_stream_curate_equals_batch(spark, tmp_path):
-    """Streaming curation (stream_curate): with batches arriving in id
-    order, the drained per-doc verdicts equal batch curate over the full
-    corpus — including cross-batch exact dedup via the seen-sha table."""
-    from entitylinking_spark.plans.curation import CurationConfig, curate
-    from entitylinking_spark.streaming.ingest import stream_curate
-
-    rows = []
-    for i in range(90):
-        if i in (40, 70):       # duplicates of doc 5, in later batches
-            text = "the shared boilerplate body of document five " * 3
-        elif i == 17:           # within-batch duplicate of doc 16
-            text = "the common text of sixteen and seventeen " * 3
-        elif i == 16:
-            text = "the common text of sixteen and seventeen " * 3
-        elif i == 5:
-            text = "the shared boilerplate body of document five " * 3
-        else:
-            text = f"this is the body of document {i} " * (3 + i % 5)
-        rows.append((i, text))
-    import pandas as pd
-
-    pdf = pd.DataFrame(rows, columns=["doc_id", "text"])
-    src = str(tmp_path / "in")
-    for chunk in (pdf.iloc[:30], pdf.iloc[30:60], pdf.iloc[60:]):
-        spark.createDataFrame(chunk).coalesce(1).write.mode("append").parquet(src)
-
-    bench = spark.createDataFrame(
-        [(0, "the body of document 3")], ["bench_id", "text"]
-    )
-    cfg = CurationConfig(min_quality=0.0, decontam_n=5)
-    q, holder = stream_curate(
-        spark, src, str(tmp_path / "out"), str(tmp_path / "ckpt"),
-        schema="doc_id long, text string", benchmark=bench, config=cfg,
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination(300)
-    assert holder["n_batches"] >= 2
-
-    cols = ["doc_id", "lang", "quality", "is_duplicate", "contaminated",
-            "split", "keep"]
-    got = sorted(
-        map(tuple, spark.read.parquet(str(tmp_path / "out" / "curated"))
-            .select(*cols).collect())
-    )
-    expect = sorted(
-        map(tuple, curate(spark.createDataFrame(pdf), bench, cfg)
-            .select(*cols).collect())
-    )
-    assert got == expect
-    flags = {r[0]: r[3] for r in got}
-    assert flags[5] is False and flags[40] and flags[70]  # cross-batch dedup
-    assert flags[16] is False and flags[17]               # within-batch
-    cont = {r[0]: r[4] for r in got}
-    assert cont[3]                                        # planted leak
-
-
-def test_stream_curate_rejects_domain_cap(spark, tmp_path):
-    from entitylinking_spark.plans.curation import CurationConfig
-    from entitylinking_spark.streaming.ingest import stream_curate
-
-    import pytest as _pt
-    with _pt.raises(ValueError, match="domain_cap"):
-        stream_curate(
-            spark, str(tmp_path / "in"), str(tmp_path / "out"),
-            str(tmp_path / "ckpt"), "doc_id long, text string",
-            config=CurationConfig(domain_cap=5),
-        )
-
-
 def test_corpus_monitor_watermark_drops_late_events(spark, tmp_path):
     """Windowed per-lang counts with watermarking: once the watermark has
     CLOSED a window (emitted + state evicted at the end of the batch

@@ -95,14 +95,6 @@ def main():
 
     builders["bpe_train"] = bpe_train
 
-    def lm_score():
-        from entitylinking_spark.operators.lm import ngram_lm_fit, ngram_lm_score
-
-        lm = ngram_lm_fit(docs.filter(F.col("doc_id") % 2 == 0), n=3)
-        return ngram_lm_score(docs.filter(F.col("doc_id") % 2 == 1), lm)
-
-    builders["lm_score"] = lm_score
-
     def vocab_pmi():
         from entitylinking_spark.operators.vocab import bigram_pmi
 
@@ -116,78 +108,6 @@ def main():
         return dedup_minhash_lsh(docs, threshold=0.7)
 
     builders["dedup_minhash"] = dedup_minhash
-
-    def dup_audit():
-        from entitylinking_spark.operators.mixing import duplicated_ngram_stats
-
-        return duplicated_ngram_stats(docs, n=5)
-
-    builders["dup_audit"] = dup_audit
-
-    def gopher():
-        from entitylinking_spark.operators.cleaning import gopher_rules
-
-        return gopher_rules(docs)
-
-    builders["gopher"] = gopher
-
-    def curate():
-        from entitylinking_spark.plans.curation import CurationConfig, curate as cur
-
-        bench = docs.filter(F.col("doc_id") % 37 == 0).select(
-            F.col("doc_id").alias("bench_id"),
-            F.substring("text", 1, 200).alias("text"),
-        )
-        return cur(docs, bench, CurationConfig(decontam_n=5))
-
-    builders["curate"] = curate
-
-    def decontam():
-        from entitylinking_spark.operators.decontam import decontaminate
-
-        bench = docs.filter(F.col("doc_id") % 37 == 0).select(
-            F.col("doc_id").alias("bench_id"),
-            F.substring("text", 1, 200).alias("text"),
-        )
-        return decontaminate(docs, bench, n=5)
-
-    builders["decontam"] = decontam
-
-    def dup_spans():
-        from entitylinking_spark.operators.cleaning import duplicate_spans
-
-        return duplicate_spans(docs, n=5)
-
-    builders["dup_spans"] = dup_spans
-
-    def line_dedup():
-        from entitylinking_spark.operators.cleaning import remove_duplicated_lines
-
-        return remove_duplicated_lines(docs, min_docs=3)
-
-    builders["line_dedup"] = line_dedup
-
-    def quality_cls():
-        from entitylinking_spark.operators.classify import (
-            hashed_weights, score_documents,
-        )
-
-        w = hashed_weights(spark, 4096)
-        return score_documents(docs, w, 4096)
-
-    builders["quality_cls"] = quality_cls
-
-    def assemble():
-        from entitylinking_spark.operators.mixing import (
-            pack_sequences, stratified_sample,
-        )
-
-        sampled = stratified_sample(docs, strata_col="lang",
-                                    fractions={"en": 1.0, "de": 0.5},
-                                    default_fraction=0.25)
-        return pack_sequences(sampled, budget=2048, n_shards=8)
-
-    builders["assemble"] = assemble
 
     for name, build in builders.items():
         if only and name not in only:

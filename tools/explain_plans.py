@@ -54,42 +54,13 @@ def main():
         F.col("l_shipdate") > "1995-01-01"
     ).select("l_orderkey", "l_quantity")
 
-    # round-5 curation/analytics representatives: one Arrow gram pass +
-    # shared doc-window exchange (spans), broadcast weight dim + single
-    # agg exchange (classifier), bucketed two-level top-K (caps)
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    from entitylinking_spark.operators.classify import (
-        hashed_weights, score_documents,
-    )
-    from entitylinking_spark.operators.cleaning import duplicate_spans
-    from entitylinking_spark.operators.mixing import cap_per_domain
-
-    sections["DUP_SPANS"] = duplicate_spans(docs, n=5)
-    sections["QUALITY_CLS"] = score_documents(
-        docs, hashed_weights(spark, 256), 256)
-    sections["DOMAIN_CAPS"] = cap_per_domain(docs, cap=30)
-
-    # seventh-sweep representatives: single-codegen-scan HTML chain,
-    # broadcast LM count joins, vocab-sized BPE pair counting
+    # vocab-sized BPE pair counting
     from entitylinking_spark.operators.bpe import _pair_counts, word_counts
-    from entitylinking_spark.operators.cleaning import (
-        filter_blocked_domains, html_to_text,
-    )
-    from entitylinking_spark.operators.lm import ngram_lm_fit, ngram_lm_score
 
-    sections["HTML_TO_TEXT"] = html_to_text(docs)
-    lm = ngram_lm_fit(docs.filter(F.col("doc_id") % 2 == 0), n=3)
-    sections["LM_SCORE"] = ngram_lm_score(
-        docs.filter(F.col("doc_id") % 2 == 1), lm)
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
     sections["BPE_PAIRS"] = _pair_counts(
         word_counts(docs).select(
             "word", "n", F.split("word", "(?!$)").alias("syms")))
-    urls = docs.select(
-        "doc_id",
-        F.concat(F.lit("https://h"), (F.col("doc_id") % 20).cast("string"),
-                 F.lit(".example.com/x")).alias("url"))
-    bl = spark.createDataFrame([("example.com",)], "domain string")
-    sections["URL_BLOCKLIST"] = filter_blocked_domains(urls, bl)
 
     for name, d in sections.items():
         print(f"\n{'='*20} {name} {'='*20}")

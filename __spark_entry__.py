@@ -2,8 +2,8 @@
 
 entry(spark)   — flagship ER pipeline over sf0.001 (repo_files shaped from
                  the documents table) -> cluster assignments.
-queries()      — one entry per implemented operator family from SURVEY.md §2,
-                 each (spark, sf_dir) -> DataFrame.
+queries()      — one entry per implemented operator family from SURVEY.md §2
+                 (+ the training-data ops), each (spark, sf_dir) -> DataFrame.
 oracle_sql()   — DuckDB-equivalent SQL for every SQL-expressible query.
 
 Value-parity rules used throughout (Spark vs DuckDB must hash-match):
@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -63,7 +64,7 @@ def _duck_round(col, digits: int):
     half (e.g. a per-doc ratio c/n with n divisible by 5): the binary
     double sits a hair off the half, BigDecimal honors that side, while
     the FP product rounds back ONTO the half and std::round takes it away
-    from zero. Two per-doc ratio queries went driver-red on exactly this
+    from zero. doc_repetition/dup_lines went driver-red on exactly this
     class in round 5 (rows+schema green, hash red, bit-exact locally).
 
     Emulation measured 0/8111 disagreements vs DuckDB 1.0.0 ROUND on a
@@ -603,6 +604,30 @@ FROM embeddings ORDER BY row_id
 """
 
 
+def lang_id_stopword(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Language-ID heuristic label (string output only — no float compare)."""
+    from entitylinking_spark.operators.textstats import detect_language
+
+    d = _t(spark, sf_dir, "documents")
+    return d.select("doc_id", detect_language("text").alias("detected")).orderBy("doc_id")
+
+
+_SW = "'the','of','and','to','in','a','is','that','it','for','on','as','with','was','be','by','are','this','have','from','or','an','at','not','but','had','his','they','you','which','one','all','were','her','she','there'"
+
+LANG_ID_SQL = f"""
+SELECT doc_id,
+       CASE WHEN len(list_intersect(list_distinct(list_filter(
+                    regexp_split_to_array(lower(text), '[^a-z0-9_]+'), t -> t <> '')),
+                  [{_SW}]))
+                 >= 0.08 * len(list_distinct(list_filter(
+                    regexp_split_to_array(lower(text), '[^a-z0-9_]+'), t -> t <> '')))
+            AND len(list_distinct(list_filter(
+                    regexp_split_to_array(lower(text), '[^a-z0-9_]+'), t -> t <> ''))) > 0
+            THEN 'en' ELSE 'other' END AS detected
+FROM documents ORDER BY doc_id
+"""
+
+
 # 60-bit md5-derived hash of a token/gram string (functions/relhash.md5_hash60)
 _H60_SQL = (
     "list_sum(list_transform(range(15), i -> "
@@ -611,8 +636,660 @@ _H60_SQL = (
 )
 
 
+def doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LLM-pipeline quality scoring (textstats.quality_score): blended
+    length / stopword / punctuation heuristic, recomputed exactly by
+    DuckDB (token parity proven by x6; stopword parity by lang_id)."""
+    from entitylinking_spark.operators.textstats import quality_score
+
+    d = _t(spark, sf_dir, "documents")
+    return d.select(
+        "doc_id", _duck_round(quality_score("text"), 4).alias("quality_r")
+    ).orderBy("doc_id")
+
+
 _TOKS_SQL = ("list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), "
              "t -> t <> '')")
+
+DOC_QUALITY_SQL = f"""
+WITH t AS (
+  SELECT doc_id,
+         len({_TOKS_SQL}) AS ntok,
+         len(list_distinct({_TOKS_SQL})) AS ndis,
+         len(list_intersect(list_distinct({_TOKS_SQL}), [{_SW}])) AS hits,
+         length(text) AS nchar,
+         length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) AS npunct
+  FROM documents
+)
+SELECT doc_id,
+       ROUND(
+         0.4 * least(CAST(ntok AS DOUBLE) / 200.0, 1.0)
+       + 0.3 * least((CASE WHEN ndis = 0 THEN 0.0
+                           ELSE CAST(hits AS DOUBLE) / ndis END) / 0.3, 1.0)
+       + 0.3 * (1.0 - greatest((CASE WHEN nchar = 0 THEN 0.0
+                                     ELSE CAST(npunct AS DOUBLE) / nchar END)
+                               - 0.15, 0.0) / 0.85)
+       , 4) AS quality_r
+FROM t ORDER BY doc_id
+"""
+
+
+def doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LLM-pipeline Gopher-style repetition signals (textstats.
+    repetition_stats, Rae et al. 2021 Table A1 token variant): per-doc
+    top-bigram and duplicate-bigram occurrence fractions. Fractions are
+    one IEEE double division of two exact integers in both engines, so
+    4-dp rounding is deterministic."""
+    from entitylinking_spark.operators.textstats import repetition_stats
+
+    d = _t(spark, sf_dir, "documents")
+    out = repetition_stats(d, n=2)
+    return out.select(
+        "doc_id",
+        F.col("n_grams").cast("long").alias("n_grams"),
+        F.col("top_gram_count").cast("long").alias("top_gram_count"),
+        _duck_round(F.col("top_gram_frac"), 4).alias("top_gram_frac_r"),
+        _duck_round(F.col("dup_gram_frac"), 4).alias("dup_gram_frac_r"),
+    ).orderBy("doc_id")
+
+
+DOC_REPETITION_SQL = f"""
+WITH toks AS (SELECT doc_id, {_TOKS_SQL} AS t FROM documents),
+bg AS (
+  SELECT doc_id,
+         unnest(list_transform(generate_series(1, len(t) - 1),
+                               i -> t[i] || ' ' || t[i + 1])) AS gram
+  FROM toks
+),
+per_gram AS (SELECT doc_id, gram, count(*) AS c FROM bg GROUP BY 1, 2),
+per_doc AS (
+  SELECT doc_id, sum(c) AS n_grams, max(c) AS top_gram_count,
+         CAST(max(c) AS DOUBLE) / sum(c) AS topf,
+         CAST(sum(c) - count(*) AS DOUBLE) / sum(c) AS dupf
+  FROM per_gram GROUP BY 1
+)
+SELECT d.doc_id,
+       COALESCE(p.n_grams, 0) AS n_grams,
+       COALESCE(p.top_gram_count, 0) AS top_gram_count,
+       ROUND(COALESCE(p.topf, 0.0), 4) AS top_gram_frac_r,
+       ROUND(COALESCE(p.dupf, 0.0), 4) AS dup_gram_frac_r
+FROM documents d LEFT JOIN per_doc p ON d.doc_id = p.doc_id
+ORDER BY d.doc_id
+"""
+
+
+def dup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LLM-pipeline duplicate-line stats (textstats.duplicate_line_stats):
+    the documents table is reshaped into 3 lines per doc (the first 40
+    chars repeated twice + the next 40), so every doc has a known
+    duplicate line and the char-weighted fraction is exercised."""
+    from entitylinking_spark.operators.textstats import duplicate_line_stats
+
+    d = _t(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.concat_ws(
+            "\n",
+            F.substring("text", 1, 40),
+            F.substring("text", 1, 40),
+            F.substring("text", 41, 40),
+        ).alias("text"),
+    )
+    out = duplicate_line_stats(d)
+    return out.select(
+        "doc_id",
+        F.col("n_lines").cast("long").alias("n_lines"),
+        _duck_round(F.col("dup_line_frac"), 4).alias("dup_line_frac_r"),
+        _duck_round(F.col("dup_line_char_frac"), 4).alias("dup_line_char_frac_r"),
+    ).orderBy("doc_id")
+
+
+DUP_LINES_SQL = """
+WITH d AS (
+  SELECT doc_id,
+         substr(text, 1, 40) || chr(10) || substr(text, 1, 40)
+         || chr(10) || substr(text, 41, 40) AS text
+  FROM documents
+),
+ln AS (
+  SELECT doc_id, unnest(string_split(text, chr(10))) AS line FROM d
+),
+nz AS (SELECT doc_id, line FROM ln WHERE trim(line) <> ''),
+per_line AS (SELECT doc_id, line, count(*) AS c FROM nz GROUP BY 1, 2),
+per_doc AS (
+  SELECT doc_id, sum(c) AS n_lines,
+         CAST(sum(c) - count(*) AS DOUBLE) / sum(c) AS dupf,
+         CAST(sum((c - 1) * length(line)) AS DOUBLE)
+           / sum(c * length(line)) AS dupcf
+  FROM per_line GROUP BY 1
+)
+SELECT d.doc_id,
+       COALESCE(p.n_lines, 0) AS n_lines,
+       ROUND(COALESCE(p.dupf, 0.0), 4) AS dup_line_frac_r,
+       ROUND(COALESCE(p.dupcf, 0.0), 4) AS dup_line_char_frac_r
+FROM d LEFT JOIN per_doc p ON d.doc_id = p.doc_id
+ORDER BY d.doc_id
+"""
+
+
+def decontam_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LLM-pipeline benchmark decontamination (decontam.decontaminate,
+    GPT-3 Appendix C n-gram collision rule at n=5): the benchmark is the
+    first 200 chars of every 37th document, so contamination is planted by
+    construction and the flag is value-checked. Spark matches gram
+    xxhash64 values; DuckDB matches the gram STRINGS — identical results
+    absent a 64-bit collision (none at this scale)."""
+    from entitylinking_spark.operators.decontam import decontaminate
+
+    d = _t(spark, sf_dir, "documents")
+    bench = d.filter(F.col("doc_id") % 37 == 0).select(
+        F.col("doc_id").alias("bench_id"),
+        F.substring("text", 1, 200).alias("text"),
+    )
+    return decontaminate(d, bench, n=5).orderBy("doc_id")
+
+
+# 5-gram list over the shared tokenizer; empty when < 5 tokens
+# (generate_series(1, n) is empty for n < 1, matching ngram_tokens)
+_G5_SQL = ("list_transform(generate_series(1, len({t}) - 4), "
+           "i -> array_to_string({t}[i:i+4], ' '))")
+
+DECONTAM_SQL = f"""
+WITH bt AS (
+  SELECT {_TOKS_SQL.replace('text', 'substr(text, 1, 200)')} AS t
+  FROM documents WHERE doc_id % 37 = 0
+),
+bg AS (SELECT DISTINCT unnest({_G5_SQL.format(t='t')}) AS gram FROM bt),
+dt AS (SELECT doc_id, {_TOKS_SQL} AS t FROM documents),
+dg AS (
+  SELECT DISTINCT doc_id, gram FROM (
+    SELECT doc_id, unnest({_G5_SQL.format(t='t')}) AS gram FROM dt
+  )
+),
+hits AS (
+  SELECT doc_id, count(*) AS bench_hits
+  FROM dg JOIN bg USING (gram) GROUP BY 1
+)
+SELECT d.doc_id,
+       COALESCE(h.bench_hits, 0) AS bench_hits,
+       COALESCE(h.bench_hits, 0) >= 1 AS contaminated
+FROM documents d LEFT JOIN hits h ON d.doc_id = h.doc_id
+ORDER BY d.doc_id
+"""
+
+
+def split_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LLM-pipeline deterministic split assignment (decontam.split_assign):
+    seeded md5-bucket train/val/test bands. Weights are binary-exact
+    (0.75/0.125/0.125) so the cumulative thresholds are the same doubles
+    in both engines; the bucket is an exact power-of-two division of the
+    60-bit md5 hash (relhash.md5_hash60 twin)."""
+    from entitylinking_spark.operators.decontam import split_assign
+
+    d = _t(spark, sf_dir, "documents")
+    return split_assign(
+        d, weights={"train": 0.75, "val": 0.125, "test": 0.125}, seed="v1"
+    ).orderBy("doc_id")
+
+
+SPLIT_DOCS_SQL = f"""
+WITH b AS (
+  SELECT doc_id,
+         CAST({_H60_SQL.format(x="'v1:' || CAST(doc_id AS VARCHAR)")} AS DOUBLE)
+           / 1152921504606846976.0 AS bucket
+  FROM documents
+)
+SELECT doc_id,
+       CASE WHEN bucket < 0.75 THEN 'train'
+            WHEN bucket < 0.875 THEN 'val'
+            ELSE 'test' END AS split
+FROM b ORDER BY doc_id
+"""
+
+
+def mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Dataset-assembly temperature mixing (mixing.domain_mix_weights,
+    alpha=0.3): per-source sampling weights w_d = n_d^a / sum n^a and the
+    oversample factor vs natural share. Both engines evaluate the same
+    pow/sum doubles; outputs rounded to 6."""
+    from entitylinking_spark.operators.mixing import domain_mix_weights
+
+    d = _t(spark, sf_dir, "documents")
+    out = domain_mix_weights(d, domain_col="source", alpha=0.3)
+    return out.select(
+        "domain", "n_docs", "size",
+        _duck_round(F.col("weight"), 6).alias("weight_r"),
+        _duck_round(F.col("oversample"), 6).alias("oversample_r"),
+    ).orderBy("domain")
+
+
+MIX_WEIGHTS_SQL = """
+WITH d AS (
+  SELECT source AS domain, count(*) AS n_docs,
+         CAST(count(*) AS DOUBLE) AS size
+  FROM documents GROUP BY 1
+),
+t AS (SELECT sum(pow(size, 0.3)) AS tp, sum(size) AS ts FROM d)
+SELECT domain, n_docs, size,
+       ROUND(pow(size, 0.3) / tp, 6) AS weight_r,
+       ROUND((pow(size, 0.3) / tp) / (size / ts), 6) AS oversample_r
+FROM d, t ORDER BY domain
+"""
+
+
+def sample_strata(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic stratified sampling (mixing.stratified_sample): keep
+    iff the seeded 60-bit md5 band falls under the stratum's rate — the
+    same exact-double band construction split_docs proves, per-stratum.
+    Map-side only; zero shuffle; stable under appends."""
+    from entitylinking_spark.operators.mixing import stratified_sample
+
+    d = _t(spark, sf_dir, "documents")
+    out = stratified_sample(
+        d, strata_col="lang",
+        fractions={"en": 1.0, "de": 0.5, "zh": 0.25},
+        default_fraction=0.1, seed="s1",
+    )
+    return out.select("doc_id", "lang", "source").orderBy("doc_id")
+
+
+SAMPLE_STRATA_SQL = f"""
+SELECT doc_id, lang, source FROM documents
+WHERE CAST({_H60_SQL.format(x="'s1:' || CAST(doc_id AS VARCHAR)")} AS DOUBLE)
+        / 1152921504606846976.0
+      < CASE lang WHEN 'en' THEN 1.0 WHEN 'de' THEN 0.5
+                  WHEN 'zh' THEN 0.25 ELSE 0.1 END
+ORDER BY doc_id
+"""
+
+
+def pack_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Concat-and-chunk packing (mixing.pack_sequences): every doc's
+    (shard, window index, start offset, straddle flag) in 4 sharded
+    128-token streams. All-integer arithmetic (60-bit md5 order hash,
+    long cumsum window, integer div) — bit-exact across engines."""
+    from entitylinking_spark.operators.mixing import pack_sequences
+
+    d = _t(spark, sf_dir, "documents")
+    return pack_sequences(d, budget=128, n_shards=4, seed="p1").orderBy("doc_id")
+
+
+PACK_DOCS_SQL = f"""
+WITH s AS (
+  SELECT doc_id,
+         {_H60_SQL.format(x="'p1:' || CAST(doc_id AS VARCHAR)")} AS h,
+         len({_TOKS_SQL}) AS n_tokens
+  FROM documents
+),
+o AS (
+  SELECT doc_id, CAST(h % 4 AS INT) AS shard, n_tokens,
+         COALESCE(SUM(n_tokens) OVER (
+           PARTITION BY h % 4 ORDER BY h, doc_id
+           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
+  FROM s
+)
+SELECT doc_id, shard,
+       off // 128 AS pack_id,
+       off % 128 AS pack_pos,
+       n_tokens,
+       (n_tokens > 0 AND
+        (off + greatest(n_tokens, 1) - 1) // 128 <> off // 128) AS straddles
+FROM o ORDER BY doc_id
+"""
+
+
+def dup_ngram_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact cross-document duplication audit (mixing.duplicated_ngram_stats,
+    n=5, min_docs=2): per doc, the share of its distinct 5-grams appearing
+    in >= 2 docs. Spark counts gram xxhash64 values; DuckDB counts the
+    gram STRINGS — identical absent a 64-bit collision (none at sf0.01)."""
+    from entitylinking_spark.operators.mixing import duplicated_ngram_stats
+
+    d = _t(spark, sf_dir, "documents")
+    out = duplicated_ngram_stats(d, n=5, min_docs=2)
+    return out.select(
+        "doc_id", "n_grams", "n_dup_grams",
+        _duck_round(F.col("dup_fraction"), 6).alias("dup_fraction_r"),
+    ).orderBy("doc_id")
+
+
+DUP_NGRAM_SQL = f"""
+WITH dt AS (SELECT doc_id, {_TOKS_SQL} AS t FROM documents),
+dg AS (
+  SELECT DISTINCT doc_id, gram FROM (
+    SELECT doc_id, unnest({_G5_SQL.format(t='t')}) AS gram FROM dt
+  )
+),
+freq AS (SELECT gram FROM dg GROUP BY gram HAVING count(*) >= 2),
+per AS (
+  SELECT dg.doc_id, count(*) AS n_grams,
+         sum(CASE WHEN f.gram IS NOT NULL THEN 1 ELSE 0 END) AS n_dup
+  FROM dg LEFT JOIN freq f ON dg.gram = f.gram GROUP BY 1
+)
+SELECT d.doc_id,
+       COALESCE(p.n_grams, 0) AS n_grams,
+       COALESCE(p.n_dup, 0) AS n_dup_grams,
+       ROUND(CASE WHEN COALESCE(p.n_grams, 0) = 0 THEN 0.0
+                  ELSE CAST(p.n_dup AS DOUBLE) / p.n_grams END, 6)
+         AS dup_fraction_r
+FROM documents d LEFT JOIN per p ON d.doc_id = p.doc_id
+ORDER BY d.doc_id
+"""
+
+
+def c4_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """C4-style cross-document line dedup (cleaning.remove_duplicated_lines,
+    min_docs=3): a shared footer line planted on every 7th doc must be
+    dropped everywhere while unique lines and blank lines survive, each
+    doc's text rebuilt in original line order. Spark counts line
+    xxhash64 values; DuckDB counts the line STRINGS."""
+    from entitylinking_spark.operators.cleaning import remove_duplicated_lines
+
+    d = _t(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.when(F.col("doc_id") % 7 == 0,
+               F.concat(F.col("text"), F.lit("\nshared footer line")))
+        .otherwise(F.col("text")).alias("text"),
+    )
+    return remove_duplicated_lines(d, min_docs=3).orderBy("doc_id")
+
+
+C4_LINE_DEDUP_SQL = """
+WITH d AS (
+  SELECT doc_id,
+         CASE WHEN doc_id % 7 = 0 THEN text || chr(10) || 'shared footer line'
+              ELSE text END AS text
+  FROM documents
+),
+l AS (
+  SELECT doc_id,
+         unnest(string_split(text, chr(10))) AS line,
+         unnest(range(1, len(string_split(text, chr(10))) + 1)) AS pos
+  FROM d
+),
+fr AS (
+  SELECT line, count(DISTINCT doc_id) AS df
+  FROM l WHERE length(line) > 0 GROUP BY 1
+),
+fl AS (
+  SELECT l.doc_id, l.pos, l.line,
+         (length(l.line) > 0 AND COALESCE(f.df, 0) >= 3) AS dropped
+  FROM l LEFT JOIN fr f ON l.line = f.line
+)
+SELECT doc_id,
+       COALESCE(string_agg(CASE WHEN NOT dropped THEN line END,
+                           chr(10) ORDER BY pos), '') AS text_clean,
+       count(*) AS n_lines,
+       sum(CASE WHEN dropped THEN 1 ELSE 0 END) AS n_dropped
+FROM fl GROUP BY doc_id ORDER BY doc_id
+"""
+
+
+def gopher_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gopher §A1.1 quality gate (cleaning.gopher_rules): per-rule boolean
+    verdicts + the AND, every rule recomputed by DuckDB from the same
+    whitespace-word and line definitions."""
+    from entitylinking_spark.operators.cleaning import (
+        GopherConfig, gopher_rules,
+    )
+
+    # the synthetic corpus contains none of Gopher's stop set — plant it
+    # on every 3rd doc so the gate discriminates (both verdicts occur)
+    d = _t(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.when(F.col("doc_id") % 3 == 0,
+               F.concat(F.col("text"),
+                        F.lit(" the stock that we have to be of and with")))
+        .otherwise(F.col("text")).alias("text"),
+    )
+    return gopher_rules(d, GopherConfig(min_words=10)).orderBy("doc_id")
+
+
+_GW = "list_filter(regexp_split_to_array(text, '\\s+'), w -> w <> '')"
+_GL = "list_filter(string_split(text, chr(10)), l -> l <> '')"
+
+GOPHER_DOCS_SQL = f"""
+WITH d AS (
+  SELECT doc_id,
+         CASE WHEN doc_id % 3 = 0
+              THEN text || ' the stock that we have to be of and with'
+              ELSE text END AS text
+  FROM documents
+),
+t AS (
+  SELECT doc_id, text,
+         len({_GW}) AS n_words,
+         len({_GL}) AS n_lines,
+         CAST(list_sum(list_transform({_GW}, w -> length(w))) AS DOUBLE)
+           / greatest(len({_GW}), 1) AS mean_wl,
+         len(string_split(text, '#')) - 1
+           + len(string_split(text, '...')) - 1
+           + len(string_split(text, '…')) - 1 AS n_sym,
+         len(list_filter({_GL}, l -> regexp_matches(l, '^\\s*[-*•]')))
+           AS bullet_lines,
+         len(list_filter({_GL}, l -> regexp_matches(l, '(\\.\\.\\.|…)\\s*$')))
+           AS ellipsis_lines,
+         len(list_filter({_GW}, w -> regexp_matches(w, '[A-Za-z]')))
+           AS alpha_words,
+         CAST(regexp_matches(lower(text), '\\bthe\\b') AS INT)
+       + CAST(regexp_matches(lower(text), '\\bbe\\b') AS INT)
+       + CAST(regexp_matches(lower(text), '\\bto\\b') AS INT)
+       + CAST(regexp_matches(lower(text), '\\bof\\b') AS INT)
+       + CAST(regexp_matches(lower(text), '\\band\\b') AS INT)
+       + CAST(regexp_matches(lower(text), '\\bthat\\b') AS INT)
+       + CAST(regexp_matches(lower(text), '\\bhave\\b') AS INT)
+       + CAST(regexp_matches(lower(text), '\\bwith\\b') AS INT) AS stop_hits
+  FROM d
+)
+SELECT doc_id, n_words,
+       (n_words >= 10 AND n_words <= 100000) AS rule_word_count,
+       (mean_wl >= 3.0 AND mean_wl <= 10.0) AS rule_mean_word_len,
+       (n_sym <= 0.1 * greatest(n_words, 1)) AS rule_symbol_ratio,
+       (bullet_lines <= 0.9 * greatest(n_lines, 1)) AS rule_bullet_lines,
+       (ellipsis_lines <= 0.3 * greatest(n_lines, 1)) AS rule_ellipsis_lines,
+       (alpha_words >= 0.8 * greatest(n_words, 1)) AS rule_alpha_words,
+       (stop_hits >= 2) AS rule_stop_words,
+       ((n_words >= 10 AND n_words <= 100000)
+        AND (mean_wl >= 3.0 AND mean_wl <= 10.0)
+        AND (n_sym <= 0.1 * greatest(n_words, 1))
+        AND (bullet_lines <= 0.9 * greatest(n_lines, 1))
+        AND (ellipsis_lines <= 0.3 * greatest(n_lines, 1))
+        AND (alpha_words >= 0.8 * greatest(n_words, 1))
+        AND (stop_hits >= 2)) AS passes_gopher
+FROM t ORDER BY doc_id
+"""
+
+
+def dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact duplicate-substring spans (cleaning.duplicate_spans, n=5,
+    min_count=2 — Lee et al. 2022 ExactSubstr relational form): an 8-token
+    passage planted on every 5th doc must come back as a merged span
+    (4 dup grams, 8 covered tokens) wherever its context is unique; the
+    natural corpus duplication rides along. Spark counts gram xxhash64
+    values; DuckDB counts the gram STRINGS."""
+    from entitylinking_spark.operators.cleaning import duplicate_spans
+
+    d = _t(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.when(F.col("doc_id") % 5 == 0,
+               F.concat(F.col("text"), F.lit(_SPAN_PLANT)))
+        .otherwise(F.col("text")).alias("text"),
+    )
+    out = duplicate_spans(d, n=5, min_count=2)
+    # raw double (not ROUND): one division of exact longs is bit-equal in
+    # both engines; ROUND diverges on exact .5 ties (Spark HALF_UP vs
+    # DuckDB half-even)
+    return out.select(
+        "doc_id", "n_tokens", "n_grams", "n_dup_grams", "n_spans",
+        "covered_tokens", "max_span_tokens", "dup_token_frac",
+    ).orderBy("doc_id")
+
+
+_SPAN_PLANT = " alpha beta gamma delta epsilon zeta eta theta"
+
+# 5-gram strings with 0-based positions (matches Spark's posexplode)
+_G5_POS_SQL = _G5_SQL.format(t="t")
+
+DUP_SPANS_SQL = f"""
+WITH d AS (
+  SELECT doc_id,
+         CASE WHEN doc_id % 5 = 0 THEN text || '{_SPAN_PLANT}'
+              ELSE text END AS text
+  FROM documents
+),
+dt AS (SELECT doc_id, {_TOKS_SQL} AS t FROM d),
+g AS (
+  SELECT doc_id,
+         unnest({_G5_POS_SQL}) AS gram,
+         unnest(range(0, len({_G5_POS_SQL}))) AS pos
+  FROM dt
+),
+fr AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2),
+dup AS (SELECT g.doc_id, g.pos FROM g JOIN fr USING (gram)),
+brk AS (
+  SELECT doc_id, pos,
+         CASE WHEN lag(pos) OVER w IS NULL OR pos - lag(pos) OVER w > 5
+              THEN 1 ELSE 0 END AS b
+  FROM dup WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
+),
+grp AS (
+  SELECT doc_id, pos,
+         sum(b) OVER (PARTITION BY doc_id ORDER BY pos) AS gid
+  FROM brk
+),
+spans AS (
+  SELECT doc_id, gid, max(pos) - min(pos) + 5 AS toks, count(*) AS ng
+  FROM grp GROUP BY 1, 2
+),
+per AS (
+  SELECT doc_id, count(*) AS n_spans, sum(ng) AS n_dup,
+         sum(toks) AS covered, max(toks) AS mx
+  FROM spans GROUP BY 1
+)
+SELECT dt.doc_id,
+       len(t) AS n_tokens,
+       greatest(len(t) - 4, 0) AS n_grams,
+       COALESCE(per.n_dup, 0) AS n_dup_grams,
+       COALESCE(per.n_spans, 0) AS n_spans,
+       COALESCE(per.covered, 0) AS covered_tokens,
+       COALESCE(per.mx, 0) AS max_span_tokens,
+       (CASE WHEN len(t) > 0
+             THEN CAST(COALESCE(per.covered, 0) AS DOUBLE) / len(t)
+             ELSE 0.0 END) AS dup_token_frac
+FROM dt LEFT JOIN per USING (doc_id) ORDER BY doc_id
+"""
+
+
+def nfc_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Unicode NFC normalization (cleaning.normalize_unicode): decomposed
+    accent sequences planted on every 4th doc (e + U+0301, A + U+0308)
+    must compose; DuckDB recomputes with nfc_normalize (both engines
+    implement UAX #15)."""
+    from entitylinking_spark.operators.cleaning import normalize_unicode
+
+    d = _t(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.when(F.col("doc_id") % 4 == 0,
+               F.concat(F.col("text"),
+                        F.lit(" cafe\u0301 A\u0308B na\u00efve")))
+        .otherwise(F.col("text")).alias("text"),
+    )
+    return normalize_unicode(d, form="NFC").orderBy("doc_id")
+
+
+NFC_DOCS_SQL = """
+WITH d AS (
+  SELECT doc_id,
+         CASE WHEN doc_id % 4 = 0
+              THEN text || ' cafe' || chr(769) || ' A' || chr(776) ||
+                   'B na' || chr(239) || 've'
+              ELSE text END AS text
+  FROM documents
+)
+SELECT doc_id,
+       nfc_normalize(text) AS text_norm,
+       (nfc_normalize(text) <> text) AS changed
+FROM d ORDER BY doc_id
+"""
+
+
+def domain_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-domain document cap (mixing.cap_per_domain, cap=30 over the 5
+    `source` domains of ~100 docs each at sf0.01): the two-level top-K
+    must equal DuckDB's single global row_number() over (domain, seeded
+    md5 order) — keep flag AND exact rank for every kept doc."""
+    from entitylinking_spark.operators.mixing import cap_per_domain
+
+    d = _t(spark, sf_dir, "documents")
+    return cap_per_domain(d, cap=30, seed="c1", n_buckets=8).orderBy("doc_id")
+
+
+DOMAIN_CAPS_SQL = f"""
+WITH h AS (
+  SELECT doc_id, source AS domain,
+         {_H60_SQL.format(x="'c1:' || CAST(doc_id AS VARCHAR)")} AS hh
+  FROM documents
+),
+r AS (
+  SELECT doc_id, domain,
+         row_number() OVER (PARTITION BY domain ORDER BY hh, doc_id) AS rk
+  FROM h
+)
+SELECT doc_id, domain, rk <= 30 AS keep,
+       CASE WHEN rk <= 30 THEN rk ELSE -1 END AS rank_in_domain
+FROM r ORDER BY doc_id
+"""
+
+
+def snapshot_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus snapshot diff (cleaning.snapshot_diff): the 'new' snapshot
+    drops every 11th doc (removed), appends 20 fresh ids (added), and
+    edits every 13th doc's text (changed); everything else must report
+    unchanged, with both engines hashing the same sha256."""
+    from entitylinking_spark.operators.cleaning import snapshot_diff
+
+    d = _t(spark, sf_dir, "documents")
+    old = d.select("doc_id", "text")
+    new = (
+        d.filter(F.col("doc_id") % 11 != 0)
+        .select(
+            "doc_id",
+            F.when(F.col("doc_id") % 13 == 0,
+                   F.concat(F.col("text"), F.lit(" [edited]")))
+            .otherwise(F.col("text")).alias("text"),
+        )
+        .unionByName(
+            # orderBy before limit: a bare LIMIT is partition-order-
+            # dependent; the SQL twin also orders
+            d.orderBy("doc_id").limit(20).select(
+                (F.col("doc_id") + 1_000_000).alias("doc_id"),
+                F.lit("brand new doc").alias("text"),
+            )
+        )
+    )
+    return snapshot_diff(old, new).orderBy("doc_id")
+
+
+SNAPSHOT_DELTA_SQL = """
+WITH old AS (SELECT doc_id, sha256(text) AS s FROM documents),
+new AS (
+  SELECT doc_id,
+         sha256(CASE WHEN doc_id % 13 = 0 THEN text || ' [edited]'
+                     ELSE text END) AS s
+  FROM documents WHERE doc_id % 11 <> 0
+  UNION ALL
+  SELECT doc_id + 1000000, sha256('brand new doc')
+  FROM (SELECT doc_id FROM documents ORDER BY doc_id LIMIT 20)
+)
+SELECT COALESCE(old.doc_id, new.doc_id) AS doc_id,
+       CASE WHEN old.s IS NULL THEN 'added'
+            WHEN new.s IS NULL THEN 'removed'
+            WHEN old.s = new.s THEN 'unchanged'
+            ELSE 'changed' END AS status,
+       COALESCE(old.s, '') AS old_sha,
+       COALESCE(new.s, '') AS new_sha
+FROM old FULL OUTER JOIN new ON old.doc_id = new.doc_id
+ORDER BY doc_id
+"""
 
 
 def cluster_reps(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -644,6 +1321,48 @@ SELECT a.doc_id, a.cluster_id, r.rep_id,
        (a.doc_id = r.rep_id) AS is_rep
 FROM a JOIN r ON a.cluster_id = r.cluster_id AND r.rk = 1
 ORDER BY a.doc_id
+"""
+
+
+def budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Greedy data selection under a global token budget
+    (mixing.select_under_token_budget, budget=20000, bins=16,
+    max_boundary=50 so the histogram-quickselect recursion is exercised,
+    not just the final window): keep flags must equal DuckDB's
+    single-window cumulative sum over (quality DESC, doc_id). Quality is
+    the seeded md5 band (exact double division both sides); tokens are
+    the shared tokenizer count."""
+    from entitylinking_spark.operators.mixing import (
+        sample_hash, select_under_token_budget,
+    )
+    from entitylinking_spark.operators.textstats import tokenize
+
+    d = _t(spark, sf_dir, "documents").select(
+        "doc_id",
+        sample_hash("doc_id", "qb").alias("quality"),
+        F.size(tokenize("text")).cast("long").alias("n_tokens"),
+    )
+    out = select_under_token_budget(
+        d, 20_000, bins=16, max_boundary=50, max_rounds=8)
+    return out.select("doc_id", "quality", "tokens", "keep").orderBy("doc_id")
+
+
+BUDGET_SELECT_SQL = f"""
+WITH d AS (
+  SELECT doc_id,
+         CAST({_H60_SQL.format(x="'qb:' || CAST(doc_id AS VARCHAR)")}
+              AS DOUBLE) / 1152921504606846976 AS quality,
+         CAST(len({_TOKS_SQL}) AS BIGINT) AS tokens
+  FROM documents
+),
+r AS (
+  SELECT doc_id, quality, tokens,
+         sum(tokens) OVER (ORDER BY quality DESC, doc_id
+                           ROWS UNBOUNDED PRECEDING) AS cum
+  FROM d
+)
+SELECT doc_id, quality, tokens, (cum <= 20000) AS keep
+FROM r ORDER BY doc_id
 """
 
 
@@ -781,7 +1500,7 @@ FROM documents GROUP BY lang ORDER BY "group"
 
 
 def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-dup pairs: integer-SRP bucketed cosine
+    """LLM-pipeline embedding near-dup pairs: integer-SRP bucketed cosine
     pairs >= 0.35 (4 planes). The bucket assignment is exact int64
     arithmetic (ann_topk machinery) so DuckDB recomputes the candidate
     set bit-for-bit; nearest value to the threshold on this data is
@@ -1317,6 +2036,8 @@ SELECT mention_id, group_id,
 FROM allm GROUP BY mention_id, group_id
 ORDER BY mention_id, group_id
 """
+
+
 
 
 def ann_topk_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2037,6 +2758,68 @@ PL_RANK_SQL = BT_RANK_SQL
 DAVIDSON_RANK_SQL = BT_RANK_SQL
 
 
+def _media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents bytes shaped as fake media payloads (shared by the two
+    media queries; the SQL twin is _MEDIA_CTE)."""
+    d = _t(spark, sf_dir, "documents")
+    return d.select(
+        F.concat(F.lit("m"), F.col("doc_id")).alias("media_id"),
+        F.when(F.col("doc_id") % 2 == 0, F.lit("image")).otherwise(F.lit("audio")).alias("kind"),
+        F.encode(F.col("text"), "utf-8").alias("payload"),
+        F.lit(None).cast(
+            "struct<width:int,height:int,sample_rate:int,n_frames:int,codec:string>"
+        ).alias("meta"),
+        F.col("doc_id"),
+    )
+
+
+def media_features_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multimodal plumbing incl. the stub decode, oracle-checked end to end:
+    the stub feature grid (multimodal._stub_decode, md5-derived k/4096) is
+    re-quantized to its integer grid so DuckDB can recompute the exact
+    values — no float formatting ambiguity (round-1 red row was
+    `unhashable type: 'list'`; round-2 makes it value-exact)."""
+    from entitylinking_spark.operators.multimodal import extract_features
+
+    media = _media_table(spark, sf_dir).filter(F.col("doc_id") < 200).drop("doc_id")
+    feats = extract_features(media, dim=8, use_stub_decoder=True)
+    return feats.select(
+        "media_id", "kind", "n_bytes", "payload_sha",
+        F.array_join(
+            F.transform(
+                "feature",
+                lambda x: F.round(x * 4096).cast("int").cast("string"),
+            ),
+            ",",
+        ).alias("feature_str"),
+    ).orderBy("media_id")
+
+
+# inner lambda variable must differ from the outer list_transform's `i`
+# (DuckDB lambda scoping: the inner variable would shadow the feature index
+# referenced inside the md5 argument)
+_H60_MEDIA = (
+    "list_sum(list_transform(range(15), j -> "
+    "(strpos('0123456789abcdef', substr(md5({x}), j+1, 1)) - 1)"
+    " * (1::BIGINT << (4*(14-j)))))"
+)
+
+MEDIA_FEATURES_SQL = f"""
+WITH m AS (
+  SELECT 'm' || CAST(doc_id AS VARCHAR) AS media_id,
+         CASE WHEN doc_id % 2 = 0 THEN 'image' ELSE 'audio' END AS kind,
+         CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
+         sha256(text) AS payload_sha
+  FROM documents WHERE doc_id < 200
+)
+SELECT media_id, kind, n_bytes, payload_sha,
+       array_to_string(list_transform(range(8), i ->
+         CAST({_H60_MEDIA.format(x="payload_sha || ':' || kind || ':' || CAST(i AS VARCHAR)")} % 4096 AS VARCHAR)
+       ), ',') AS feature_str
+FROM m ORDER BY media_id
+"""
+
+
 def tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TF-IDF featurization (vocab.tfidf_vectors) in sparse row form:
     every document's nonzero components over the top-50 vocabulary,
@@ -2116,6 +2899,80 @@ GROUP BY t HAVING COUNT(*) >= 80 ORDER BY token
 """
 
 
+def doc_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sentence segmentation (cleaning.split_sentences): RE2-safe greedy
+    terminator runs, trimmed, empties dropped — DuckDB runs the identical
+    pattern and trim. The adapter that lets remove_duplicated_lines run
+    at C4's true (sentence) unit."""
+    from entitylinking_spark.operators.cleaning import split_sentences
+
+    d = _t(spark, sf_dir, "documents")
+    return split_sentences(d).orderBy("doc_id", "sent_id")
+
+
+DOC_SENTENCES_SQL = """
+WITH s AS (
+  SELECT doc_id,
+         list_filter(
+           list_transform(regexp_extract_all(text, '[^.!?]+[.!?]*'),
+                          x -> trim(x)),
+           x -> x <> '') AS sents
+  FROM documents
+)
+SELECT doc_id, CAST(i AS INT) AS sent_id, sents[i + 1] AS sentence
+FROM s, UNNEST(list_transform(range(len(sents)), x -> CAST(x AS INT))) u(i)
+ORDER BY doc_id, sent_id
+"""
+
+
+def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Token-window chunking (cleaning.chunk_documents): 24-token windows
+    every 16 tokens with the tail window always emitted — the context-
+    window prep for trainers/retrieval. Pure codegen expressions; DuckDB
+    recomputes every window (starts grid + off-grid tail, slices, space-
+    joined rebuild) verbatim."""
+    from entitylinking_spark.operators.cleaning import chunk_documents
+
+    d = _t(spark, sf_dir, "documents")
+    return chunk_documents(d, size=24, stride=16).orderBy(
+        "doc_id", "chunk_id"
+    )
+
+
+DOC_CHUNKS_SQL = """
+WITH tok AS (
+  SELECT doc_id,
+         list_filter(regexp_split_to_array(lower(coalesce(text, '')),
+                                           '[^a-z0-9_]+'),
+                     t -> t <> '') AS ts
+  FROM documents
+),
+st AS (
+  SELECT doc_id, ts,
+         CASE
+           WHEN len(ts) <= 24 THEN [0]
+           WHEN (len(ts) - 24) % 16 = 0 THEN
+             list_transform(range(0, len(ts) - 24 + 1, 16),
+                            x -> CAST(x AS INT))
+           ELSE list_append(
+             list_transform(range(0, len(ts) - 24 + 1, 16),
+                            x -> CAST(x AS INT)),
+             CAST(len(ts) - 24 AS INT))
+         END AS starts
+  FROM tok
+)
+SELECT doc_id,
+       CAST(i AS INT) AS chunk_id,
+       starts[i + 1] AS chunk_start,
+       CAST(len(list_slice(ts, starts[i + 1] + 1, starts[i + 1] + 24))
+            AS INT) AS n_chunk_tokens,
+       array_to_string(list_slice(ts, starts[i + 1] + 1,
+                                  starts[i + 1] + 24), ' ') AS chunk_text
+FROM st, UNNEST(list_transform(range(len(starts)), x -> CAST(x AS INT))) u(i)
+ORDER BY doc_id, chunk_id
+"""
+
+
 def oov_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary-coverage check (vocab.oov_rate): per-doc OOV token share
     against the corpus's own top-200 vocabulary (total-ordered tf DESC,
@@ -2177,6 +3034,131 @@ ORDER BY d.doc_id
 """
 
 
+def url_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """URL filtering features + suffix blocklist (cleaning.url_features /
+    filter_blocked_domains) over deterministic synthetic URLs: schemes,
+    userinfo, ports, multi-label TLDs, empty paths and queries all occur.
+    DuckDB rebuilds the same URLs and re-runs the IDENTICAL RE2 regexes
+    and label-group suffix matching."""
+    from entitylinking_spark.operators.cleaning import (
+        filter_blocked_domains,
+        url_features,
+    )
+
+    d = _t(spark, sf_dir, "documents")
+    doc = F.col("doc_id")
+    url = F.concat(
+        F.when(doc % 3 == 0, F.lit("https://"))
+        .when(doc % 3 == 1, F.lit("http://"))
+        .otherwise(F.lit("ftp://")),
+        F.when(doc % 5 == 0, F.lit("user:pw@")).otherwise(F.lit("")),
+        F.lit("w"), (doc % 50).cast("string"), F.lit(".example."),
+        F.when(doc % 4 == 0, F.lit("com")).when(doc % 4 == 1, F.lit("org"))
+        .when(doc % 4 == 2, F.lit("co.uk")).otherwise(F.lit("net")),
+        F.when(doc % 6 == 0, F.lit(":8080")).otherwise(F.lit("")),
+        F.expr("repeat('/p', int(doc_id % 4))"),
+        F.when(doc % 2 == 0, F.lit("?q=1")).otherwise(F.lit("")),
+    )
+    base = d.select("doc_id", url.alias("url"))
+    bl = spark.createDataFrame(
+        [("example.com",), ("example.co.uk",)], "domain string"
+    )
+    feats = url_features(base)
+    blocked = filter_blocked_domains(base, bl).select("doc_id", "url_blocked")
+    return (
+        feats.join(blocked, "doc_id")
+        .select("doc_id", "scheme", "host", "domain", "tld",
+                "path_depth", "has_query", "url_blocked")
+        .orderBy("doc_id")
+    )
+
+
+URL_STATS_SQL = r"""
+WITH u AS (
+  SELECT doc_id, lower(trim(
+    CASE doc_id % 3 WHEN 0 THEN 'https://' WHEN 1 THEN 'http://'
+                    ELSE 'ftp://' END
+    || CASE WHEN doc_id % 5 = 0 THEN 'user:pw@' ELSE '' END
+    || 'w' || CAST(doc_id % 50 AS VARCHAR) || '.example.'
+    || CASE doc_id % 4 WHEN 0 THEN 'com' WHEN 1 THEN 'org'
+                       WHEN 2 THEN 'co.uk' ELSE 'net' END
+    || CASE WHEN doc_id % 6 = 0 THEN ':8080' ELSE '' END
+    || repeat('/p', CAST(doc_id % 4 AS INT))
+    || CASE WHEN doc_id % 2 = 0 THEN '?q=1' ELSE '' END
+  )) AS url FROM documents
+),
+g AS (
+  SELECT doc_id, url,
+    regexp_extract(url, '^([a-z][a-z0-9+.-]*)://', 1) AS scheme,
+    regexp_replace(regexp_replace(
+      regexp_extract(url, '^[a-z][a-z0-9+.-]*://([^/?#]+)', 1),
+      '^[^@]*@', '', 'g'), ':[0-9]+$', '', 'g') AS host,
+    regexp_extract(url, '^[a-z][a-z0-9+.-]*://[^/?#]+([^?#]*)', 1) AS path
+  FROM u
+),
+h AS (
+  SELECT doc_id, url, scheme, host, path,
+         string_split(host, '.') AS sp
+  FROM g
+)
+SELECT doc_id, scheme, host,
+  regexp_extract(host, '([a-z0-9-]+\.[a-z0-9-]+)$', 1) AS domain,
+  regexp_extract(host, '\.([a-z0-9-]+)$', 1) AS tld,
+  CAST(len(list_filter(string_split(path, '/'), x -> x <> '')) AS INT)
+    AS path_depth,
+  contains(url, '?') AS has_query,
+  len(list_filter(
+    list_transform([2, 3, 4], k ->
+      CASE WHEN len(sp) >= k
+           THEN array_to_string(list_slice(sp, len(sp) - k + 1, len(sp)), '.')
+      END),
+    s -> s IN ('example.com', 'example.co.uk'))) > 0 AS url_blocked
+FROM h ORDER BY doc_id
+"""
+
+
+def html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """HTML -> text extraction (cleaning.html_to_text): every document is
+    wrapped in deterministic markup (script/style/comment/entities/block
+    tags) and stripped back; DuckDB runs the IDENTICAL RE2-safe
+    regexp_replace chain (html_passes_sql), so the values are bit-equal.
+    The chain is one codegen column expression — zero shuffles."""
+    from entitylinking_spark.operators.cleaning import html_to_text
+
+    d = _t(spark, sf_dir, "documents")
+    html = F.concat(
+        F.lit('<html><head><style>p{margin:0}</style><script>var id="'),
+        F.col("doc_id").cast("string"),
+        F.lit('";</script></head><body><h1>Doc '),
+        F.col("doc_id").cast("string"),
+        F.lit("</h1><p>"),
+        F.col("text"),
+        F.lit('</p><!-- hidden --><div>tail &amp;lt;x&gt; '
+              "&quot;quoted&#39;s&quot;&nbsp;end</div></body></html>"),
+    )
+    out = html_to_text(d.withColumn("text", html))
+    return out.select("doc_id", "text_plain").orderBy("doc_id")
+
+
+def _html_extract_sql() -> str:
+    from entitylinking_spark.operators.cleaning import html_passes_sql
+
+    expr = (
+        "'<html><head><style>p{margin:0}</style><script>var id=\"' || "
+        "CAST(doc_id AS VARCHAR) || '\";</script></head><body><h1>Doc ' || "
+        "CAST(doc_id AS VARCHAR) || '</h1><p>' || text || "
+        "'</p><!-- hidden --><div>tail &amp;lt;x&gt; "
+        "&quot;quoted&#39;s&quot;&nbsp;end</div></body></html>'"
+    )
+    return (
+        "SELECT doc_id, " + html_passes_sql(expr)
+        + " AS text_plain FROM documents ORDER BY doc_id"
+    )
+
+
+HTML_EXTRACT_SQL = _html_extract_sql()
+
+
 def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The counting heart of BPE tokenizer training (operators/bpe.py):
     weighted adjacent character-pair counts over the corpus word-frequency
@@ -2222,9 +3204,117 @@ FROM ranked WHERE rank <= 40 ORDER BY rank
 """
 
 
+def resize_thumbs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The REAL image path oracle-checked end to end (no stub anywhere):
+    deterministic 4x4 RGB P6 payloads (pixel = first-60-md5-bits of
+    'px:<doc>:<y>:<x>:<c>' % 256) are decoded by the real netpbm decoder,
+    nearest-resized to 2x2 (multimodal.resize_image samples rows/cols
+    {1,3} at half-pixel centers), re-encoded as P6, decoded AGAIN, and
+    reduced to exact integer channel sums — DuckDB recomputes the same
+    sums straight from the md5 arithmetic."""
+    import hashlib as _hl
+
+    import numpy as _np
+
+    from entitylinking_spark.operators.multimodal import decode_ppm, resize_media
+
+    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 120)
+
+    @F.pandas_udf("binary")
+    def make_img(ids: pd.Series) -> pd.Series:
+        out = []
+        for i in ids:
+            px = bytes(
+                int(_hl.md5(f"px:{int(i)}:{y}:{x}:{c}".encode())
+                    .hexdigest()[:15], 16) % 256
+                for y in range(4) for x in range(4) for c in range(3)
+            )
+            out.append(b"P6\n4 4\n255\n" + px)
+        return pd.Series(out)
+
+    media = d.select(
+        F.concat(F.lit("m"), F.col("doc_id")).alias("media_id"),
+        F.lit("image").alias("kind"),
+        make_img(F.col("doc_id")).alias("payload"),
+    )
+    small = resize_media(media, 2, 2, method="nearest")
+
+    @F.pandas_udf("array<long>")
+    def channel_sums(payloads: pd.Series) -> pd.Series:
+        res = []
+        for p in payloads:
+            img = decode_ppm(bytes(p)).astype(_np.int64)
+            res.append([int(img[:, :, c].sum()) for c in range(3)])
+        return pd.Series(res)
+
+    return (
+        small.select(
+            "media_id", "src_height", "src_width", "height", "width",
+            channel_sums("payload").alias("s"),
+        )
+        .select(
+            "media_id", "src_height", "src_width", "height", "width",
+            F.col("s")[0].alias("sum_r"),
+            F.col("s")[1].alias("sum_g"),
+            F.col("s")[2].alias("sum_b"),
+        )
+        .orderBy("media_id")
+    )
+
+
+_H60_PX = (
+    "list_sum(list_transform(range(15), j -> "
+    "(strpos('0123456789abcdef', substr(md5({x}), j+1, 1)) - 1)"
+    " * (1::BIGINT << (4*(14-j)))))"
+)
+
+RESIZE_THUMBS_SQL = f"""
+WITH px AS (
+  SELECT doc_id, yy, xx, cc,
+         ({_H60_PX.format(x="'px:' || CAST(doc_id AS VARCHAR) || ':' || "
+                            "CAST(yy AS VARCHAR) || ':' || CAST(xx AS VARCHAR)"
+                            " || ':' || CAST(cc AS VARCHAR)")}) % 256 AS v
+  FROM documents
+  CROSS JOIN range(4) ty(yy) CROSS JOIN range(4) tx(xx)
+  CROSS JOIN range(3) tc(cc)
+  WHERE doc_id < 120
+)
+SELECT 'm' || CAST(doc_id AS VARCHAR) AS media_id,
+       CAST(4 AS INT) AS src_height, CAST(4 AS INT) AS src_width,
+       CAST(2 AS INT) AS height, CAST(2 AS INT) AS width,
+       CAST(SUM(CASE WHEN cc = 0 THEN v END) AS BIGINT) AS sum_r,
+       CAST(SUM(CASE WHEN cc = 1 THEN v END) AS BIGINT) AS sum_g,
+       CAST(SUM(CASE WHEN cc = 2 THEN v END) AS BIGINT) AS sum_b
+FROM px WHERE yy IN (1, 3) AND xx IN (1, 3)
+GROUP BY doc_id ORDER BY media_id
+"""
+
+
+def media_payload_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Oracle-checked half of the multimodal plumbing: byte counts + payload
+    sha256 computed THROUGH the mapInPandas decode path (multimodal.py),
+    which DuckDB can verify independently from the raw text."""
+    from entitylinking_spark.operators.multimodal import extract_features
+
+    media = _media_table(spark, sf_dir).drop("doc_id")
+    feats = extract_features(media, dim=4, use_stub_decoder=True)
+    return feats.select("media_id", "kind", "n_bytes", "payload_sha").orderBy("media_id")
+
+
+MEDIA_AUDIT_SQL = """
+SELECT 'm' || CAST(doc_id AS VARCHAR) AS media_id,
+       CASE WHEN doc_id % 2 = 0 THEN 'image' ELSE 'audio' END AS kind,
+       CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
+       sha256(text) AS payload_sha
+FROM documents ORDER BY media_id
+"""
+
+
 def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing fingerprints (Schleimer'03) in the relational md5-derived
-    form (functions/relhash.py) so DuckDB recomputes the exact values."""
+    form (functions/relhash.py) so DuckDB recomputes the exact values. The
+    one-pass Arrow variant (textstats.fingerprint_udf) is the scale path
+    and stays pytest-covered."""
     from entitylinking_spark.functions.relhash import winnow_fingerprints
 
     d = _t(spark, sf_dir, "documents")
@@ -2334,8 +3424,8 @@ def parse_responses(spark: SparkSession, sf_dir: str) -> DataFrame:
     negative-beats-yes, X11 first-occurring category, X13 JSON-in-string;
     reference OneNet/data_process.py:115-156, Sparkle/eval.py:80-93)
     driver-checked per row: deterministic response strings are built from
-    the documents table (the same construction on both sides, the PARSE
-    is what's under test) covering every branch —
+    the documents table (the _media_table pattern — same construction on
+    both sides, the PARSE is what's under test) covering every branch —
     explicit yes, yes overridden by a negative, empty -> null,
     unparseable -> null — and DuckDB recomputes category positions and the
     embedded-JSON fields."""
@@ -2441,6 +3531,7 @@ _ORACLE_CHECKED: dict[str, tuple[Callable, str]] = {
     "j6_label_in_candidates": (j6_label_in_candidates, J6_SQL),
     "dedup_exact_docs": (dedup_exact_docs, DEDUP_EXACT_SQL),
     "g3_connected_components": (g3_connected_components, G3_SQL),
+    "lang_id_stopword": (lang_id_stopword, LANG_ID_SQL),
     "similarity_topk": (similarity_topk, SIM_TOPK_SQL),
     "ivf_topk_probe": (ivf_topk_probe, IVF_TOPK_SQL),
     "a2_collect_sorted": (a2_collect_sorted, A2_SQL),
@@ -2449,9 +3540,13 @@ _ORACLE_CHECKED: dict[str, tuple[Callable, str]] = {
     "t2_boosted_topk": (t2_boosted_topk, T2_SQL),
     "x4_cut_context": (x4_cut_context, X4_SQL),
     "dedup_ngram_jaccard_docs": (dedup_ngram_jaccard_docs, NGRAM_SQL),
+    "media_payload_audit": (media_payload_audit, MEDIA_AUDIT_SQL),
     "x9_bm25_topk": (x9_bm25_topk, X9_BM25_SQL),
     "a7_recall_at_k": (a7_recall_at_k, A7_SQL),
     "ann_topk_shuffle": (ann_topk_shuffle, ANN_TOPK_SQL),
+    "doc_quality": (doc_quality, DOC_QUALITY_SQL),
+    "doc_repetition": (doc_repetition, DOC_REPETITION_SQL),
+    "dup_lines": (dup_lines, DUP_LINES_SQL),
     "embedding_near_dup": (embedding_near_dup, EMB_NEAR_DUP_SQL),
     "embedding_dup_clusters": (embedding_dup_clusters, EMB_DUP_CLUSTERS_SQL),
     "g5_overlapping_groups": (g5_overlapping_groups, G5_SQL),
@@ -2464,16 +3559,38 @@ _ORACLE_CHECKED: dict[str, tuple[Callable, str]] = {
     "davidson_rank_orders": (davidson_rank_orders, DAVIDSON_RANK_SQL),
     "doc_fingerprints": (doc_fingerprints, DOC_FP_SQL),
     "parse_responses": (parse_responses, PARSE_RESPONSES_SQL),
+    # the decode itself is a declared stub (multimodal._stub_decode), but
+    # its md5-derived grid is recomputable by DuckDB, so even this query is
+    # value-checked end to end through the mapInPandas plumbing
+    "media_features_demo": (media_features_demo, MEDIA_FEATURES_SQL),
     "linking_channels": (linking_channels, LINKING_CHANNELS_SQL),
+    "decontam_docs": (decontam_docs, DECONTAM_SQL),
+    "split_docs": (split_docs, SPLIT_DOCS_SQL),
+    "mix_weights": (mix_weights, MIX_WEIGHTS_SQL),
+    "sample_strata": (sample_strata, SAMPLE_STRATA_SQL),
+    "pack_docs": (pack_docs, PACK_DOCS_SQL),
+    "dup_ngram_audit": (dup_ngram_audit, DUP_NGRAM_SQL),
     "vocab_topk": (vocab_topk, VOCAB_TOPK_SQL),
     "pmi_bigrams": (pmi_bigrams, PMI_BIGRAMS_SQL),
     "corpus_length_profile": (corpus_length_profile, LENGTH_PROFILE_SQL),
+    "c4_line_dedup": (c4_line_dedup, C4_LINE_DEDUP_SQL),
+    "gopher_docs": (gopher_docs, GOPHER_DOCS_SQL),
+    "dup_spans": (dup_spans, DUP_SPANS_SQL),
+    "nfc_docs": (nfc_docs, NFC_DOCS_SQL),
     "embedding_moments": (embedding_moments, EMBEDDING_MOMENTS_SQL),
+    "budget_select": (budget_select, BUDGET_SELECT_SQL),
     "cluster_reps": (cluster_reps, CLUSTER_REPS_SQL),
+    "snapshot_delta": (snapshot_delta, SNAPSHOT_DELTA_SQL),
+    "domain_caps": (domain_caps, DOMAIN_CAPS_SQL),
     "semdedup_docs": (semdedup_docs, SEMDEDUP_SQL),
+    "resize_thumbs": (resize_thumbs, RESIZE_THUMBS_SQL),
     "bpe_pair_counts": (bpe_pair_counts, BPE_PAIR_COUNTS_SQL),
+    "html_extract": (html_extract, HTML_EXTRACT_SQL),
+    "url_stats": (url_stats, URL_STATS_SQL),
     "oov_docs": (oov_docs, OOV_DOCS_SQL),
     "hard_negatives_probe": (hard_negatives_probe, HARD_NEG_SQL),
+    "doc_chunks": (doc_chunks, DOC_CHUNKS_SQL),
+    "doc_sentences": (doc_sentences, DOC_SENTENCES_SQL),
     "heavy_tokens": (heavy_tokens, HEAVY_TOKENS_SQL),
     "tfidf_terms": (tfidf_terms, TFIDF_TERMS_SQL),
 }

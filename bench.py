@@ -193,7 +193,47 @@ def run_bench(sf_dir: str, cpus: int, repetitions: int = 1) -> dict:
 
     timed("bpe_train", bpe_run)
 
-    # corpus vocabulary + bigram-PMI aggregations
+    # Gopher repetition signals over the documents table (one map-side
+    # combined (doc, gram) shuffle)
+    def repetition():
+        from entitylinking_spark.operators.textstats import repetition_stats
+
+        # aggregate a COMPUTED column: a bare count() lets Catalyst
+        # eliminate the unique-key left join and skip the gram work
+        return repetition_stats(docs, n=2).agg(
+            F.sum("dup_gram_frac")).collect()
+
+    timed("repetition", repetition)
+
+    # benchmark decontamination: every-37th-doc benchmark, broadcast gram
+    # set, map-side flagging (the driver-oracle query shape at bench scale)
+    def decontam_run():
+        from entitylinking_spark.operators.decontam import decontaminate
+
+        bench = docs.filter(F.col("doc_id") % 37 == 0).select(
+            F.col("doc_id").alias("bench_id"),
+            F.substring("text", 1, 200).alias("text"),
+        )
+        return decontaminate(docs, bench, n=5).filter("contaminated").count()
+
+    timed("decontam", decontam_run)
+
+    # dataset assembly: stratified sample -> sharded packing in one plan,
+    # plus the corpus vocabulary + bigram-PMI aggregations
+    def assemble_run():
+        from entitylinking_spark.operators.mixing import (
+            pack_sequences, stratified_sample,
+        )
+
+        sampled = stratified_sample(docs, strata_col="lang",
+                                    fractions={"en": 1.0, "de": 0.5},
+                                    default_fraction=0.25)
+        packed = pack_sequences(sampled, budget=2048, n_shards=cpus)
+        # aggregate computed columns so Catalyst cannot skip the window
+        return packed.agg(F.max("pack_id"), F.sum("n_tokens")).collect()
+
+    timed("assemble", assemble_run)
+
     def vocab_pmi_run():
         from entitylinking_spark.operators.vocab import bigram_pmi
 
@@ -201,6 +241,134 @@ def run_bench(sf_dir: str, cpus: int, repetitions: int = 1) -> dict:
             F.count("*"), F.sum("pmi")).collect()
 
     timed("vocab_pmi", vocab_pmi_run)
+
+    # exact cross-doc duplicated-gram audit (the post-dedup QA pass)
+    def dup_audit_run():
+        from entitylinking_spark.operators.mixing import duplicated_ngram_stats
+
+        return duplicated_ngram_stats(docs, n=5).agg(
+            F.sum("n_dup_grams"), F.sum("dup_fraction")).collect()
+
+    timed("dup_audit", dup_audit_run)
+
+    # C4 line dedup (cross-doc, text rebuilt) + Gopher rule gate
+    def line_dedup_run():
+        from entitylinking_spark.operators.cleaning import (
+            remove_duplicated_lines,
+        )
+
+        return remove_duplicated_lines(docs, min_docs=3).agg(
+            F.sum("n_dropped"), F.sum(F.length("text_clean"))).collect()
+
+    timed("line_dedup", line_dedup_run)
+
+    def gopher_run():
+        from entitylinking_spark.operators.cleaning import gopher_rules
+
+        return gopher_rules(docs).agg(
+            F.sum(F.col("passes_gopher").cast("long")),
+            F.sum("n_words")).collect()
+
+    timed("gopher", gopher_run)
+
+    # exact duplicate-substring spans (Lee et al. ExactSubstr): one Arrow
+    # gram pass + two window shuffles + closed-form totals
+    def dup_spans_run():
+        from entitylinking_spark.operators.cleaning import duplicate_spans
+
+        return duplicate_spans(docs, n=5).agg(
+            F.sum("covered_tokens"), F.sum("n_spans")).collect()
+
+    timed("dup_spans", dup_spans_run)
+
+    # token-budget selection: the histogram-quickselect driver loop
+    # (small max_boundary forces the recursion rounds, not just a window)
+    def budget_run():
+        from entitylinking_spark.operators.mixing import (
+            select_under_token_budget,
+        )
+
+        d = docs.withColumn("n_tokens", F.length("text"))
+        total = d.agg(F.sum("n_tokens")).first()[0]
+        return select_under_token_budget(
+            d, int(total) // 2, quality_col="n_chars",
+            bins=64, max_boundary=100,
+        ).agg(F.sum(F.col("keep").cast("long"))).collect()
+
+    timed("budget_select", budget_run)
+
+    # --- media decode throughput (round-4 verdict #5) ---------------------
+    # per-format MB/s through the mapInPandas decode path; PNG uses the
+    # all-Paeth worst case so the number is the reconstruction floor.
+    # media_mbps_payload = encoded bytes/s, media_mbps_raw = decoded
+    # ndarray bytes/s (what downstream feature code consumes).
+    def media():
+        from entitylinking_spark.functions.media_synth import bench_payloads
+        from entitylinking_spark.operators.multimodal import (
+            decode_avi_frames, decode_bmp, decode_gif, decode_png,
+            decode_ppm, decode_wav, extract_features,
+        )
+        from entitylinking_spark.functions.jpeg import decode_jpeg
+
+        payloads = bench_payloads()
+        raw_bytes = {
+            "ppm": decode_ppm(payloads["ppm"]).nbytes,
+            "bmp": decode_bmp(payloads["bmp"]).nbytes,
+            "png": decode_png(payloads["png"]).nbytes,
+            "jpeg": decode_jpeg(payloads["jpeg"]).nbytes,
+            "gif": decode_gif(payloads["gif"]).nbytes,
+            # extract_features decodes the FIRST frame of a video payload
+            "avi": next(decode_avi_frames(payloads["avi"]))[1].nbytes,
+            "wav": decode_wav(payloads["wav"])[0].nbytes,
+            "wav_ulaw": decode_wav(payloads["wav_ulaw"])[0].nbytes,
+        }
+        reps = {"ppm": 128, "bmp": 128, "png": 32, "jpeg": 128, "gif": 32,
+                "avi": 64, "wav": 64, "wav_ulaw": 64}
+        schema = (
+            "media_id string, kind string, payload binary, "
+            "meta struct<width:int,height:int,sample_rate:int,"
+            "n_frames:int,codec:string>"
+        )
+        mbps_payload, mbps_raw = {}, {}
+        total_s = 0.0
+        for fmt, pl in payloads.items():
+            n = reps[fmt]
+            kind = ("audio" if fmt.startswith("wav")
+                    else "video" if fmt == "avi" else "image")
+            df = spark.createDataFrame(
+                [(f"{fmt}{i}", kind, bytearray(pl), None) for i in range(n)],
+                schema,
+            ).repartition(min(cpus, n)).persist()
+            df.count()
+            t0 = time.time()
+            extract_features(df, dim=8).count()
+            dt = time.time() - t0
+            df.unpersist()
+            mbps_payload[fmt] = round(n * len(pl) / 1e6 / dt, 2)
+            mbps_raw[fmt] = round(n * raw_bytes[fmt] / 1e6 / dt, 2)
+            total_s += dt
+        extras["media_mbps_payload"] = mbps_payload
+        extras["media_mbps_raw"] = mbps_raw
+        # resize throughput: decode -> bilinear -> re-encode through
+        # resize_media on the PPM payload (256x256 -> 64x64)
+        from entitylinking_spark.operators.multimodal import resize_media
+
+        n = 128
+        df = spark.createDataFrame(
+            [(f"rz{i}", "image", bytearray(payloads["ppm"]), None)
+             for i in range(n)],
+            schema,
+        ).repartition(min(cpus, n)).persist()
+        df.count()
+        t0 = time.time()
+        resize_media(df, 64, 64).count()
+        dt = time.time() - t0
+        df.unpersist()
+        extras["resize_mbps_payload"] = round(n * len(payloads["ppm"]) / 1e6 / dt, 2)
+        total_s += dt
+        return total_s
+
+    timings["media_decode"] = round(media(), 3)
 
     total = round(sum(timings.values()), 3)
     sf = sf_dir.rstrip("/").split("sf")[-1]

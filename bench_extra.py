@@ -170,12 +170,96 @@ def main():
         bpe_tokenize(docs, merges).agg(F.sum("n_bpe_tokens")).collect()
         return time.time() - t0
 
+    @reg("repetition")
+    def repetition():
+        from entitylinking_spark.operators.textstats import repetition_stats
+
+        t0 = time.time()
+        repetition_stats(docs, n=2).agg(F.sum("dup_gram_frac")).collect()
+        return time.time() - t0
+
+    @reg("decontam")
+    def decontam_run():
+        from entitylinking_spark.operators.decontam import decontaminate
+
+        t0 = time.time()
+        bench = docs.filter(F.col("doc_id") % 37 == 0).select(
+            F.col("doc_id").alias("bench_id"),
+            F.substring("text", 1, 200).alias("text"),
+        )
+        decontaminate(docs, bench, n=5).filter("contaminated").count()
+        return time.time() - t0
+
+    @reg("assemble")
+    def assemble_run():
+        from entitylinking_spark.operators.mixing import (
+            pack_sequences, stratified_sample,
+        )
+
+        t0 = time.time()
+        sampled = stratified_sample(docs, strata_col="lang",
+                                    fractions={"en": 1.0, "de": 0.5},
+                                    default_fraction=0.25)
+        packed = pack_sequences(sampled, budget=2048, n_shards=args.cpus)
+        packed.agg(F.max("pack_id"), F.sum("n_tokens")).collect()
+        return time.time() - t0
+
     @reg("vocab_pmi")
     def vocab_pmi_run():
         from entitylinking_spark.operators.vocab import bigram_pmi
 
         t0 = time.time()
         bigram_pmi(docs, min_count=8).agg(F.count("*"), F.sum("pmi")).collect()
+        return time.time() - t0
+
+    @reg("dup_audit")
+    def dup_audit_run():
+        from entitylinking_spark.operators.mixing import duplicated_ngram_stats
+
+        t0 = time.time()
+        duplicated_ngram_stats(docs, n=5).agg(
+            F.sum("n_dup_grams"), F.sum("dup_fraction")).collect()
+        return time.time() - t0
+
+    @reg("line_dedup")
+    def line_dedup_run():
+        from entitylinking_spark.operators.cleaning import remove_duplicated_lines
+
+        t0 = time.time()
+        remove_duplicated_lines(docs, min_docs=3).agg(
+            F.sum("n_dropped"), F.sum(F.length("text_clean"))).collect()
+        return time.time() - t0
+
+    @reg("gopher")
+    def gopher_run():
+        from entitylinking_spark.operators.cleaning import gopher_rules
+
+        t0 = time.time()
+        gopher_rules(docs).agg(
+            F.sum(F.col("passes_gopher").cast("long")), F.sum("n_words")
+        ).collect()
+        return time.time() - t0
+
+    @reg("dup_spans")
+    def dup_spans_run():
+        from entitylinking_spark.operators.cleaning import duplicate_spans
+
+        t0 = time.time()
+        duplicate_spans(docs, n=5).agg(
+            F.sum("covered_tokens"), F.sum("n_spans")).collect()
+        return time.time() - t0
+
+    @reg("budget_select")
+    def budget_run():
+        from entitylinking_spark.operators.mixing import select_under_token_budget
+
+        t0 = time.time()
+        d = docs.withColumn("n_tokens", F.length("text"))
+        total = d.agg(F.sum("n_tokens")).first()[0]
+        select_under_token_budget(
+            d, int(total) // 2, quality_col="n_chars",
+            bins=64, max_boundary=100,
+        ).agg(F.sum(F.col("keep").cast("long"))).collect()
         return time.time() - t0
 
     names = args.queries or list(runners)

@@ -7,9 +7,9 @@ md5 (identical in Spark and DuckDB) and express the whole computation as
 relational operators, which makes SimHash dedup and winnowing
 fingerprints *value-checkable* end to end at small scale.
 
-SimHash here is the verification twin, not the scale path: the Arrow
-SimHash kernel in hashing.py does the same job in one pass per document
-and is what the pipeline uses. Reference analogues: SimHash stands in for the
+They are the verification twins, not the scale path: the Arrow kernels in
+hashing.py / textstats.py do the same job in one pass per document and are
+what the pipeline uses. Reference analogues: SimHash stands in for the
 embedding near-dup channel (/root/reference/Sparkle/database.py:165-183);
 the winnowing fingerprint for document identity tracking
 (/root/reference/OneNet/data_process.py:486-509 reads stable doc ids).

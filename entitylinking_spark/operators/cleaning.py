@@ -14,8 +14,7 @@ declarative DataFrame plans:
   gopher_rules              the Gopher quality gate as one row of named
                             boolean columns per document plus the AND
                             (`passes_gopher`) — annotate, don't drop,
-                            so the funnel stays auditable (same stance
-                            as plans/curation.py).
+                            so the funnel stays auditable.
   duplicate_spans           per-document maximal token spans covered by
                             n-grams that occur >= min_count times in the
                             whole corpus — the relational restatement of

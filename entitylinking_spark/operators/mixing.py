@@ -1,8 +1,8 @@
 """Dataset assembly: mixing weights, stratified sampling, sequence packing,
 and exact cross-document n-gram duplication measurement.
 
-The last mile of a training-data pipeline, after hygiene (curation.py)
-has produced the keep set: decide HOW MUCH of each domain to sample,
+The last mile of a training-data pipeline, after hygiene (cleaning.py,
+decontam.py) has produced the keep set: decide HOW MUCH of each domain to sample,
 draw the sample deterministically, pack documents into fixed token
 windows, and measure residual cross-document repetition that sketch
 dedup (MinHash) may have left behind.

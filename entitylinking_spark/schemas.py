@@ -121,3 +121,22 @@ LABELED_PAIRS = T.StructType(
         T.StructField("is_match", T.BooleanType(), False),
     ]
 )
+
+# Multimodal blob rows (binary payload + typed metadata) for the
+# training-data-pipeline operators; the decode step itself is stubbed.
+MEDIA = T.StructType(
+    [
+        T.StructField("media_id", T.StringType(), False),
+        T.StructField("kind", T.StringType(), False),  # image | audio | video
+        T.StructField("payload", T.BinaryType(), False),
+        T.StructField("meta", T.StructType(
+            [
+                T.StructField("width", T.IntegerType(), True),
+                T.StructField("height", T.IntegerType(), True),
+                T.StructField("sample_rate", T.IntegerType(), True),
+                T.StructField("n_frames", T.IntegerType(), True),
+                T.StructField("codec", T.StringType(), True),
+            ]
+        ), True),
+    ]
+)

@@ -1,8 +1,8 @@
 """Custom stateful streaming operators via applyInPandasWithState.
 
-The engine's other streaming paths keep cross-batch state in SINK tables
-(stream_curate's seen-sha table, stream_resolve's checkpointed
-IncrementalState). This module is the third idiom the stack offers —
+The engine's other streaming path keeps cross-batch state in a SINK
+table (stream_resolve's checkpointed IncrementalState). This module is
+the second idiom the stack offers —
 state held in Spark's own state store, keyed by group, surviving
 restarts through the streaming checkpoint — for operators whose state is
 small per key and touched on every batch (reference dedupe loop:

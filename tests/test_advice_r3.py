@@ -1,5 +1,6 @@
 """Round-3 ADVICE fixes: jw_evaluated contract, visible coarse-gate clamp,
-fingerprint charset validation."""
+fingerprint charset validation, malformed-WAV errors (the WAV case lives in
+test_media_decoders.py)."""
 
 import dataclasses
 

@@ -62,8 +62,12 @@ def test_dedup_minhash_empty_docs(spark):
     assert out.count() == 0
 
 
-def test_vocab_empty_and_single(spark):
-    """Round-5 vocabulary operators through the same degenerate probes."""
+def test_mixing_vocab_empty_and_single(spark):
+    """Round-5 operators through the same degenerate probes."""
+    from entitylinking_spark.operators.mixing import (
+        domain_mix_weights, duplicated_ngram_stats, pack_sequences,
+        stratified_sample,
+    )
     from entitylinking_spark.operators.vocab import (
         bigram_pmi, length_profile, vocabulary,
     )
@@ -72,6 +76,18 @@ def test_vocab_empty_and_single(spark):
     one = spark.createDataFrame(
         [(1, "only one document here", "en", "src0", 22)], DOC_SCHEMA
     )
+    assert domain_mix_weights(empty).count() == 0
+    w = domain_mix_weights(one).collect()
+    assert len(w) == 1 and w[0]["weight"] == 1.0 and w[0]["oversample"] == 1.0
+    assert stratified_sample(empty, fractions=0.5).count() == 0
+    assert stratified_sample(one, fractions=1.0).count() == 1
+    assert pack_sequences(empty, budget=8).count() == 0
+    p = pack_sequences(one, budget=8).collect()
+    assert len(p) == 1 and p[0]["pack_id"] == 0 and p[0]["pack_pos"] == 0
+    for kernel in ("arrow", "expr"):
+        assert duplicated_ngram_stats(empty, kernel=kernel).count() == 0
+        d = duplicated_ngram_stats(one, n=3, kernel=kernel).collect()
+        assert len(d) == 1 and d[0]["n_dup_grams"] == 0
     assert vocabulary(empty).count() == 0
     assert vocabulary(one).count() == 4
     assert bigram_pmi(empty).count() == 0  # eager-totals empty guard
@@ -79,3 +95,24 @@ def test_vocab_empty_and_single(spark):
     assert length_profile(empty).count() == 0
     prof = length_profile(one).collect()
     assert len(prof) == 1 and prof[0]["p50"] == 22
+
+
+def test_duplicate_spans_empty_and_single(spark):
+    from entitylinking_spark.operators.cleaning import duplicate_spans
+
+    empty = spark.createDataFrame([], DOC_SCHEMA).select("doc_id", "text")
+    assert duplicate_spans(empty, n=3).count() == 0
+    assert duplicate_spans(empty, n=3, emit="spans").count() == 0
+    one = spark.createDataFrame([(1, "only one doc here")],
+                                ["doc_id", "text"])
+    rows = duplicate_spans(one, n=3).collect()
+    assert len(rows) == 1 and rows[0]["n_spans"] == 0
+
+
+def test_cap_per_domain_empty(spark):
+    from entitylinking_spark.operators.mixing import cap_per_domain
+
+    empty = spark.createDataFrame([], DOC_SCHEMA)
+    out = cap_per_domain(empty, cap=3)
+    assert out.count() == 0
+    assert out.columns == ["doc_id", "domain", "keep", "rank_in_domain"]

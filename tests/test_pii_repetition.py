@@ -1,51 +1,15 @@
-"""PII scrub (operators/pii.py) and Gopher repetition stats
-(textstats.repetition_stats / duplicate_line_stats): semantics the
-driver-oracle value check can't isolate — masking order, edge docs,
-known-answer fractions.
+"""Gopher repetition stats (textstats.repetition_stats /
+duplicate_line_stats): semantics the driver-oracle value check can't
+isolate — edge docs, known-answer fractions.
 """
 
 import pytest
-from pyspark.sql import functions as F
 
-from entitylinking_spark.operators.pii import pii_count, pii_report, scrub_pii
 from entitylinking_spark.operators.textstats import (
     duplicate_line_stats,
     ngram_tokens,
     repetition_stats,
 )
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    rows = [
-        (0, "mail me at jane.doe+x@corp.example.org or call 415-555-0199"),
-        (1, "server 192.168.0.1 ssn 123-45-6789 intl +4915123456789"),
-        (2, "no pii here at all"),
-        (3, ""),
-        (4, None),
-    ]
-    return spark.createDataFrame(rows, ["doc_id", "text"])
-
-
-def test_pii_counts_and_scrub(docs):
-    out = {r["doc_id"]: r for r in pii_report(docs).collect()}
-    assert (out[0]["n_email"], out[0]["n_phone"]) == (1, 1)
-    assert (out[1]["n_ipv4"], out[1]["n_ssn"], out[1]["n_phone"]) == (1, 1, 1)
-    assert out[0]["scrubbed"] == "mail me at <EMAIL> or call <PHONE>"
-    assert out[1]["scrubbed"] == "server <IPV4> ssn <SSN> intl <PHONE>"
-    assert out[2]["n_pii"] == 0 and out[2]["scrubbed"] == "no pii here at all"
-    assert out[3]["n_pii"] == 0
-    assert out[4]["scrubbed"] is None  # null propagates, never fabricated
-
-
-def test_ssn_masked_before_phone(spark):
-    """3-2-4 must win over the 3-3-4 phone alternative — order is the
-    PII_PATTERNS dict order."""
-    d = spark.createDataFrame([(0, "id 123-45-6789 tel 123-456-7890")],
-                              ["doc_id", "text"])
-    got = d.select(scrub_pii("text").alias("s")).first()["s"]
-    assert got == "id <SSN> tel <PHONE>"
-    assert d.select(pii_count("text", "ssn").alias("c")).first()["c"] == 1
 
 
 def test_ngram_tokens_short_doc(spark):

@@ -1,5 +1,5 @@
-"""Capture .explain("formatted") for the ER resolve path (candidate pairs
-and scored pairs). Standalone (works in any checkout):
+"""Capture .explain("formatted") for the ER resolve path and the two
+rounding-touched textstats queries. Standalone (works in any checkout):
 
     python tools/capture_plans_er_r06.py <tag> <out_dir>
 """
@@ -25,6 +25,7 @@ def main():
     tag, out_dir = sys.argv[1], sys.argv[2]
     os.makedirs(out_dir, exist_ok=True)
 
+    import __spark_entry__ as entry_mod
     from entitylinking_spark.operators.blocking import (
         ERConfig, block_candidates, block_census, with_keys,
     )
@@ -44,9 +45,12 @@ def main():
     pairs = candidate_pairs(blocks, cfg, census=census)
     scored = score_pairs(pairs, keyed, cfg)
 
+    qs = entry_mod.queries()
     sections = {
         "er_pairs": pairs,
         "er_scored": scored,
+        "doc_repetition": qs["doc_repetition"](spark, "/root/testdata/sf0.001"),
+        "dup_lines": qs["dup_lines"](spark, "/root/testdata/sf0.001"),
     }
     for name, d in sections.items():
         txt = capture(d)

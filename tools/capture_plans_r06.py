@@ -109,6 +109,57 @@ def main():
 
     builders["dedup_minhash"] = dedup_minhash
 
+    def dup_audit():
+        from entitylinking_spark.operators.mixing import duplicated_ngram_stats
+
+        return duplicated_ngram_stats(docs, n=5)
+
+    builders["dup_audit"] = dup_audit
+
+    def gopher():
+        from entitylinking_spark.operators.cleaning import gopher_rules
+
+        return gopher_rules(docs)
+
+    builders["gopher"] = gopher
+
+    def decontam():
+        from entitylinking_spark.operators.decontam import decontaminate
+
+        bench = docs.filter(F.col("doc_id") % 37 == 0).select(
+            F.col("doc_id").alias("bench_id"),
+            F.substring("text", 1, 200).alias("text"),
+        )
+        return decontaminate(docs, bench, n=5)
+
+    builders["decontam"] = decontam
+
+    def dup_spans():
+        from entitylinking_spark.operators.cleaning import duplicate_spans
+
+        return duplicate_spans(docs, n=5)
+
+    builders["dup_spans"] = dup_spans
+
+    def line_dedup():
+        from entitylinking_spark.operators.cleaning import remove_duplicated_lines
+
+        return remove_duplicated_lines(docs, min_docs=3)
+
+    builders["line_dedup"] = line_dedup
+
+    def assemble():
+        from entitylinking_spark.operators.mixing import (
+            pack_sequences, stratified_sample,
+        )
+
+        sampled = stratified_sample(docs, strata_col="lang",
+                                    fractions={"en": 1.0, "de": 0.5},
+                                    default_fraction=0.25)
+        return pack_sequences(sampled, budget=2048, n_shards=8)
+
+    builders["assemble"] = assemble
+
     for name, build in builders.items():
         if only and name not in only:
             continue

@@ -54,13 +54,32 @@ def main():
         F.col("l_shipdate") > "1995-01-01"
     ).select("l_orderkey", "l_quantity")
 
+    # round-5 curation/analytics representatives: one Arrow gram pass +
+    # shared doc-window exchange (spans), bucketed two-level top-K (caps)
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    from entitylinking_spark.operators.cleaning import duplicate_spans
+    from entitylinking_spark.operators.mixing import cap_per_domain
+
+    sections["DUP_SPANS"] = duplicate_spans(docs, n=5)
+    sections["DOMAIN_CAPS"] = cap_per_domain(docs, cap=30)
+
+    # seventh-sweep representatives: single-codegen-scan HTML chain,
     # vocab-sized BPE pair counting
     from entitylinking_spark.operators.bpe import _pair_counts, word_counts
+    from entitylinking_spark.operators.cleaning import (
+        filter_blocked_domains, html_to_text,
+    )
 
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    sections["HTML_TO_TEXT"] = html_to_text(docs)
     sections["BPE_PAIRS"] = _pair_counts(
         word_counts(docs).select(
             "word", "n", F.split("word", "(?!$)").alias("syms")))
+    urls = docs.select(
+        "doc_id",
+        F.concat(F.lit("https://h"), (F.col("doc_id") % 20).cast("string"),
+                 F.lit(".example.com/x")).alias("url"))
+    bl = spark.createDataFrame([("example.com",)], "domain string")
+    sections["URL_BLOCKLIST"] = filter_blocked_domains(urls, bl)
 
     for name, d in sections.items():
         print(f"\n{'='*20} {name} {'='*20}")

@@ -46,7 +46,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
     docs = _t(spark, "/root/testdata/sf0.001", "documents")
     repo_files = repo_files_from_documents(docs)
-    res = resolve(repo_files, ERConfig(), id_col="row_id", collect_metrics=False)
+    res = resolve(repo_files, ERConfig(), id_col="row_id")
     return res.clusters
 
 
@@ -2425,7 +2425,7 @@ def er_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     repo_files = repo_files_from_documents(aug)
     cfg = ERConfig(w_name=0.0, w_content=1.0, verify_ngram=3)
-    res = resolve(repo_files, cfg, id_col="row_id", collect_metrics=False)
+    res = resolve(repo_files, cfg, id_col="row_id")
     return res.clusters.orderBy("row_id")
 
 

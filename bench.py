@@ -78,7 +78,7 @@ def run_bench(sf_dir: str, cpus: int, repetitions: int = 1) -> dict:
     synth_df.count()
 
     def er_synth():
-        res = resolve(synth_df, ERConfig(), id_col="row_id", collect_metrics=False)
+        res = resolve(synth_df, ERConfig(), id_col="row_id")
         n_pairs = res.scored_pairs.count()
         n_rows = res.clusters.count()
         extras["candidate_pairs_scored"] = n_pairs
@@ -101,7 +101,7 @@ def run_bench(sf_dir: str, cpus: int, repetitions: int = 1) -> dict:
     # --- ER over the driver documents table (real parquet input) ----------
     def er():
         repo_files = repo_files_from_documents(docs)
-        res = resolve(repo_files, ERConfig(), id_col="row_id", collect_metrics=False)
+        res = resolve(repo_files, ERConfig(), id_col="row_id")
         return res.clusters.count()
 
     timed("er_pipeline", er)

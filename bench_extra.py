@@ -76,8 +76,7 @@ def main():
             max(args.cpus, 8)).persist()
         synth_df.count()
         t0 = time.time()
-        res = resolve(synth_df, ERConfig(), id_col="row_id",
-                      collect_metrics=False)
+        res = resolve(synth_df, ERConfig(), id_col="row_id")
         res.scored_pairs.count()
         res.clusters.count()
         dt = time.time() - t0
@@ -89,8 +88,7 @@ def main():
     def er_pipeline():
         t0 = time.time()
         repo_files = repo_files_from_documents(docs)
-        res = resolve(repo_files, ERConfig(), id_col="row_id",
-                      collect_metrics=False)
+        res = resolve(repo_files, ERConfig(), id_col="row_id")
         res.clusters.count()
         dt = time.time() - t0
         res.unpersist()

@@ -96,8 +96,7 @@ class CheckpointStore:
             return False
         return meta.get("fingerprint") == fingerprint
 
-    def write(self, stage: str, df: DataFrame, partition_by: list[str] | None = None,
-              meta: dict | None = None) -> DataFrame:
+    def write(self, stage: str, df: DataFrame, meta: dict | None = None) -> DataFrame:
         """Write `df` as the stage table, mark complete, return a fresh read.
 
         Returning the re-read DataFrame (not `df`) truncates lineage for all
@@ -108,10 +107,7 @@ class CheckpointStore:
             return df
         if self.iceberg_catalog:
             tbl = f"{self.iceberg_catalog}.{stage}"
-            writer = df.writeTo(tbl)
-            if partition_by:
-                writer = writer.partitionedBy(*partition_by)
-            writer.createOrReplace()
+            df.writeTo(tbl).createOrReplace()
             fp = (meta or {}).get("fingerprint")
             if fp is not None:
                 # mirrors the Parquet marker: is_complete() compares this
@@ -124,10 +120,7 @@ class CheckpointStore:
         path = self._dir(stage)
         if os.path.exists(path):
             shutil.rmtree(path)
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(path)
+        df.write.mode("overwrite").parquet(path)
         with open(self._marker(stage), "w") as f:
             json.dump({"stage": stage, "completed_at": time.time(), **(meta or {})}, f)
         return self.spark.read.parquet(path)
@@ -137,19 +130,17 @@ class CheckpointStore:
             return self.spark.read.table(f"{self.iceberg_catalog}.{stage}")
         return self.spark.read.parquet(self._dir(stage))
 
-    def get_or_compute(self, stage: str, compute, partition_by: list[str] | None = None,
-                       on_resume=None, fingerprint: str | None = None) -> DataFrame:
+    def get_or_compute(self, stage: str, compute,
+                       fingerprint: str | None = None) -> DataFrame:
         """Read the stage if complete (and fingerprint-matched), else
         compute() -> write -> re-read. A stale stage (marker exists, wrong
         fingerprint) is invalidated and recomputed."""
         if self.is_complete(stage, fingerprint=fingerprint):
-            if on_resume is not None:
-                on_resume(stage)
             return self.read(stage)
         if self.enabled and not self.iceberg_catalog and os.path.exists(self._marker(stage)):
             self.invalidate(stage)
         meta = {"fingerprint": fingerprint} if fingerprint is not None else None
-        return self.write(stage, compute(), partition_by=partition_by, meta=meta)
+        return self.write(stage, compute(), meta=meta)
 
     def invalidate(self, stage: str) -> None:
         if not self.enabled:

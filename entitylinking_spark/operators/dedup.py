@@ -25,6 +25,7 @@ from entitylinking_spark.functions.hashing import (
     minhash_similarity,
 )
 from entitylinking_spark.functions.strings import exact_jaccard, ngram_hash_set, ngram_set
+from entitylinking_spark.metrics import block_record, census_aggregates
 from entitylinking_spark.operators.blocking import ERConfig
 from entitylinking_spark.operators.cc import connected_components
 from entitylinking_spark.operators.pairs import candidate_pairs
@@ -352,7 +353,8 @@ def embedding_near_dup_pairs(embeddings: DataFrame, id_col: str = "vec_id",
         metrics.record(
             "near_dup_buckets", n_planes=n_planes, block_cap=block_cap,
             skip_block_threshold=skip_block_threshold,
-            **metrics.block_stats(census, block_cap, skip_block_threshold),
+            **block_record(census.agg(*census_aggregates(
+                block_cap, skip_block_threshold)).first().asDict()),
         )
     if kernel not in ("native", "arrow"):
         raise ValueError(f"unknown kernel {kernel!r}")
@@ -620,7 +622,8 @@ def semdedup(embeddings: DataFrame, eps: float = 0.9,
         metrics.record(
             "semdedup_cells", n_cells=len(centroids), cell_cap=cell_cap,
             skip_block_threshold=skip_block_threshold,
-            **metrics.block_stats(census, cell_cap, skip_block_threshold),
+            **block_record(census.agg(*census_aggregates(
+                cell_cap, skip_block_threshold)).first().asDict()),
         )
     # Round 6 (guide §2.3/§4.2): cells that fit one task (size <= cell_cap)
     # — under auto_n_cells that is every non-degenerate cell — are scored

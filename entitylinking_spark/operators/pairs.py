@@ -22,14 +22,19 @@ deduplicated by (id_l, id_r) keeping the lexicographically first block key
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
+from entitylinking_spark.metrics import census_aggregates, observed
 from entitylinking_spark.operators.blocking import ERConfig, block_census
 
 
 def candidate_pairs(blocks: DataFrame, cfg: ERConfig = ERConfig(),
-                    census: DataFrame | None = None) -> DataFrame:
+                    census: DataFrame | None = None,
+                    observation: Observation | None = None) -> DataFrame:
     """(block_key,row_id[,n_units]) -> distinct (id_l,id_r,block_key), id_l < id_r.
+
+    `observation`: optional sink for the census_aggregates, collected by
+    the sized-table checkpoint below; no output depends on it.
 
     When the blocks frame carries `n_units` (distinct verify-space unit
     count per row, from with_keys), pairs whose unit-count ratio is below
@@ -65,6 +70,9 @@ def candidate_pairs(blocks: DataFrame, cfg: ERConfig = ERConfig(),
 
     if census is None:
         census = block_census(blocks.select("block_key", "row_id"))
+    obs = observation or Observation()
+    census = census.observe(
+        obs, *census_aggregates(cfg.block_cap, cfg.skip_block_threshold))
     # Round 6: materialize the sized block table ONCE — the small and hot
     # branches both filter it, and unpersisted each branch re-ran the
     # census join (two extra shuffles of the full block table per call).
@@ -92,10 +100,11 @@ def candidate_pairs(blocks: DataFrame, cfg: ERConfig = ERConfig(),
     hot = sized.filter(F.col("block_size") > cfg.block_cap)
     # Hot-branch gate (round 6): with auto-sized blocking most corpora have
     # NO hot blocks, yet the triangle-salt subtree (explode + 2-key join +
-    # union) still costs ~1.5 s of empty-stage scheduling per call. One
-    # probe of the checkpointed sized table decides; results are identical
+    # union) still costs ~1.5 s of empty-stage scheduling per call. The
+    # census observation, collected by the checkpoint above, decides with no
+    # job of its own (null n_hot: no blocks at all); results are identical
     # either way (the skipped subtree would have produced zero rows).
-    if hot.limit(1).count() == 0:
+    if not observed(obs).get("n_hot"):
         return (
             small_pairs.groupBy("id_l", "id_r")
             .agg(F.min("block_key").alias("block_key"))
@@ -146,7 +155,3 @@ def candidate_pairs(blocks: DataFrame, cfg: ERConfig = ERConfig(),
         .agg(F.min("block_key").alias("block_key"))
     )
 
-
-def skipped_blocks(census: DataFrame, cfg: ERConfig = ERConfig()) -> DataFrame:
-    """Mega-blocks excluded from pair generation (for the metrics report)."""
-    return census.filter(F.col("block_size") > cfg.skip_block_threshold)

@@ -26,10 +26,10 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from entitylinking_spark.checkpoint import CheckpointStore
-from entitylinking_spark.metrics import MetricsCollector
+from entitylinking_spark.metrics import MetricsCollector, block_record, observed
 from entitylinking_spark.operators.blocking import (
     ERConfig,
     block_candidates,
@@ -114,9 +114,9 @@ def _census(files: DataFrame, cfg: ERConfig):
 class _Core(NamedTuple):
     clusters: DataFrame
     scored: DataFrame
-    census: DataFrame
     n_pairs: int | None  # None when pairs_scored was resumed from a stage
     persisted: list
+    observations: dict  # blocks / pairs_scored / clusters -> Observation
 
 
 def _resolve_core(keyed: DataFrame, content: DataFrame, cfg: ERConfig,
@@ -129,7 +129,10 @@ def _resolve_core(keyed: DataFrame, content: DataFrame, cfg: ERConfig,
 
     `content` is (row_id, content) for the verify join; `stage(name,
     compute)` may checkpoint the blocks, pairs_scored, edges and clusters
-    tables. The caller unpersists `persisted` once done with `scored`."""
+    tables. The caller unpersists `persisted` once done with `scored`.
+    `observations` ride the sized-block checkpoint, the scored pairs' first
+    read (stage write or CC) and the label checkpoint; each is attached
+    only when its stage is computed, not resumed."""
     # exact-duplicate fast path (sha grouping; no pairs generated): rep =
     # min row_id per content_sha over ALL rows — deterministic however the
     # corpus was split into folds; edge (rep -> row) for non-reps
@@ -153,6 +156,7 @@ def _resolve_core(keyed: DataFrame, content: DataFrame, cfg: ERConfig,
     blocks = stage("blocks", lambda: block_candidates(rep_rows, cfg))  # carries is_new
     census = block_census(blocks)
     n_pairs = None
+    obs = {k: Observation() for k in ("blocks", "pairs_scored", "clusters")}
 
     def compute_scored() -> DataFrame:
         nonlocal n_pairs
@@ -160,10 +164,18 @@ def _resolve_core(keyed: DataFrame, content: DataFrame, cfg: ERConfig,
         # fast path / JW survivors); unpersisted, each branch would re-run
         # the whole block self-join + dedup. The pair list is slim (two ids
         # + block key) — persist and materialize once.
-        pairs = candidate_pairs(blocks, cfg, census=census).persist()
+        pairs = candidate_pairs(blocks, cfg, census=census,
+                                observation=obs["blocks"]).persist()
         persisted.append(pairs)
         n_pairs = pairs.count()
-        return score_pairs(pairs, rep_rows, cfg, content_df=content)
+        # score_pairs emits jw_evaluated itself (ADVICE r3: the band
+        # predicate lives in ONE place)
+        return score_pairs(pairs, rep_rows, cfg, content_df=content).observe(
+            obs["pairs_scored"],
+            F.count("*").alias("n"),
+            F.sum(F.col("name_sim").isNotNull().cast("long")).alias("survivors"),
+            F.sum(F.col("jw_evaluated").cast("long")).alias("jw_pairs"),
+        )
 
     scored = stage("pairs_scored", compute_scored).persist()
     persisted.append(scored)
@@ -178,9 +190,9 @@ def _resolve_core(keyed: DataFrame, content: DataFrame, cfg: ERConfig,
         edges, all_ids=keyed.select("row_id"),
         # new edges are distinct by construction (see assume_distinct);
         # only prior star edges can repeat one
-        assume_distinct=prior_edges is None,
+        assume_distinct=prior_edges is None, observation=obs["clusters"],
     ))
-    return _Core(clusters, scored, census, n_pairs, persisted)
+    return _Core(clusters, scored, n_pairs, persisted, obs)
 
 
 def resolve(
@@ -188,18 +200,18 @@ def resolve(
     cfg: ERConfig = ERConfig(),
     id_col: str | None = None,
     checkpoint_dir: str | None = None,
-    spark: SparkSession | None = None,
-    collect_metrics: bool = True,
     blacklist=None,
 ) -> ERResult:
     """Run the full ER pipeline; returns lazy DataFrames + metrics.
+
+    Metrics add no Spark job (see _resolve_core's `observations`); a
+    stage resumed from `checkpoint_dir` records none.
 
     `blacklist`: optional pre-computed shingle blacklist (numpy uint64 from
     shingle_blacklist) — used as-is, skipping the census. This is how a
     PINNED blacklist (plans/incremental.py) is replayed against a batch run
     for equivalence checks."""
-    spark = spark or repo_files.sparkSession
-    store = CheckpointStore(checkpoint_dir, spark)
+    store = CheckpointStore(checkpoint_dir, repo_files.sparkSession)
     fp = _fingerprint(cfg, repo_files, id_col) if store.enabled else None
     m = MetricsCollector()
     persisted: list[DataFrame] = []
@@ -208,7 +220,7 @@ def resolve(
     if not pinned and cfg.suppress_shingle_df is not None \
             and not store.is_complete("keyed", fingerprint=fp):
         blacklist = _census(repo_files, cfg)
-    if collect_metrics and blacklist is not None:
+    if blacklist is not None:
         m.record("shingle_suppression", n_suppressed=int(len(blacklist)),
                  pinned=pinned)
 
@@ -235,36 +247,20 @@ def resolve(
     core = _resolve_core(keyed, keyed_full.select("row_id", "content"), cfg,
                          stage=stage)
     persisted += core.persisted
-    if collect_metrics:
-        m.record("blocks", **m.block_stats(core.census, cfg.block_cap,
-                                           cfg.skip_block_threshold))
-        # score_pairs emits jw_evaluated itself (ADVICE r3: the band
-        # predicate lives in ONE place)
-        stats = core.scored.agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("name_sim").isNotNull().cast("long")).alias("survivors"),
-            F.sum(F.col("jw_evaluated").cast("long")).alias("jw_pairs"),
-        ).collect()[0]
-        n_pairs = int(stats["n"])
-        survivors = int(stats["survivors"] or 0)
-        jw_pairs = int(stats["jw_pairs"] or 0)
-        m.record(
-            "pairs_scored",
-            n_pairs=n_pairs,
-            # prescreen effectiveness: fraction of pairs that reached the
-            # expensive verify stage (name_sim computed) — VERDICT #9
-            prescreen_survivors=survivors,
-            prescreen_survivor_frac=round(survivors / n_pairs, 4) if n_pairs else 0.0,
-            # decision-bounded JW (round-3 verdict #3): pairs that actually
-            # reached the Python Jaro-Winkler kernel
-            jw_pairs=jw_pairs,
-            jw_pair_frac=round(jw_pairs / n_pairs, 4) if n_pairs else 0.0,
-            **m.partition_sizes(core.scored),
-        )
-        m.record("clusters", **core.clusters.agg(
-            F.count("*").alias("n_rows"),
-            F.countDistinct("cluster_id").alias("n_clusters"),
-        ).first().asDict())
+    blocks, scored, clusters = (observed(o) for o in core.observations.values())
+    if blocks is not None:
+        m.record("blocks", **block_record(blocks))
+    if scored is not None:
+        n, surv, jw = (scored.get(k) or 0 for k in ("n", "survivors", "jw_pairs"))
+        # prescreen effectiveness (VERDICT #9): pairs that reached the
+        # expensive verify stage (name_sim computed); decision-bounded JW
+        # (round-3 verdict #3): pairs that reached the Python JW kernel
+        m.record("pairs_scored", n_pairs=n, prescreen_survivors=surv,
+                 prescreen_survivor_frac=round(surv / n, 4) if n else 0.0,
+                 jw_pairs=jw, jw_pair_frac=round(jw / n, 4) if n else 0.0)
+    if clusters is not None:
+        m.record("clusters", **{k: clusters.get(k) or 0
+                                for k in ("n_rows", "n_clusters")})
 
     return ERResult(clusters=core.clusters, scored_pairs=core.scored,
                     keyed=keyed_full, metrics=m, _persisted=persisted)

@@ -129,8 +129,8 @@ def test_shingle_suppression_removes_boilerplate_pairs(spark):
     bl = shingle_blacklist(df, cfg_on)
     assert bl is not None and len(bl) > 0  # the header shingles
 
-    res_off = resolve(df, cfg_off, id_col="row_id", collect_metrics=False)
-    res_on = resolve(df, cfg_on, id_col="row_id", collect_metrics=False)
+    res_off = resolve(df, cfg_off, id_col="row_id")
+    res_on = resolve(df, cfg_on, id_col="row_id")
     pairs_off = res_off.scored_pairs.count()
     pairs_on = res_on.scored_pairs.count()
     c_on = {r["row_id"]: r["cluster_id"] for r in res_on.clusters.collect()}

@@ -69,14 +69,14 @@ def test_stale_checkpoint_invalidated_on_config_change(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     r1 = resolve(df, ERConfig(tau=0.6), id_col="row_id",
-                 checkpoint_dir=ckpt, collect_metrics=False)
+                 checkpoint_dir=ckpt)
     n1 = r1.scored_pairs.count()
     assert n1 >= 0
 
     # tau=0.99: near-dup edges vanish -> different clusters REQUIRED; with
     # name-only resume the old clusters table would be returned verbatim
     r2 = resolve(df, ERConfig(tau=0.99), id_col="row_id",
-                 checkpoint_dir=ckpt, collect_metrics=False)
+                 checkpoint_dir=ckpt)
     c2 = {r["row_id"]: r["cluster_id"] for r in r2.clusters.collect()}
     truth_pairs = {(a, b) for a, b, _, m in fx.labeled_pairs.itertuples(index=False) if m}
     # at tau=0.99 only exact duplicates may share a cluster; chain-mutated
@@ -87,7 +87,7 @@ def test_stale_checkpoint_invalidated_on_config_change(spark, tmp_path):
     # and a THIRD run with the original config recomputes again (marker now
     # carries the tau=0.99 fingerprint) and reproduces run 1
     r3 = resolve(df, ERConfig(tau=0.6), id_col="row_id",
-                 checkpoint_dir=ckpt, collect_metrics=False)
+                 checkpoint_dir=ckpt)
     assert r3.scored_pairs.count() == n1
 
 
@@ -109,8 +109,7 @@ def test_contract_version_invalidates_old_checkpoints(spark, tmp_path):
     ckpt = str(tmp_path / "ck")
 
     with mock.patch.object(pl, "_STAGE_CONTRACT_VERSION", 1):
-        r_old = resolve(df, cfg, id_col="row_id", checkpoint_dir=ckpt,
-                        collect_metrics=False)
+        r_old = resolve(df, cfg, id_col="row_id", checkpoint_dir=ckpt)
         old = sorted((r["row_id"], r["cluster_id"]) for r in r_old.clusters.collect())
     # the stage written under the old contract is stale under the current one
     assert not pl.CheckpointStore(ckpt, spark).is_complete(
@@ -118,8 +117,7 @@ def test_contract_version_invalidates_old_checkpoints(spark, tmp_path):
 
     # current contract: every stage marker is stale -> full recompute, and
     # the new-schema column is present end to end
-    r_new = resolve(df, cfg, id_col="row_id", checkpoint_dir=ckpt,
-                    collect_metrics=False)
+    r_new = resolve(df, cfg, id_col="row_id", checkpoint_dir=ckpt)
     assert "jw_evaluated" in r_new.scored_pairs.columns
     new = sorted((r["row_id"], r["cluster_id"]) for r in r_new.clusters.collect())
     assert new == old

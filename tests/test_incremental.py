@@ -20,7 +20,7 @@ def fixture():
 
 def _batch_clusters(spark, rows):
     df = spark.createDataFrame(rows)
-    res = resolve(df, CFG, id_col="row_id", collect_metrics=False)
+    res = resolve(df, CFG, id_col="row_id")
     out = sorted((r["row_id"], r["cluster_id"]) for r in res.clusters.collect())
     res.unpersist()
     return out
@@ -57,7 +57,7 @@ def test_incremental_pair_volume_is_new_involving(spark, fixture):
     s2 = resolve_increment(spark.createDataFrame(rows.iloc[split:]), s1, CFG, id_col="row_id")
 
     df = spark.createDataFrame(rows)
-    res = resolve(df, CFG, id_col="row_id", collect_metrics=False)
+    res = resolve(df, CFG, id_col="row_id")
     batch_pairs = res.scored_pairs.count()
     res.unpersist()
 
@@ -92,8 +92,7 @@ def test_pinned_suppression_equals_batch(spark, fixture):
     inc = sorted((r["row_id"], r["cluster_id"]) for r in s2.clusters.collect())
 
     df = spark.createDataFrame(rows)
-    res = resolve(df, cfg, id_col="row_id", collect_metrics=False,
-                  blacklist=s1.blacklist)
+    res = resolve(df, cfg, id_col="row_id", blacklist=s1.blacklist)
     batch = sorted((r["row_id"], r["cluster_id"]) for r in res.clusters.collect())
     res.unpersist()
     assert inc == batch
@@ -125,8 +124,7 @@ def test_pinned_empty_below_gate_equals_batch(spark, fixture):
     # the replay honors the pin: no census even though the combined corpus
     # is over the gate (blacklist is not None -> resolve skips the census)
     df = spark.createDataFrame(rows)
-    res = resolve(df, cfg, id_col="row_id", collect_metrics=False,
-                  blacklist=s2.blacklist)
+    res = resolve(df, cfg, id_col="row_id", blacklist=s2.blacklist)
     batch = sorted((r["row_id"], r["cluster_id"]) for r in res.clusters.collect())
     res.unpersist()
     assert inc == batch

@@ -16,9 +16,9 @@ from entitylinking_spark.synthdata import generate_repo_files
 
 CFG = ERConfig(suppress_shingle_df=None)
 
-MAX_JOBS_RESOLVE = 33
-MAX_JOBS_FIRST_FOLD = 32
-MAX_JOBS_LATER_FOLD = 33
+MAX_JOBS_RESOLVE = 32
+MAX_JOBS_FIRST_FOLD = 31
+MAX_JOBS_LATER_FOLD = 32
 
 
 def _in_group(sc, group, fn):
@@ -53,7 +53,7 @@ def test_jobs_per_operation_within_budget(spark):
 
     res, n_resolve = _count_jobs(
         spark, "budget-resolve",
-        lambda: resolve(df, CFG, id_col="row_id", collect_metrics=False))
+        lambda: resolve(df, CFG, id_col="row_id"))
     res.unpersist()
     s1, n_first = _count_jobs(
         spark, "budget-first-fold",

@@ -83,12 +83,12 @@ def test_scorer_symmetry(spark, result):
 def test_resume_equals_single_run(spark, fixture, tmp_path_factory):
     ckpt = str(tmp_path_factory.mktemp("ckpt"))
     df = spark.createDataFrame(fixture.rows.head(200))
-    r1 = resolve(df, ERConfig(), id_col="row_id", checkpoint_dir=ckpt, collect_metrics=False)
+    r1 = resolve(df, ERConfig(), id_col="row_id", checkpoint_dir=ckpt)
     run1 = sorted((r["row_id"], r["cluster_id"]) for r in r1.clusters.collect())
     # kill after pairs_scored: later stages recomputed from checkpoints
     for stage in ["edges", "clusters"]:
         shutil.rmtree(os.path.join(ckpt, stage), ignore_errors=True)
-    r2 = resolve(df, ERConfig(), id_col="row_id", checkpoint_dir=ckpt, collect_metrics=False)
+    r2 = resolve(df, ERConfig(), id_col="row_id", checkpoint_dir=ckpt)
     run2 = sorted((r["row_id"], r["cluster_id"]) for r in r2.clusters.collect())
     assert run1 == run2
 

@@ -7,7 +7,7 @@ candidate growth.
 
 from pyspark.sql import functions as F
 
-from entitylinking_spark.metrics import MetricsCollector
+from entitylinking_spark.metrics import census_aggregates
 from entitylinking_spark.operators.blocking import (
     ERConfig,
     block_candidates,
@@ -21,9 +21,9 @@ def _comparisons(spark, n_rows: int, cfg: ERConfig) -> float:
     fx = generate_repo_files(n_rows, seed=21)
     keyed = with_keys(spark.createDataFrame(fx.rows), cfg, id_col="row_id")
     census = block_census(block_candidates(keyed, cfg))
-    m = MetricsCollector()
-    stats = m.block_stats(census, cfg.block_cap, cfg.skip_block_threshold)
-    return stats["comparisons"]
+    return census.agg(
+        *census_aggregates(cfg.block_cap, cfg.skip_block_threshold)
+    ).first()["comparisons"]
 
 
 def test_candidate_growth_subquadratic(spark):

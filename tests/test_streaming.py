@@ -56,7 +56,7 @@ def test_stream_resolve_equals_batch(spark, tmp_path):
         for r in holder["state"].clusters.collect()
     )
 
-    res = resolve(spark.createDataFrame(rows), cfg, collect_metrics=False)
+    res = resolve(spark.createDataFrame(rows), cfg)
     batch = sorted((r["row_id"], r["cluster_id"]) for r in res.clusters.collect())
     res.unpersist()
     assert inc == batch
@@ -93,7 +93,7 @@ def test_stream_resolve_restart_resumes_from_store(spark, tmp_path):
     inc = sorted(
         (r["row_id"], r["cluster_id"]) for r in h2["state"].clusters.collect()
     )
-    res = resolve(spark.createDataFrame(rows), cfg, collect_metrics=False)
+    res = resolve(spark.createDataFrame(rows), cfg)
     batch = sorted((r["row_id"], r["cluster_id"]) for r in res.clusters.collect())
     res.unpersist()
     assert inc == batch

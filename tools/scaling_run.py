@@ -81,7 +81,7 @@ def main():
 
     def one_run():
         t0 = time.time()
-        res = resolve(df, cfg, id_col="row_id", collect_metrics=False)
+        res = resolve(df, cfg, id_col="row_id")
         n_pairs = res.scored_pairs.count()
         n_rows = res.clusters.count()
         dt = time.time() - t0

@@ -69,7 +69,7 @@ def main():
     cfg = ERConfig(verify_ngram=args.verify_ngram)
 
     t0 = time.time()
-    res = resolve(df, cfg, id_col="row_id", collect_metrics=False)
+    res = resolve(df, cfg, id_col="row_id")
     n_pairs = res.scored_pairs.count()
     n_rows = res.clusters.count()
     wall = time.time() - t0

@@ -976,242 +976,6 @@ ORDER BY d.doc_id
 """
 
 
-def c4_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4-style cross-document line dedup (cleaning.remove_duplicated_lines,
-    min_docs=3): a shared footer line planted on every 7th doc must be
-    dropped everywhere while unique lines and blank lines survive, each
-    doc's text rebuilt in original line order. Spark counts line
-    xxhash64 values; DuckDB counts the line STRINGS."""
-    from entitylinking_spark.operators.cleaning import remove_duplicated_lines
-
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.when(F.col("doc_id") % 7 == 0,
-               F.concat(F.col("text"), F.lit("\nshared footer line")))
-        .otherwise(F.col("text")).alias("text"),
-    )
-    return remove_duplicated_lines(d, min_docs=3).orderBy("doc_id")
-
-
-C4_LINE_DEDUP_SQL = """
-WITH d AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 7 = 0 THEN text || chr(10) || 'shared footer line'
-              ELSE text END AS text
-  FROM documents
-),
-l AS (
-  SELECT doc_id,
-         unnest(string_split(text, chr(10))) AS line,
-         unnest(range(1, len(string_split(text, chr(10))) + 1)) AS pos
-  FROM d
-),
-fr AS (
-  SELECT line, count(DISTINCT doc_id) AS df
-  FROM l WHERE length(line) > 0 GROUP BY 1
-),
-fl AS (
-  SELECT l.doc_id, l.pos, l.line,
-         (length(l.line) > 0 AND COALESCE(f.df, 0) >= 3) AS dropped
-  FROM l LEFT JOIN fr f ON l.line = f.line
-)
-SELECT doc_id,
-       COALESCE(string_agg(CASE WHEN NOT dropped THEN line END,
-                           chr(10) ORDER BY pos), '') AS text_clean,
-       count(*) AS n_lines,
-       sum(CASE WHEN dropped THEN 1 ELSE 0 END) AS n_dropped
-FROM fl GROUP BY doc_id ORDER BY doc_id
-"""
-
-
-def gopher_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher §A1.1 quality gate (cleaning.gopher_rules): per-rule boolean
-    verdicts + the AND, every rule recomputed by DuckDB from the same
-    whitespace-word and line definitions."""
-    from entitylinking_spark.operators.cleaning import (
-        GopherConfig, gopher_rules,
-    )
-
-    # the synthetic corpus contains none of Gopher's stop set — plant it
-    # on every 3rd doc so the gate discriminates (both verdicts occur)
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.when(F.col("doc_id") % 3 == 0,
-               F.concat(F.col("text"),
-                        F.lit(" the stock that we have to be of and with")))
-        .otherwise(F.col("text")).alias("text"),
-    )
-    return gopher_rules(d, GopherConfig(min_words=10)).orderBy("doc_id")
-
-
-_GW = "list_filter(regexp_split_to_array(text, '\\s+'), w -> w <> '')"
-_GL = "list_filter(string_split(text, chr(10)), l -> l <> '')"
-
-GOPHER_DOCS_SQL = f"""
-WITH d AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 3 = 0
-              THEN text || ' the stock that we have to be of and with'
-              ELSE text END AS text
-  FROM documents
-),
-t AS (
-  SELECT doc_id, text,
-         len({_GW}) AS n_words,
-         len({_GL}) AS n_lines,
-         CAST(list_sum(list_transform({_GW}, w -> length(w))) AS DOUBLE)
-           / greatest(len({_GW}), 1) AS mean_wl,
-         len(string_split(text, '#')) - 1
-           + len(string_split(text, '...')) - 1
-           + len(string_split(text, '…')) - 1 AS n_sym,
-         len(list_filter({_GL}, l -> regexp_matches(l, '^\\s*[-*•]')))
-           AS bullet_lines,
-         len(list_filter({_GL}, l -> regexp_matches(l, '(\\.\\.\\.|…)\\s*$')))
-           AS ellipsis_lines,
-         len(list_filter({_GW}, w -> regexp_matches(w, '[A-Za-z]')))
-           AS alpha_words,
-         CAST(regexp_matches(lower(text), '\\bthe\\b') AS INT)
-       + CAST(regexp_matches(lower(text), '\\bbe\\b') AS INT)
-       + CAST(regexp_matches(lower(text), '\\bto\\b') AS INT)
-       + CAST(regexp_matches(lower(text), '\\bof\\b') AS INT)
-       + CAST(regexp_matches(lower(text), '\\band\\b') AS INT)
-       + CAST(regexp_matches(lower(text), '\\bthat\\b') AS INT)
-       + CAST(regexp_matches(lower(text), '\\bhave\\b') AS INT)
-       + CAST(regexp_matches(lower(text), '\\bwith\\b') AS INT) AS stop_hits
-  FROM d
-)
-SELECT doc_id, n_words,
-       (n_words >= 10 AND n_words <= 100000) AS rule_word_count,
-       (mean_wl >= 3.0 AND mean_wl <= 10.0) AS rule_mean_word_len,
-       (n_sym <= 0.1 * greatest(n_words, 1)) AS rule_symbol_ratio,
-       (bullet_lines <= 0.9 * greatest(n_lines, 1)) AS rule_bullet_lines,
-       (ellipsis_lines <= 0.3 * greatest(n_lines, 1)) AS rule_ellipsis_lines,
-       (alpha_words >= 0.8 * greatest(n_words, 1)) AS rule_alpha_words,
-       (stop_hits >= 2) AS rule_stop_words,
-       ((n_words >= 10 AND n_words <= 100000)
-        AND (mean_wl >= 3.0 AND mean_wl <= 10.0)
-        AND (n_sym <= 0.1 * greatest(n_words, 1))
-        AND (bullet_lines <= 0.9 * greatest(n_lines, 1))
-        AND (ellipsis_lines <= 0.3 * greatest(n_lines, 1))
-        AND (alpha_words >= 0.8 * greatest(n_words, 1))
-        AND (stop_hits >= 2)) AS passes_gopher
-FROM t ORDER BY doc_id
-"""
-
-
-def dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact duplicate-substring spans (cleaning.duplicate_spans, n=5,
-    min_count=2 — Lee et al. 2022 ExactSubstr relational form): an 8-token
-    passage planted on every 5th doc must come back as a merged span
-    (4 dup grams, 8 covered tokens) wherever its context is unique; the
-    natural corpus duplication rides along. Spark counts gram xxhash64
-    values; DuckDB counts the gram STRINGS."""
-    from entitylinking_spark.operators.cleaning import duplicate_spans
-
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.when(F.col("doc_id") % 5 == 0,
-               F.concat(F.col("text"), F.lit(_SPAN_PLANT)))
-        .otherwise(F.col("text")).alias("text"),
-    )
-    out = duplicate_spans(d, n=5, min_count=2)
-    # raw double (not ROUND): one division of exact longs is bit-equal in
-    # both engines; ROUND diverges on exact .5 ties (Spark HALF_UP vs
-    # DuckDB half-even)
-    return out.select(
-        "doc_id", "n_tokens", "n_grams", "n_dup_grams", "n_spans",
-        "covered_tokens", "max_span_tokens", "dup_token_frac",
-    ).orderBy("doc_id")
-
-
-_SPAN_PLANT = " alpha beta gamma delta epsilon zeta eta theta"
-
-# 5-gram strings with 0-based positions (matches Spark's posexplode)
-_G5_POS_SQL = _G5_SQL.format(t="t")
-
-DUP_SPANS_SQL = f"""
-WITH d AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 5 = 0 THEN text || '{_SPAN_PLANT}'
-              ELSE text END AS text
-  FROM documents
-),
-dt AS (SELECT doc_id, {_TOKS_SQL} AS t FROM d),
-g AS (
-  SELECT doc_id,
-         unnest({_G5_POS_SQL}) AS gram,
-         unnest(range(0, len({_G5_POS_SQL}))) AS pos
-  FROM dt
-),
-fr AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2),
-dup AS (SELECT g.doc_id, g.pos FROM g JOIN fr USING (gram)),
-brk AS (
-  SELECT doc_id, pos,
-         CASE WHEN lag(pos) OVER w IS NULL OR pos - lag(pos) OVER w > 5
-              THEN 1 ELSE 0 END AS b
-  FROM dup WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-),
-grp AS (
-  SELECT doc_id, pos,
-         sum(b) OVER (PARTITION BY doc_id ORDER BY pos) AS gid
-  FROM brk
-),
-spans AS (
-  SELECT doc_id, gid, max(pos) - min(pos) + 5 AS toks, count(*) AS ng
-  FROM grp GROUP BY 1, 2
-),
-per AS (
-  SELECT doc_id, count(*) AS n_spans, sum(ng) AS n_dup,
-         sum(toks) AS covered, max(toks) AS mx
-  FROM spans GROUP BY 1
-)
-SELECT dt.doc_id,
-       len(t) AS n_tokens,
-       greatest(len(t) - 4, 0) AS n_grams,
-       COALESCE(per.n_dup, 0) AS n_dup_grams,
-       COALESCE(per.n_spans, 0) AS n_spans,
-       COALESCE(per.covered, 0) AS covered_tokens,
-       COALESCE(per.mx, 0) AS max_span_tokens,
-       (CASE WHEN len(t) > 0
-             THEN CAST(COALESCE(per.covered, 0) AS DOUBLE) / len(t)
-             ELSE 0.0 END) AS dup_token_frac
-FROM dt LEFT JOIN per USING (doc_id) ORDER BY doc_id
-"""
-
-
-def nfc_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unicode NFC normalization (cleaning.normalize_unicode): decomposed
-    accent sequences planted on every 4th doc (e + U+0301, A + U+0308)
-    must compose; DuckDB recomputes with nfc_normalize (both engines
-    implement UAX #15)."""
-    from entitylinking_spark.operators.cleaning import normalize_unicode
-
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.when(F.col("doc_id") % 4 == 0,
-               F.concat(F.col("text"),
-                        F.lit(" cafe\u0301 A\u0308B na\u00efve")))
-        .otherwise(F.col("text")).alias("text"),
-    )
-    return normalize_unicode(d, form="NFC").orderBy("doc_id")
-
-
-NFC_DOCS_SQL = """
-WITH d AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 4 = 0
-              THEN text || ' cafe' || chr(769) || ' A' || chr(776) ||
-                   'B na' || chr(239) || 've'
-              ELSE text END AS text
-  FROM documents
-)
-SELECT doc_id,
-       nfc_normalize(text) AS text_norm,
-       (nfc_normalize(text) <> text) AS changed
-FROM d ORDER BY doc_id
-"""
-
-
 def domain_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-domain document cap (mixing.cap_per_domain, cap=30 over the 5
     `source` domains of ~100 docs each at sf0.01): the two-level top-K
@@ -1237,58 +1001,6 @@ r AS (
 SELECT doc_id, domain, rk <= 30 AS keep,
        CASE WHEN rk <= 30 THEN rk ELSE -1 END AS rank_in_domain
 FROM r ORDER BY doc_id
-"""
-
-
-def snapshot_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus snapshot diff (cleaning.snapshot_diff): the 'new' snapshot
-    drops every 11th doc (removed), appends 20 fresh ids (added), and
-    edits every 13th doc's text (changed); everything else must report
-    unchanged, with both engines hashing the same sha256."""
-    from entitylinking_spark.operators.cleaning import snapshot_diff
-
-    d = _t(spark, sf_dir, "documents")
-    old = d.select("doc_id", "text")
-    new = (
-        d.filter(F.col("doc_id") % 11 != 0)
-        .select(
-            "doc_id",
-            F.when(F.col("doc_id") % 13 == 0,
-                   F.concat(F.col("text"), F.lit(" [edited]")))
-            .otherwise(F.col("text")).alias("text"),
-        )
-        .unionByName(
-            # orderBy before limit: a bare LIMIT is partition-order-
-            # dependent; the SQL twin also orders
-            d.orderBy("doc_id").limit(20).select(
-                (F.col("doc_id") + 1_000_000).alias("doc_id"),
-                F.lit("brand new doc").alias("text"),
-            )
-        )
-    )
-    return snapshot_diff(old, new).orderBy("doc_id")
-
-
-SNAPSHOT_DELTA_SQL = """
-WITH old AS (SELECT doc_id, sha256(text) AS s FROM documents),
-new AS (
-  SELECT doc_id,
-         sha256(CASE WHEN doc_id % 13 = 0 THEN text || ' [edited]'
-                     ELSE text END) AS s
-  FROM documents WHERE doc_id % 11 <> 0
-  UNION ALL
-  SELECT doc_id + 1000000, sha256('brand new doc')
-  FROM (SELECT doc_id FROM documents ORDER BY doc_id LIMIT 20)
-)
-SELECT COALESCE(old.doc_id, new.doc_id) AS doc_id,
-       CASE WHEN old.s IS NULL THEN 'added'
-            WHEN new.s IS NULL THEN 'removed'
-            WHEN old.s = new.s THEN 'unchanged'
-            ELSE 'changed' END AS status,
-       COALESCE(old.s, '') AS old_sha,
-       COALESCE(new.s, '') AS new_sha
-FROM old FULL OUTER JOIN new ON old.doc_id = new.doc_id
-ORDER BY doc_id
 """
 
 
@@ -2899,80 +2611,6 @@ GROUP BY t HAVING COUNT(*) >= 80 ORDER BY token
 """
 
 
-def doc_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sentence segmentation (cleaning.split_sentences): RE2-safe greedy
-    terminator runs, trimmed, empties dropped — DuckDB runs the identical
-    pattern and trim. The adapter that lets remove_duplicated_lines run
-    at C4's true (sentence) unit."""
-    from entitylinking_spark.operators.cleaning import split_sentences
-
-    d = _t(spark, sf_dir, "documents")
-    return split_sentences(d).orderBy("doc_id", "sent_id")
-
-
-DOC_SENTENCES_SQL = """
-WITH s AS (
-  SELECT doc_id,
-         list_filter(
-           list_transform(regexp_extract_all(text, '[^.!?]+[.!?]*'),
-                          x -> trim(x)),
-           x -> x <> '') AS sents
-  FROM documents
-)
-SELECT doc_id, CAST(i AS INT) AS sent_id, sents[i + 1] AS sentence
-FROM s, UNNEST(list_transform(range(len(sents)), x -> CAST(x AS INT))) u(i)
-ORDER BY doc_id, sent_id
-"""
-
-
-def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-window chunking (cleaning.chunk_documents): 24-token windows
-    every 16 tokens with the tail window always emitted — the context-
-    window prep for trainers/retrieval. Pure codegen expressions; DuckDB
-    recomputes every window (starts grid + off-grid tail, slices, space-
-    joined rebuild) verbatim."""
-    from entitylinking_spark.operators.cleaning import chunk_documents
-
-    d = _t(spark, sf_dir, "documents")
-    return chunk_documents(d, size=24, stride=16).orderBy(
-        "doc_id", "chunk_id"
-    )
-
-
-DOC_CHUNKS_SQL = """
-WITH tok AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(coalesce(text, '')),
-                                           '[^a-z0-9_]+'),
-                     t -> t <> '') AS ts
-  FROM documents
-),
-st AS (
-  SELECT doc_id, ts,
-         CASE
-           WHEN len(ts) <= 24 THEN [0]
-           WHEN (len(ts) - 24) % 16 = 0 THEN
-             list_transform(range(0, len(ts) - 24 + 1, 16),
-                            x -> CAST(x AS INT))
-           ELSE list_append(
-             list_transform(range(0, len(ts) - 24 + 1, 16),
-                            x -> CAST(x AS INT)),
-             CAST(len(ts) - 24 AS INT))
-         END AS starts
-  FROM tok
-)
-SELECT doc_id,
-       CAST(i AS INT) AS chunk_id,
-       starts[i + 1] AS chunk_start,
-       CAST(len(list_slice(ts, starts[i + 1] + 1, starts[i + 1] + 24))
-            AS INT) AS n_chunk_tokens,
-       array_to_string(list_slice(ts, starts[i + 1] + 1,
-                                  starts[i + 1] + 24), ' ') AS chunk_text
-FROM st, UNNEST(list_transform(range(len(starts)), x -> CAST(x AS INT))) u(i)
-ORDER BY doc_id, chunk_id
-"""
-
-
 def oov_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary-coverage check (vocab.oov_rate): per-doc OOV token share
     against the corpus's own top-200 vocabulary (total-ordered tf DESC,
@@ -3032,131 +2670,6 @@ SELECT d.doc_id,
 FROM documents d LEFT JOIN per p ON p.doc_id = d.doc_id
 ORDER BY d.doc_id
 """
-
-
-def url_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL filtering features + suffix blocklist (cleaning.url_features /
-    filter_blocked_domains) over deterministic synthetic URLs: schemes,
-    userinfo, ports, multi-label TLDs, empty paths and queries all occur.
-    DuckDB rebuilds the same URLs and re-runs the IDENTICAL RE2 regexes
-    and label-group suffix matching."""
-    from entitylinking_spark.operators.cleaning import (
-        filter_blocked_domains,
-        url_features,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    doc = F.col("doc_id")
-    url = F.concat(
-        F.when(doc % 3 == 0, F.lit("https://"))
-        .when(doc % 3 == 1, F.lit("http://"))
-        .otherwise(F.lit("ftp://")),
-        F.when(doc % 5 == 0, F.lit("user:pw@")).otherwise(F.lit("")),
-        F.lit("w"), (doc % 50).cast("string"), F.lit(".example."),
-        F.when(doc % 4 == 0, F.lit("com")).when(doc % 4 == 1, F.lit("org"))
-        .when(doc % 4 == 2, F.lit("co.uk")).otherwise(F.lit("net")),
-        F.when(doc % 6 == 0, F.lit(":8080")).otherwise(F.lit("")),
-        F.expr("repeat('/p', int(doc_id % 4))"),
-        F.when(doc % 2 == 0, F.lit("?q=1")).otherwise(F.lit("")),
-    )
-    base = d.select("doc_id", url.alias("url"))
-    bl = spark.createDataFrame(
-        [("example.com",), ("example.co.uk",)], "domain string"
-    )
-    feats = url_features(base)
-    blocked = filter_blocked_domains(base, bl).select("doc_id", "url_blocked")
-    return (
-        feats.join(blocked, "doc_id")
-        .select("doc_id", "scheme", "host", "domain", "tld",
-                "path_depth", "has_query", "url_blocked")
-        .orderBy("doc_id")
-    )
-
-
-URL_STATS_SQL = r"""
-WITH u AS (
-  SELECT doc_id, lower(trim(
-    CASE doc_id % 3 WHEN 0 THEN 'https://' WHEN 1 THEN 'http://'
-                    ELSE 'ftp://' END
-    || CASE WHEN doc_id % 5 = 0 THEN 'user:pw@' ELSE '' END
-    || 'w' || CAST(doc_id % 50 AS VARCHAR) || '.example.'
-    || CASE doc_id % 4 WHEN 0 THEN 'com' WHEN 1 THEN 'org'
-                       WHEN 2 THEN 'co.uk' ELSE 'net' END
-    || CASE WHEN doc_id % 6 = 0 THEN ':8080' ELSE '' END
-    || repeat('/p', CAST(doc_id % 4 AS INT))
-    || CASE WHEN doc_id % 2 = 0 THEN '?q=1' ELSE '' END
-  )) AS url FROM documents
-),
-g AS (
-  SELECT doc_id, url,
-    regexp_extract(url, '^([a-z][a-z0-9+.-]*)://', 1) AS scheme,
-    regexp_replace(regexp_replace(
-      regexp_extract(url, '^[a-z][a-z0-9+.-]*://([^/?#]+)', 1),
-      '^[^@]*@', '', 'g'), ':[0-9]+$', '', 'g') AS host,
-    regexp_extract(url, '^[a-z][a-z0-9+.-]*://[^/?#]+([^?#]*)', 1) AS path
-  FROM u
-),
-h AS (
-  SELECT doc_id, url, scheme, host, path,
-         string_split(host, '.') AS sp
-  FROM g
-)
-SELECT doc_id, scheme, host,
-  regexp_extract(host, '([a-z0-9-]+\.[a-z0-9-]+)$', 1) AS domain,
-  regexp_extract(host, '\.([a-z0-9-]+)$', 1) AS tld,
-  CAST(len(list_filter(string_split(path, '/'), x -> x <> '')) AS INT)
-    AS path_depth,
-  contains(url, '?') AS has_query,
-  len(list_filter(
-    list_transform([2, 3, 4], k ->
-      CASE WHEN len(sp) >= k
-           THEN array_to_string(list_slice(sp, len(sp) - k + 1, len(sp)), '.')
-      END),
-    s -> s IN ('example.com', 'example.co.uk'))) > 0 AS url_blocked
-FROM h ORDER BY doc_id
-"""
-
-
-def html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HTML -> text extraction (cleaning.html_to_text): every document is
-    wrapped in deterministic markup (script/style/comment/entities/block
-    tags) and stripped back; DuckDB runs the IDENTICAL RE2-safe
-    regexp_replace chain (html_passes_sql), so the values are bit-equal.
-    The chain is one codegen column expression — zero shuffles."""
-    from entitylinking_spark.operators.cleaning import html_to_text
-
-    d = _t(spark, sf_dir, "documents")
-    html = F.concat(
-        F.lit('<html><head><style>p{margin:0}</style><script>var id="'),
-        F.col("doc_id").cast("string"),
-        F.lit('";</script></head><body><h1>Doc '),
-        F.col("doc_id").cast("string"),
-        F.lit("</h1><p>"),
-        F.col("text"),
-        F.lit('</p><!-- hidden --><div>tail &amp;lt;x&gt; '
-              "&quot;quoted&#39;s&quot;&nbsp;end</div></body></html>"),
-    )
-    out = html_to_text(d.withColumn("text", html))
-    return out.select("doc_id", "text_plain").orderBy("doc_id")
-
-
-def _html_extract_sql() -> str:
-    from entitylinking_spark.operators.cleaning import html_passes_sql
-
-    expr = (
-        "'<html><head><style>p{margin:0}</style><script>var id=\"' || "
-        "CAST(doc_id AS VARCHAR) || '\";</script></head><body><h1>Doc ' || "
-        "CAST(doc_id AS VARCHAR) || '</h1><p>' || text || "
-        "'</p><!-- hidden --><div>tail &amp;lt;x&gt; "
-        "&quot;quoted&#39;s&quot;&nbsp;end</div></body></html>'"
-    )
-    return (
-        "SELECT doc_id, " + html_passes_sql(expr)
-        + " AS text_plain FROM documents ORDER BY doc_id"
-    )
-
-
-HTML_EXTRACT_SQL = _html_extract_sql()
 
 
 def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3573,24 +3086,15 @@ _ORACLE_CHECKED: dict[str, tuple[Callable, str]] = {
     "vocab_topk": (vocab_topk, VOCAB_TOPK_SQL),
     "pmi_bigrams": (pmi_bigrams, PMI_BIGRAMS_SQL),
     "corpus_length_profile": (corpus_length_profile, LENGTH_PROFILE_SQL),
-    "c4_line_dedup": (c4_line_dedup, C4_LINE_DEDUP_SQL),
-    "gopher_docs": (gopher_docs, GOPHER_DOCS_SQL),
-    "dup_spans": (dup_spans, DUP_SPANS_SQL),
-    "nfc_docs": (nfc_docs, NFC_DOCS_SQL),
     "embedding_moments": (embedding_moments, EMBEDDING_MOMENTS_SQL),
     "budget_select": (budget_select, BUDGET_SELECT_SQL),
     "cluster_reps": (cluster_reps, CLUSTER_REPS_SQL),
-    "snapshot_delta": (snapshot_delta, SNAPSHOT_DELTA_SQL),
     "domain_caps": (domain_caps, DOMAIN_CAPS_SQL),
     "semdedup_docs": (semdedup_docs, SEMDEDUP_SQL),
     "resize_thumbs": (resize_thumbs, RESIZE_THUMBS_SQL),
     "bpe_pair_counts": (bpe_pair_counts, BPE_PAIR_COUNTS_SQL),
-    "html_extract": (html_extract, HTML_EXTRACT_SQL),
-    "url_stats": (url_stats, URL_STATS_SQL),
     "oov_docs": (oov_docs, OOV_DOCS_SQL),
     "hard_negatives_probe": (hard_negatives_probe, HARD_NEG_SQL),
-    "doc_chunks": (doc_chunks, DOC_CHUNKS_SQL),
-    "doc_sentences": (doc_sentences, DOC_SENTENCES_SQL),
     "heavy_tokens": (heavy_tokens, HEAVY_TOKENS_SQL),
     "tfidf_terms": (tfidf_terms, TFIDF_TERMS_SQL),
 }

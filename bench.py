@@ -251,36 +251,6 @@ def run_bench(sf_dir: str, cpus: int, repetitions: int = 1) -> dict:
 
     timed("dup_audit", dup_audit_run)
 
-    # C4 line dedup (cross-doc, text rebuilt) + Gopher rule gate
-    def line_dedup_run():
-        from entitylinking_spark.operators.cleaning import (
-            remove_duplicated_lines,
-        )
-
-        return remove_duplicated_lines(docs, min_docs=3).agg(
-            F.sum("n_dropped"), F.sum(F.length("text_clean"))).collect()
-
-    timed("line_dedup", line_dedup_run)
-
-    def gopher_run():
-        from entitylinking_spark.operators.cleaning import gopher_rules
-
-        return gopher_rules(docs).agg(
-            F.sum(F.col("passes_gopher").cast("long")),
-            F.sum("n_words")).collect()
-
-    timed("gopher", gopher_run)
-
-    # exact duplicate-substring spans (Lee et al. ExactSubstr): one Arrow
-    # gram pass + two window shuffles + closed-form totals
-    def dup_spans_run():
-        from entitylinking_spark.operators.cleaning import duplicate_spans
-
-        return duplicate_spans(docs, n=5).agg(
-            F.sum("covered_tokens"), F.sum("n_spans")).collect()
-
-    timed("dup_spans", dup_spans_run)
-
     # token-budget selection: the histogram-quickselect driver loop
     # (small max_boundary forces the recursion rounds, not just a window)
     def budget_run():

@@ -219,34 +219,6 @@ def main():
             F.sum("n_dup_grams"), F.sum("dup_fraction")).collect()
         return time.time() - t0
 
-    @reg("line_dedup")
-    def line_dedup_run():
-        from entitylinking_spark.operators.cleaning import remove_duplicated_lines
-
-        t0 = time.time()
-        remove_duplicated_lines(docs, min_docs=3).agg(
-            F.sum("n_dropped"), F.sum(F.length("text_clean"))).collect()
-        return time.time() - t0
-
-    @reg("gopher")
-    def gopher_run():
-        from entitylinking_spark.operators.cleaning import gopher_rules
-
-        t0 = time.time()
-        gopher_rules(docs).agg(
-            F.sum(F.col("passes_gopher").cast("long")), F.sum("n_words")
-        ).collect()
-        return time.time() - t0
-
-    @reg("dup_spans")
-    def dup_spans_run():
-        from entitylinking_spark.operators.cleaning import duplicate_spans
-
-        t0 = time.time()
-        duplicate_spans(docs, n=5).agg(
-            F.sum("covered_tokens"), F.sum("n_spans")).collect()
-        return time.time() - t0
-
     @reg("budget_select")
     def budget_run():
         from entitylinking_spark.operators.mixing import select_under_token_budget

@@ -83,30 +83,6 @@ def make_gram_hash_udf(n: int):
     return gram_hashes
 
 
-def make_pos_gram_hash_udf(n: int):
-    """Arrow kernel: text -> array<long> of token n-gram hashes IN TOKEN
-    ORDER (duplicates kept): posexplode over the result yields the same
-    (position, gram) stream as ngram_tokens, in siphash space — the
-    positional counterpart of make_gram_hash_udf for operators that need
-    gram offsets (cleaning.duplicate_spans). Rows with fewer than n
-    tokens return an EMPTY array."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def pos_gram_hashes(text: pd.Series) -> pd.Series:
-        if len(text) == 0:
-            return pd.Series([], dtype=object)
-        tok_lists, base, bounds = row_gram_segments(text, n)
-        empty = np.empty(0, dtype=np.int64)
-        out = [
-            empty if len(tl) < n
-            else base[bounds[i]:bounds[i + 1]].view(np.int64)
-            for i, tl in enumerate(tok_lists)
-        ]
-        return pd.Series(out)
-
-    return pos_gram_hashes
-
-
 def _gram_hashes(df: DataFrame, id_col: str, text_col: str, n: int,
                  out: str, kernel: str = "arrow") -> DataFrame:
     """(id, text) -> (id, gram hash) with per-document distinct grams.

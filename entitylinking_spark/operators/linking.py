@@ -25,8 +25,8 @@ from entitylinking_spark.functions.strings import name_match_score, tokenize
 
 
 def candidate_channels(mentions: DataFrame, entities: DataFrame,
-                       top_k: int = 10, num_perm: int = 32,
-                       num_bands: int = 8, use_bm25: bool = False,
+                       num_perm: int = 32, num_bands: int = 8,
+                       use_bm25: bool = False,
                        token_df_cutoff: float = 0.25,
                        token_df_min: int = 50,
                        name_df_cutoff: float = 0.25,

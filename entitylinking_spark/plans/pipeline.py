@@ -114,7 +114,6 @@ def _census(files: DataFrame, cfg: ERConfig):
 class _Core(NamedTuple):
     clusters: DataFrame
     scored: DataFrame
-    n_pairs: int | None  # None when pairs_scored was resumed from a stage
     persisted: list
     observations: dict  # blocks / pairs_scored / clusters -> Observation
 
@@ -155,19 +154,12 @@ def _resolve_core(keyed: DataFrame, content: DataFrame, cfg: ERConfig,
     # ---- blocking + census + salted pair join over representatives ------
     blocks = stage("blocks", lambda: block_candidates(rep_rows, cfg))  # carries is_new
     census = block_census(blocks)
-    n_pairs = None
     obs = {k: Observation() for k in ("blocks", "pairs_scored", "clusters")}
 
     def compute_scored() -> DataFrame:
-        nonlocal n_pairs
-        # the scorer fans out into THREE union branches (pruned / equal-name
-        # fast path / JW survivors); unpersisted, each branch would re-run
-        # the whole block self-join + dedup. The pair list is slim (two ids
-        # + block key) — persist and materialize once.
+        # read once, into score_pairs' featured-pair checkpoint: no persist
         pairs = candidate_pairs(blocks, cfg, census=census,
-                                observation=obs["blocks"]).persist()
-        persisted.append(pairs)
-        n_pairs = pairs.count()
+                                observation=obs["blocks"])
         # score_pairs emits jw_evaluated itself (ADVICE r3: the band
         # predicate lives in ONE place)
         return score_pairs(pairs, rep_rows, cfg, content_df=content).observe(
@@ -192,7 +184,7 @@ def _resolve_core(keyed: DataFrame, content: DataFrame, cfg: ERConfig,
         # only prior star edges can repeat one
         assume_distinct=prior_edges is None, observation=obs["clusters"],
     ))
-    return _Core(clusters, scored, n_pairs, persisted, obs)
+    return _Core(clusters, scored, persisted, obs)
 
 
 def resolve(

@@ -97,18 +97,6 @@ def test_mixing_vocab_empty_and_single(spark):
     assert len(prof) == 1 and prof[0]["p50"] == 22
 
 
-def test_duplicate_spans_empty_and_single(spark):
-    from entitylinking_spark.operators.cleaning import duplicate_spans
-
-    empty = spark.createDataFrame([], DOC_SCHEMA).select("doc_id", "text")
-    assert duplicate_spans(empty, n=3).count() == 0
-    assert duplicate_spans(empty, n=3, emit="spans").count() == 0
-    one = spark.createDataFrame([(1, "only one doc here")],
-                                ["doc_id", "text"])
-    rows = duplicate_spans(one, n=3).collect()
-    assert len(rows) == 1 and rows[0]["n_spans"] == 0
-
-
 def test_cap_per_domain_empty(spark):
     from entitylinking_spark.operators.mixing import cap_per_domain
 

@@ -16,9 +16,9 @@ from entitylinking_spark.synthdata import generate_repo_files
 
 CFG = ERConfig(suppress_shingle_df=None)
 
-MAX_JOBS_RESOLVE = 32
-MAX_JOBS_FIRST_FOLD = 31
-MAX_JOBS_LATER_FOLD = 32
+MAX_JOBS_RESOLVE = 29
+MAX_JOBS_FIRST_FOLD = 28
+MAX_JOBS_LATER_FOLD = 29
 
 
 def _in_group(sc, group, fn):

@@ -116,13 +116,6 @@ def main():
 
     builders["dup_audit"] = dup_audit
 
-    def gopher():
-        from entitylinking_spark.operators.cleaning import gopher_rules
-
-        return gopher_rules(docs)
-
-    builders["gopher"] = gopher
-
     def decontam():
         from entitylinking_spark.operators.decontam import decontaminate
 
@@ -133,20 +126,6 @@ def main():
         return decontaminate(docs, bench, n=5)
 
     builders["decontam"] = decontam
-
-    def dup_spans():
-        from entitylinking_spark.operators.cleaning import duplicate_spans
-
-        return duplicate_spans(docs, n=5)
-
-    builders["dup_spans"] = dup_spans
-
-    def line_dedup():
-        from entitylinking_spark.operators.cleaning import remove_duplicated_lines
-
-        return remove_duplicated_lines(docs, min_docs=3)
-
-    builders["line_dedup"] = line_dedup
 
     def assemble():
         from entitylinking_spark.operators.mixing import (

@@ -771,239 +771,6 @@ ORDER BY d.doc_id
 """
 
 
-def decontam_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LLM-pipeline benchmark decontamination (decontam.decontaminate,
-    GPT-3 Appendix C n-gram collision rule at n=5): the benchmark is the
-    first 200 chars of every 37th document, so contamination is planted by
-    construction and the flag is value-checked. Spark matches gram
-    xxhash64 values; DuckDB matches the gram STRINGS — identical results
-    absent a 64-bit collision (none at this scale)."""
-    from entitylinking_spark.operators.decontam import decontaminate
-
-    d = _t(spark, sf_dir, "documents")
-    bench = d.filter(F.col("doc_id") % 37 == 0).select(
-        F.col("doc_id").alias("bench_id"),
-        F.substring("text", 1, 200).alias("text"),
-    )
-    return decontaminate(d, bench, n=5).orderBy("doc_id")
-
-
-# 5-gram list over the shared tokenizer; empty when < 5 tokens
-# (generate_series(1, n) is empty for n < 1, matching ngram_tokens)
-_G5_SQL = ("list_transform(generate_series(1, len({t}) - 4), "
-           "i -> array_to_string({t}[i:i+4], ' '))")
-
-DECONTAM_SQL = f"""
-WITH bt AS (
-  SELECT {_TOKS_SQL.replace('text', 'substr(text, 1, 200)')} AS t
-  FROM documents WHERE doc_id % 37 = 0
-),
-bg AS (SELECT DISTINCT unnest({_G5_SQL.format(t='t')}) AS gram FROM bt),
-dt AS (SELECT doc_id, {_TOKS_SQL} AS t FROM documents),
-dg AS (
-  SELECT DISTINCT doc_id, gram FROM (
-    SELECT doc_id, unnest({_G5_SQL.format(t='t')}) AS gram FROM dt
-  )
-),
-hits AS (
-  SELECT doc_id, count(*) AS bench_hits
-  FROM dg JOIN bg USING (gram) GROUP BY 1
-)
-SELECT d.doc_id,
-       COALESCE(h.bench_hits, 0) AS bench_hits,
-       COALESCE(h.bench_hits, 0) >= 1 AS contaminated
-FROM documents d LEFT JOIN hits h ON d.doc_id = h.doc_id
-ORDER BY d.doc_id
-"""
-
-
-def split_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LLM-pipeline deterministic split assignment (decontam.split_assign):
-    seeded md5-bucket train/val/test bands. Weights are binary-exact
-    (0.75/0.125/0.125) so the cumulative thresholds are the same doubles
-    in both engines; the bucket is an exact power-of-two division of the
-    60-bit md5 hash (relhash.md5_hash60 twin)."""
-    from entitylinking_spark.operators.decontam import split_assign
-
-    d = _t(spark, sf_dir, "documents")
-    return split_assign(
-        d, weights={"train": 0.75, "val": 0.125, "test": 0.125}, seed="v1"
-    ).orderBy("doc_id")
-
-
-SPLIT_DOCS_SQL = f"""
-WITH b AS (
-  SELECT doc_id,
-         CAST({_H60_SQL.format(x="'v1:' || CAST(doc_id AS VARCHAR)")} AS DOUBLE)
-           / 1152921504606846976.0 AS bucket
-  FROM documents
-)
-SELECT doc_id,
-       CASE WHEN bucket < 0.75 THEN 'train'
-            WHEN bucket < 0.875 THEN 'val'
-            ELSE 'test' END AS split
-FROM b ORDER BY doc_id
-"""
-
-
-def mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dataset-assembly temperature mixing (mixing.domain_mix_weights,
-    alpha=0.3): per-source sampling weights w_d = n_d^a / sum n^a and the
-    oversample factor vs natural share. Both engines evaluate the same
-    pow/sum doubles; outputs rounded to 6."""
-    from entitylinking_spark.operators.mixing import domain_mix_weights
-
-    d = _t(spark, sf_dir, "documents")
-    out = domain_mix_weights(d, domain_col="source", alpha=0.3)
-    return out.select(
-        "domain", "n_docs", "size",
-        _duck_round(F.col("weight"), 6).alias("weight_r"),
-        _duck_round(F.col("oversample"), 6).alias("oversample_r"),
-    ).orderBy("domain")
-
-
-MIX_WEIGHTS_SQL = """
-WITH d AS (
-  SELECT source AS domain, count(*) AS n_docs,
-         CAST(count(*) AS DOUBLE) AS size
-  FROM documents GROUP BY 1
-),
-t AS (SELECT sum(pow(size, 0.3)) AS tp, sum(size) AS ts FROM d)
-SELECT domain, n_docs, size,
-       ROUND(pow(size, 0.3) / tp, 6) AS weight_r,
-       ROUND((pow(size, 0.3) / tp) / (size / ts), 6) AS oversample_r
-FROM d, t ORDER BY domain
-"""
-
-
-def sample_strata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic stratified sampling (mixing.stratified_sample): keep
-    iff the seeded 60-bit md5 band falls under the stratum's rate — the
-    same exact-double band construction split_docs proves, per-stratum.
-    Map-side only; zero shuffle; stable under appends."""
-    from entitylinking_spark.operators.mixing import stratified_sample
-
-    d = _t(spark, sf_dir, "documents")
-    out = stratified_sample(
-        d, strata_col="lang",
-        fractions={"en": 1.0, "de": 0.5, "zh": 0.25},
-        default_fraction=0.1, seed="s1",
-    )
-    return out.select("doc_id", "lang", "source").orderBy("doc_id")
-
-
-SAMPLE_STRATA_SQL = f"""
-SELECT doc_id, lang, source FROM documents
-WHERE CAST({_H60_SQL.format(x="'s1:' || CAST(doc_id AS VARCHAR)")} AS DOUBLE)
-        / 1152921504606846976.0
-      < CASE lang WHEN 'en' THEN 1.0 WHEN 'de' THEN 0.5
-                  WHEN 'zh' THEN 0.25 ELSE 0.1 END
-ORDER BY doc_id
-"""
-
-
-def pack_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Concat-and-chunk packing (mixing.pack_sequences): every doc's
-    (shard, window index, start offset, straddle flag) in 4 sharded
-    128-token streams. All-integer arithmetic (60-bit md5 order hash,
-    long cumsum window, integer div) — bit-exact across engines."""
-    from entitylinking_spark.operators.mixing import pack_sequences
-
-    d = _t(spark, sf_dir, "documents")
-    return pack_sequences(d, budget=128, n_shards=4, seed="p1").orderBy("doc_id")
-
-
-PACK_DOCS_SQL = f"""
-WITH s AS (
-  SELECT doc_id,
-         {_H60_SQL.format(x="'p1:' || CAST(doc_id AS VARCHAR)")} AS h,
-         len({_TOKS_SQL}) AS n_tokens
-  FROM documents
-),
-o AS (
-  SELECT doc_id, CAST(h % 4 AS INT) AS shard, n_tokens,
-         COALESCE(SUM(n_tokens) OVER (
-           PARTITION BY h % 4 ORDER BY h, doc_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
-  FROM s
-)
-SELECT doc_id, shard,
-       off // 128 AS pack_id,
-       off % 128 AS pack_pos,
-       n_tokens,
-       (n_tokens > 0 AND
-        (off + greatest(n_tokens, 1) - 1) // 128 <> off // 128) AS straddles
-FROM o ORDER BY doc_id
-"""
-
-
-def dup_ngram_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cross-document duplication audit (mixing.duplicated_ngram_stats,
-    n=5, min_docs=2): per doc, the share of its distinct 5-grams appearing
-    in >= 2 docs. Spark counts gram xxhash64 values; DuckDB counts the
-    gram STRINGS — identical absent a 64-bit collision (none at sf0.01)."""
-    from entitylinking_spark.operators.mixing import duplicated_ngram_stats
-
-    d = _t(spark, sf_dir, "documents")
-    out = duplicated_ngram_stats(d, n=5, min_docs=2)
-    return out.select(
-        "doc_id", "n_grams", "n_dup_grams",
-        _duck_round(F.col("dup_fraction"), 6).alias("dup_fraction_r"),
-    ).orderBy("doc_id")
-
-
-DUP_NGRAM_SQL = f"""
-WITH dt AS (SELECT doc_id, {_TOKS_SQL} AS t FROM documents),
-dg AS (
-  SELECT DISTINCT doc_id, gram FROM (
-    SELECT doc_id, unnest({_G5_SQL.format(t='t')}) AS gram FROM dt
-  )
-),
-freq AS (SELECT gram FROM dg GROUP BY gram HAVING count(*) >= 2),
-per AS (
-  SELECT dg.doc_id, count(*) AS n_grams,
-         sum(CASE WHEN f.gram IS NOT NULL THEN 1 ELSE 0 END) AS n_dup
-  FROM dg LEFT JOIN freq f ON dg.gram = f.gram GROUP BY 1
-)
-SELECT d.doc_id,
-       COALESCE(p.n_grams, 0) AS n_grams,
-       COALESCE(p.n_dup, 0) AS n_dup_grams,
-       ROUND(CASE WHEN COALESCE(p.n_grams, 0) = 0 THEN 0.0
-                  ELSE CAST(p.n_dup AS DOUBLE) / p.n_grams END, 6)
-         AS dup_fraction_r
-FROM documents d LEFT JOIN per p ON d.doc_id = p.doc_id
-ORDER BY d.doc_id
-"""
-
-
-def domain_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-domain document cap (mixing.cap_per_domain, cap=30 over the 5
-    `source` domains of ~100 docs each at sf0.01): the two-level top-K
-    must equal DuckDB's single global row_number() over (domain, seeded
-    md5 order) — keep flag AND exact rank for every kept doc."""
-    from entitylinking_spark.operators.mixing import cap_per_domain
-
-    d = _t(spark, sf_dir, "documents")
-    return cap_per_domain(d, cap=30, seed="c1", n_buckets=8).orderBy("doc_id")
-
-
-DOMAIN_CAPS_SQL = f"""
-WITH h AS (
-  SELECT doc_id, source AS domain,
-         {_H60_SQL.format(x="'c1:' || CAST(doc_id AS VARCHAR)")} AS hh
-  FROM documents
-),
-r AS (
-  SELECT doc_id, domain,
-         row_number() OVER (PARTITION BY domain ORDER BY hh, doc_id) AS rk
-  FROM h
-)
-SELECT doc_id, domain, rk <= 30 AS keep,
-       CASE WHEN rk <= 30 THEN rk ELSE -1 END AS rank_in_domain
-FROM r ORDER BY doc_id
-"""
-
-
 def cluster_reps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Policy-based cluster representatives (dedup.cluster_representatives,
     policy = LONGEST doc, ties min id): clusters are a synthetic
@@ -1033,48 +800,6 @@ SELECT a.doc_id, a.cluster_id, r.rep_id,
        (a.doc_id = r.rep_id) AS is_rep
 FROM a JOIN r ON a.cluster_id = r.cluster_id AND r.rk = 1
 ORDER BY a.doc_id
-"""
-
-
-def budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Greedy data selection under a global token budget
-    (mixing.select_under_token_budget, budget=20000, bins=16,
-    max_boundary=50 so the histogram-quickselect recursion is exercised,
-    not just the final window): keep flags must equal DuckDB's
-    single-window cumulative sum over (quality DESC, doc_id). Quality is
-    the seeded md5 band (exact double division both sides); tokens are
-    the shared tokenizer count."""
-    from entitylinking_spark.operators.mixing import (
-        sample_hash, select_under_token_budget,
-    )
-    from entitylinking_spark.operators.textstats import tokenize
-
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        sample_hash("doc_id", "qb").alias("quality"),
-        F.size(tokenize("text")).cast("long").alias("n_tokens"),
-    )
-    out = select_under_token_budget(
-        d, 20_000, bins=16, max_boundary=50, max_rounds=8)
-    return out.select("doc_id", "quality", "tokens", "keep").orderBy("doc_id")
-
-
-BUDGET_SELECT_SQL = f"""
-WITH d AS (
-  SELECT doc_id,
-         CAST({_H60_SQL.format(x="'qb:' || CAST(doc_id AS VARCHAR)")}
-              AS DOUBLE) / 1152921504606846976 AS quality,
-         CAST(len({_TOKS_SQL}) AS BIGINT) AS tokens
-  FROM documents
-),
-r AS (
-  SELECT doc_id, quality, tokens,
-         sum(tokens) OVER (ORDER BY quality DESC, doc_id
-                           ROWS UNBOUNDED PRECEDING) AS cum
-  FROM d
-)
-SELECT doc_id, quality, tokens, (cum <= 20000) AS keep
-FROM r ORDER BY doc_id
 """
 
 
@@ -3077,19 +2802,11 @@ _ORACLE_CHECKED: dict[str, tuple[Callable, str]] = {
     # value-checked end to end through the mapInPandas plumbing
     "media_features_demo": (media_features_demo, MEDIA_FEATURES_SQL),
     "linking_channels": (linking_channels, LINKING_CHANNELS_SQL),
-    "decontam_docs": (decontam_docs, DECONTAM_SQL),
-    "split_docs": (split_docs, SPLIT_DOCS_SQL),
-    "mix_weights": (mix_weights, MIX_WEIGHTS_SQL),
-    "sample_strata": (sample_strata, SAMPLE_STRATA_SQL),
-    "pack_docs": (pack_docs, PACK_DOCS_SQL),
-    "dup_ngram_audit": (dup_ngram_audit, DUP_NGRAM_SQL),
     "vocab_topk": (vocab_topk, VOCAB_TOPK_SQL),
     "pmi_bigrams": (pmi_bigrams, PMI_BIGRAMS_SQL),
     "corpus_length_profile": (corpus_length_profile, LENGTH_PROFILE_SQL),
     "embedding_moments": (embedding_moments, EMBEDDING_MOMENTS_SQL),
-    "budget_select": (budget_select, BUDGET_SELECT_SQL),
     "cluster_reps": (cluster_reps, CLUSTER_REPS_SQL),
-    "domain_caps": (domain_caps, DOMAIN_CAPS_SQL),
     "semdedup_docs": (semdedup_docs, SEMDEDUP_SQL),
     "resize_thumbs": (resize_thumbs, RESIZE_THUMBS_SQL),
     "bpe_pair_counts": (bpe_pair_counts, BPE_PAIR_COUNTS_SQL),

@@ -3,11 +3,11 @@
 Spec-built encoders (netpbm P6, 24-bit BMP, PNG with a chosen scanline
 filter, 16-bit PCM WAV) plus one embedded baseline JPEG produced by an
 EXTERNAL encoder (Java ImageIO — this repo deliberately ships no JPEG
-encoder). Used by tools/bench_media.py and the bench.py media_decode row
-to measure decode throughput through operators/multimodal.extract_features
-(round-4 verdict #5). The tests keep their own independent copies of these
-encoders (tests/test_media_decoders.py) so decoder round-trip tests do not
-share code with what they test; external anchoring lives in
+encoder). Built to measure decode throughput through
+operators/multimodal.extract_features (round-4 verdict #5). The tests
+keep their own independent copies of these encoders
+(tests/test_media_decoders.py) so decoder round-trip tests do not share
+code with what they test; external anchoring lives in
 tests/test_golden_decoders.py.
 """
 

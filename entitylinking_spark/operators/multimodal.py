@@ -181,7 +181,7 @@ def decode_png(data: bytes) -> np.ndarray:
         # wraps -> one cumsum, ~340 MB/s); Average/Paeth keep their true
         # left-pixel dependency chain but run on python ints over lists
         # (numpy scalar indexing boxes every element — the lists are
-        # ~3.5x/3x faster). tools/bench_media.py records the MB/s.
+        # ~3.5x/3x faster). NOTES.md records the per-filter MB/s.
         if ftype == 0:  # None
             cur = line
         elif ftype == 1:  # Sub: recon[x] = line[x] + recon[x-bpp]
@@ -227,8 +227,8 @@ def _lzw_decode(data: bytes, min_code_size: int, expected: int) -> np.ndarray:
     12-bit cap with deferred-clear tolerance) -> uint8 index array.
 
     Per-code Python loop — the same documented throughput ceiling as the
-    PNG Paeth filter and the JPEG bit reader (tools/bench_media.py
-    records the MB/s)."""
+    PNG Paeth filter and the JPEG bit reader (NOTES.md records the
+    MB/s)."""
     clear = 1 << min_code_size
     eoi = clear + 1
     base = [bytes([i]) for i in range(clear)] + [b"", b""]

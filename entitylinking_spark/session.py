@@ -44,13 +44,14 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # big `content` strings: small Arrow batches are a measured 2x on
-        # the keys stage (round-5 keys_probe, 200k rows local[8]: batch
+        # the keys stage (round-5 probe, 200k rows local[8]: batch
         # 10000 = 16.3 s, 2000 = 8.1 s, 1000 = 7.6 s, 20000 = 28.0 s) —
         # 10000-row batches of multi-KB docs are ~20 MB per transfer and
         # thrash the worker's cache/memory bus; 2000 (~4 MB) is the knee.
         # Full-pipeline effect at 200k: -12% wall, identical pair counts.
         # (SURVEY.md §7 names this pitfall; JVM-side pre-tokenization was
-        # also measured and is 8-17x WORSE — see tools/keys_probe.py.)
+        # also measured and is 8-17x WORSE — see the keys-stage record
+        # in BASELINE.md's round-5 results.)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2000")
         .config("spark.sql.session.timeZone", "UTC")
         # local scans of medium parquet otherwise yield too few partitions

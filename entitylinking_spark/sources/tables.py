@@ -95,50 +95,3 @@ def is_exchange_free(df: DataFrame) -> bool:
         for line in plan.splitlines()
     )
 
-
-def write_training_shards(df: DataFrame, path: str, n_shards: int,
-                          id_col: str = "doc_id",
-                          seed: str = "sh1",
-                          max_records_per_file: int | None = None,
-                          mode: str = "overwrite") -> None:
-    """The last-mile trainer sink: write `df` as `n_shards` deterministic
-    parquet shard directories (shard=K/...), rows hash-assigned and
-    hash-ordered WITHIN each shard.
-
-    Properties a training loader wants that a plain `df.write` lacks:
-      * shard assignment is a seeded md5 band of the id — stable under
-        repartitioning and re-runs, so shard K always holds the same
-        docs (resumable preprocessing, reproducible epochs);
-      * within-shard order is the same seeded hash (id tie-break) — a
-        deterministic global shuffle of the corpus, so readers stream
-        shards sequentially and still see hash-mixed (i.i.d.-ish) data,
-        no trainer-side shuffle buffer needed;
-      * `max_records_per_file` caps file size so loaders get many
-        evenly-sized files per shard to parallelize over.
-
-    One repartition (by shard) + within-partition sort — no global sort,
-    no single-reducer stage, any corpus size. Reference analogue: the
-    reference materializes eval corpora as ad-hoc JSON dumps
-    (/root/reference/OneNet/data_process.py:137-239); this is the
-    deterministic sharded restatement.
-    """
-    from pyspark.sql import functions as F
-
-    from entitylinking_spark.functions.relhash import md5_hash60
-
-    if n_shards <= 0:
-        raise ValueError("n_shards must be positive")
-    h = md5_hash60(
-        F.concat(F.lit(seed + ":"), F.col(id_col).cast("string"))
-    )
-    staged = (
-        df.withColumn("_h", h)
-        .withColumn("shard", F.pmod("_h", F.lit(n_shards)).cast("int"))
-        .repartition(n_shards, F.col("shard"))
-        .sortWithinPartitions("shard", "_h", id_col)
-        .drop("_h")
-    )
-    w = staged.write.format("parquet").mode(mode).partitionBy("shard")
-    if max_records_per_file:
-        w = w.option("maxRecordsPerFile", int(max_records_per_file))
-    w.save(path)

@@ -19,8 +19,10 @@ from entitylinking_spark.functions.parsing import (
 )
 from entitylinking_spark.sources.readers import (
     merge_shards_first_seen,
+    read_entities,
     read_json_array_or_lines,
     read_mentions,
+    write_jsonl,
 )
 
 
@@ -128,6 +130,21 @@ class TestReaders:
         want = [(f.name, f.dataType) for f in schemas.MENTIONS.fields]
         assert got == want
         assert df.count() == 1
+
+    def test_write_jsonl_read_entities_roundtrip(self, spark, tmp_path):
+        rows = [("d1", "Ada", "first doc", "c"),
+                ("d2", None, "second doc", "c"),
+                ("d3", "Cy", None, "c"),
+                ("d4", "Di", "fourth doc", None)]
+        out = str(tmp_path / "entities")
+        write_jsonl(spark.createDataFrame(rows, schemas.ENTITIES), out)
+        df = read_entities(spark, out)
+        got = [(f.name, f.dataType) for f in df.schema.fields]
+        want = [(f.name, f.dataType) for f in schemas.ENTITIES.fields]
+        assert got == want
+        # null fields are dropped by the JSON writer and read back as null
+        assert sorted(tuple(r) for r in df.collect()) == rows
+        assert read_entities(spark, out, max_documents=2).count() == 2
 
     def test_json_array_or_lines(self, spark, tmp_path):
         arr = tmp_path / "a.json"

@@ -112,43 +112,3 @@ def test_validation(spark, frames):
     with pytest.raises(ValueError):
         save_partitioned(left, "t_bad", [])
 
-
-def test_write_training_shards(spark, tmp_path):
-    import hashlib
-
-    from entitylinking_spark.sources.tables import write_training_shards
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    out = str(tmp_path / "shards")
-    write_training_shards(docs, out, n_shards=4, max_records_per_file=20)
-
-    back = spark.read.parquet(out)
-    assert back.count() == docs.count()
-    # deterministic assignment: shard == seeded md5 band, independent of
-    # partitioning and re-runs
-    def h60(s):
-        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-    for r in back.select("doc_id", "shard").collect():
-        assert r["shard"] == h60(f"sh1:{r['doc_id']}") % 4
-    # within-shard files are hash-ordered: reading one shard's files in
-    # order yields ascending hash
-    import glob
-    for k in range(4):
-        files = sorted(glob.glob(f"{out}/shard={k}/*.parquet"))
-        assert files, f"shard {k} missing"
-        ids = []
-        for f in files:
-            ids += [r["doc_id"] for r in
-                    spark.read.parquet(f).select("doc_id").collect()]
-        hs = [h60(f"sh1:{i}") for i in ids]
-        assert hs == sorted(hs)
-    # re-run produces the identical assignment
-    out2 = str(tmp_path / "shards2")
-    write_training_shards(docs.repartition(13), out2, n_shards=4)
-    a = sorted(map(tuple, back.select("doc_id", "shard").collect()))
-    b = sorted(map(tuple, spark.read.parquet(out2)
-                   .select("doc_id", "shard").collect()))
-    assert a == b
-    import pytest as _pt
-    with _pt.raises(ValueError):
-        write_training_shards(docs, out, n_shards=0)

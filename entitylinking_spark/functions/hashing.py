@@ -201,17 +201,17 @@ def band_keys(sig_col: str | Column, num_bands: int, rows_per_band: int) -> Colu
 
     Returns array<struct<band:int, key:long>>: one entry per band; `key` is
     xxhash64 over that band's signature slice (salted by band index so the
-    same values in different bands never collide into one block).
+    same values in different bands never collide into one block). One lambda
+    over num_bands copies of `sig` (band = index) keeps a UDF `sig` legal.
     """
     sig = F.col(sig_col) if isinstance(sig_col, str) else sig_col
-    entries = [
-        F.struct(
-            F.lit(i).alias("band"),
-            F.xxhash64(F.slice(sig, i * rows_per_band + 1, rows_per_band), F.lit(i)).alias("key"),
-        )
-        for i in range(num_bands)
-    ]
-    return F.array(*entries)
+    return F.transform(
+        F.array_repeat(sig, num_bands),
+        lambda s, i: F.struct(
+            i.alias("band"),
+            F.xxhash64(F.slice(s, i * rows_per_band + 1, rows_per_band), i).alias("key"),
+        ),
+    )
 
 
 def bbit_sketch(sig_col: str | Column) -> Column:

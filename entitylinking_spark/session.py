@@ -11,6 +11,13 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Spark's generated-class cache (a static, JVM-wide LRU; default 100). A
+# resolve() uses ~120 generated classes, a fold ~130 and link_mentions ~95,
+# so at the default every warm resolve recompiles ~90 of them in Janino
+# (0.6-0.8 s) and runs them JIT-cold (SCALE.md "Memory"). Static conf: a
+# caller-built session must set it at build time.
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 def get_spark(
     app_name: str = "entitylinking-spark",
@@ -65,6 +72,7 @@ def get_spark(
         # (see operators/cc.py); the inference it disables is worthless here
         .config("spark.sql.constraintPropagation.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -1,5 +1,6 @@
 """Blocking-key derivation: stems, band keys, recall of planted pairs."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -56,6 +57,27 @@ def test_band_keys_structure(spark):
     # different bands over the same values must not collide (band-salted)
     keys = [e["key"] for e in out]
     assert len(set(keys)) > 1
+
+
+def test_band_keys_matches_per_band_form(spark):
+    """The one-expression band keys are bit-identical, schema included, to
+    one struct per band built in Python."""
+    rng = np.random.default_rng(3)
+    sigs = [(i, rng.integers(-(2**63), 2**63 - 1, 64).tolist()) for i in range(5000)]
+    sigs.append((5000, None))
+    df = spark.createDataFrame(sigs, "id int, sig array<bigint>")
+    for bands, rows in ((16, 4), (16, 2), (8, 4)):
+        per_band = F.array(*[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.xxhash64(F.slice("sig", b * rows + 1, rows), F.lit(b)).alias("key"),
+            )
+            for b in range(bands)
+        ])
+        got = df.select("id", band_keys("sig", bands, rows).alias("k"))
+        want = df.select("id", per_band.alias("k"))
+        assert got.schema == want.schema
+        assert sorted(got.collect()) == sorted(want.collect())
 
 
 def test_blocking_recall_on_planted_pairs(spark):

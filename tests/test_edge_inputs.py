@@ -62,7 +62,7 @@ def test_dedup_minhash_empty_docs(spark):
     assert out.count() == 0
 
 
-def test_mixing_vocab_empty_and_single(spark):
+def test_vocab_empty_and_single(spark):
     """The vocab operators through the same degenerate probes."""
     from entitylinking_spark.operators.vocab import (
         bigram_pmi, length_profile, vocabulary,

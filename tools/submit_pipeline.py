@@ -53,6 +53,7 @@ def main():
 
     from entitylinking_spark.operators.blocking import ERConfig
     from entitylinking_spark.plans.pipeline import resolve
+    from entitylinking_spark.session import CODEGEN_CACHE_ENTRIES
 
     overrides = {
         k: v
@@ -66,7 +67,12 @@ def main():
     }
     cfg = ERConfig(**overrides)
 
-    spark = SparkSession.builder.appName("entitylinking-resolve").getOrCreate()
+    # static conf: it must be set before the session starts
+    spark = (
+        SparkSession.builder.appName("entitylinking-resolve")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .getOrCreate()
+    )
     repo_files = _read(spark, args.input)
     res = resolve(
         repo_files, cfg, id_col=args.id_col, checkpoint_dir=args.checkpoint_dir

@@ -628,7 +628,7 @@ FROM documents ORDER BY doc_id
 """
 
 
-# 60-bit md5-derived hash of a token/gram string (functions/relhash.md5_hash60)
+# 60-bit md5-derived hash of a string (similarity.srp_planes' hyperplane weights)
 _H60_SQL = (
     "list_sum(list_transform(range(15), i -> "
     "(strpos('0123456789abcdef', substr(md5({x}), i+1, 1)) - 1)"
@@ -771,38 +771,6 @@ ORDER BY d.doc_id
 """
 
 
-def cluster_reps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Policy-based cluster representatives (dedup.cluster_representatives,
-    policy = LONGEST doc, ties min id): clusters are a synthetic
-    doc_id % 37 grouping — the operator is cluster-source-agnostic — and
-    DuckDB picks each group's rep with a row_number window over
-    (n_chars DESC, doc_id)."""
-    from entitylinking_spark.operators.dedup import cluster_representatives
-
-    d = _t(spark, sf_dir, "documents")
-    assign = d.select("doc_id", (F.col("doc_id") % 37).alias("cluster_id"))
-    return cluster_representatives(
-        assign, d.select("doc_id", "n_chars"), "n_chars"
-    ).orderBy("doc_id")
-
-
-CLUSTER_REPS_SQL = """
-WITH a AS (
-  SELECT doc_id, doc_id % 37 AS cluster_id, n_chars FROM documents
-),
-r AS (
-  SELECT cluster_id, doc_id AS rep_id,
-         row_number() OVER (PARTITION BY cluster_id
-                            ORDER BY n_chars DESC, doc_id) AS rk
-  FROM a
-)
-SELECT a.doc_id, a.cluster_id, r.rep_id,
-       (a.doc_id = r.rep_id) AS is_rep
-FROM a JOIN r ON a.cluster_id = r.cluster_id AND r.rk = 1
-ORDER BY a.doc_id
-"""
-
-
 def embedding_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact quantized embedding moments (embeddings.quantized_moment_sums,
     first 8 dims): per-dim sums, upper-triangle cross sums, and the row
@@ -936,193 +904,6 @@ FROM documents GROUP BY lang ORDER BY "group"
 """
 
 
-def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LLM-pipeline embedding near-dup pairs: integer-SRP bucketed cosine
-    pairs >= 0.35 (4 planes). The bucket assignment is exact int64
-    arithmetic (ann_topk machinery) so DuckDB recomputes the candidate
-    set bit-for-bit; nearest value to the threshold on this data is
-    2.5e-4 away, far beyond cross-engine double noise."""
-    from entitylinking_spark.operators.dedup import embedding_near_dup_pairs
-
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.transform("embedding", lambda x: x.cast("double"))
-    )
-    out = embedding_near_dup_pairs(emb, threshold=0.35, n_planes=4, dim=64)
-    # candidate_pairs orders STRING row_ids lexicographically ("100" < "99");
-    # normalize to numeric (min, max) so the pair identity matches the oracle
-    l = F.col("id_l").cast("long")
-    r = F.col("id_r").cast("long")
-    return out.select(
-        F.least(l, r).alias("id_l"),
-        F.greatest(l, r).alias("id_r"),
-        F.round("cosine", 4).alias("cosine_r"),
-    ).orderBy("id_l", "id_r")
-
-
-EMB_NEAR_DUP_SQL = f"""
-WITH planes AS (
-  SELECT p, d,
-         ({_H60_SQL.format(x="'srp:' || CAST(p AS VARCHAR) || ':' || CAST(d AS VARCHAR)")})
-           % 4096 - 2048 AS w
-  FROM range(4) tp(p) CROSS JOIN range(64) td(d)
-),
-qe AS (
-  SELECT vec_id,
-         list_transform(embedding,
-                        x -> CAST(floor(CAST(x AS DOUBLE) * 4096) AS BIGINT)) AS e
-  FROM embeddings
-),
-dots AS (
-  SELECT q.vec_id, pl.p, SUM(q.e[pl.d + 1] * pl.w) AS dot
-  FROM qe q CROSS JOIN planes pl GROUP BY 1, 2
-),
-buckets AS (
-  SELECT vec_id,
-         CAST(SUM(CASE WHEN dot > 0 THEN (1::BIGINT << p) ELSE 0 END) AS BIGINT) AS bucket
-  FROM dots GROUP BY 1
-)
-SELECT a.vec_id AS id_l, b.vec_id AS id_r,
-       ROUND(list_cosine_similarity(CAST(ae.embedding AS DOUBLE[]),
-                                    CAST(be.embedding AS DOUBLE[])), 4) AS cosine_r
-FROM buckets a
-JOIN buckets b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-JOIN embeddings ae ON ae.vec_id = a.vec_id
-JOIN embeddings be ON be.vec_id = b.vec_id
-WHERE list_cosine_similarity(CAST(ae.embedding AS DOUBLE[]),
-                             CAST(be.embedding AS DOUBLE[])) >= 0.35
-ORDER BY id_l, id_r
-"""
-
-
-def embedding_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The embedding channel's pairs->clusters composition: the SAME
-    near-dup pairs as `embedding_near_dup`, closed under transitivity by
-    connected_components (cluster id = min member), singletons included —
-    DuckDB recomputes the pairs bit-for-bit and closes them with a
-    recursive CTE."""
-    from entitylinking_spark.operators.cc import connected_components
-    from entitylinking_spark.operators.dedup import embedding_near_dup_pairs
-
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.transform("embedding", lambda x: x.cast("double"))
-    )
-    pairs = embedding_near_dup_pairs(emb, threshold=0.35, n_planes=4, dim=64)
-    edges = pairs.select(
-        F.col("id_l").cast("long").alias("src"),
-        F.col("id_r").cast("long").alias("dst"),
-    )
-    clusters = connected_components(
-        edges, all_ids=emb.select(F.col("vec_id").alias("row_id"))
-    )
-    return clusters.select(
-        F.col("row_id").alias("vec_id"), "cluster_id"
-    ).orderBy("vec_id")
-
-
-_EMB_EDGES_SQL = EMB_NEAR_DUP_SQL.strip().removeprefix("WITH").rsplit(
-    "SELECT a.vec_id", 1
-)[0]
-
-EMB_DUP_CLUSTERS_SQL = (
-    "WITH RECURSIVE "
-    + _EMB_EDGES_SQL.strip().rstrip(")").rstrip()
-    + """),
-edges AS (
-  SELECT a.vec_id AS a, b.vec_id AS b
-  FROM buckets a
-  JOIN buckets b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-  JOIN embeddings ae ON ae.vec_id = a.vec_id
-  JOIN embeddings be ON be.vec_id = b.vec_id
-  WHERE list_cosine_similarity(CAST(ae.embedding AS DOUBLE[]),
-                               CAST(be.embedding AS DOUBLE[])) >= 0.35
-),
-sym AS (SELECT a, b FROM edges UNION SELECT b AS a, a AS b FROM edges),
-reach AS (
-  SELECT vec_id AS id, vec_id AS comp FROM embeddings
-  UNION
-  SELECT s.b AS id, r.comp FROM reach r JOIN sym s ON s.a = r.id
-)
-SELECT id AS vec_id, MIN(comp) AS cluster_id FROM reach GROUP BY id
-ORDER BY vec_id
-"""
-)
-
-HARD_NEG_SQL = (
-    "WITH RECURSIVE "
-    + _EMB_EDGES_SQL.strip().rstrip(")").rstrip()
-    + """),
-edges AS (
-  SELECT a.vec_id AS a, b.vec_id AS b
-  FROM buckets a
-  JOIN buckets b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-  JOIN embeddings ae ON ae.vec_id = a.vec_id
-  JOIN embeddings be ON be.vec_id = b.vec_id
-  WHERE list_cosine_similarity(CAST(ae.embedding AS DOUBLE[]),
-                               CAST(be.embedding AS DOUBLE[])) >= 0.35
-),
-sym AS (SELECT a, b FROM edges UNION SELECT b AS a, a AS b FROM edges),
-reach AS (
-  SELECT vec_id AS id, vec_id AS comp FROM embeddings
-  UNION
-  SELECT s.b AS id, r.comp FROM reach r JOIN sym s ON s.a = r.id
-),
-comp AS (SELECT id AS vec_id, MIN(comp) AS cluster_id FROM reach GROUP BY id),
-scored AS (
-  SELECT q.vec_id AS query_id, e.vec_id,
-         list_cosine_similarity(CAST(eq.embedding AS DOUBLE[]),
-                                CAST(ee.embedding AS DOUBLE[])) AS cosine
-  FROM comp q
-  JOIN embeddings eq ON eq.vec_id = q.vec_id
-  JOIN comp e ON e.cluster_id <> q.cluster_id AND e.vec_id <> q.vec_id
-  JOIN embeddings ee ON ee.vec_id = e.vec_id
-  WHERE q.vec_id < 20
-),
-ranked AS (
-  SELECT query_id, vec_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, vec_id) AS neg_rank
-  FROM scored
-)
-SELECT query_id, vec_id, CAST(neg_rank AS INT) AS neg_rank,
-       ROUND(cosine, 4) AS cosine_r
-FROM ranked WHERE neg_rank <= 3 ORDER BY query_id, neg_rank
-"""
-)
-
-
-def hard_negatives_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mined hard negatives (similarity.hard_negatives): for anchors
-    vec_id < 20, the exact top-3 most-similar vectors OUTSIDE the
-    anchor's SRP near-dup cluster (the embedding_dup_clusters
-    composition — dedup output as the positive set, its complement
-    ranked for contrastive training). DuckDB recomputes the clusters
-    bit-for-bit and the exclusion-then-rank exactly."""
-    from entitylinking_spark.operators.cc import connected_components
-    from entitylinking_spark.operators.dedup import embedding_near_dup_pairs
-    from entitylinking_spark.operators.similarity import hard_negatives
-
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.transform("embedding", lambda x: x.cast("double"))
-    )
-    pairs = embedding_near_dup_pairs(emb, threshold=0.35, n_planes=4, dim=64)
-    edges = pairs.select(
-        F.col("id_l").cast("long").alias("src"),
-        F.col("id_r").cast("long").alias("dst"),
-    )
-    clusters = connected_components(
-        edges, all_ids=emb.select(F.col("vec_id").alias("row_id"))
-    )
-    asg = clusters.select(F.col("row_id").alias("vec_id"), "cluster_id")
-    q = emb.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = hard_negatives(emb, asg, queries=q, k=3)
-    return out.select(
-        "query_id", "vec_id", "neg_rank",
-        F.round("cosine", 4).alias("cosine_r"),
-    ).orderBy("query_id", "neg_rank")
-
-
 def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T1/X14 embedding top-k: exact cosine top-5 for vec_id < 3 queries."""
     from entitylinking_spark.operators.similarity import brute_force_topk
@@ -1220,89 +1001,6 @@ ranked AS (
 )
 SELECT query_id, vec_id, CAST(rank AS INT) AS rank, ROUND(cosine, 4) AS cosine_r
 FROM ranked WHERE rank <= 5 ORDER BY query_id, rank
-"""
-
-
-def semdedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup (operators/dedup.py::semdedup, Abbas et al. 2023): k-means
-    cells (16 seeded centroids, the ivf_topk_probe init so DuckDB can
-    recompute them), within-cell cosine edges >= 0.38 (nearest value
-    >= 1.0e-3 away at sf0.001/sf0.01 — beyond cross-engine double noise),
-    transitive closure, and the paper's keep-farthest-from-centroid
-    representative. cdist is exact integer arithmetic; cluster labels are
-    re-emitted as each component's min NUMERIC member id (the operator's
-    internal label is the min STRING id, engine-order-dependent)."""
-    from entitylinking_spark.operators.dedup import semdedup
-    from entitylinking_spark.operators.ivf import seed_centroids
-
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.transform("embedding", lambda x: x.cast("double"))
-    )
-    cents = seed_centroids(emb, 16)
-    out = semdedup(emb, eps=0.38, centroids=cents, keep="far")
-    relabel = out.groupBy("cluster_id").agg(
-        F.min(F.col("row_id").cast("long")).alias("cluster_num")
-    )
-    return (
-        out.join(relabel, "cluster_id")
-        .select(
-            F.col("row_id").cast("long").alias("vec_id"),
-            "cell", "cdist",
-            F.col("cluster_num").alias("cluster_id"),
-            F.col("rep_id").cast("long").alias("rep_id"),
-            "is_kept",
-        )
-        .orderBy("vec_id")
-    )
-
-
-SEMDEDUP_SQL = """
-WITH RECURSIVE qv AS (
-  SELECT vec_id,
-         list_transform(embedding, x -> floor(CAST(x AS DOUBLE) * 4096.0)) AS qvec,
-         CAST(embedding AS DOUBLE[]) AS dvec
-  FROM embeddings
-),
-cent AS (SELECT vec_id AS cid, qvec AS cvec FROM qv ORDER BY vec_id LIMIT 16),
-assigned AS (
-  SELECT e.vec_id, c.cid,
-         CAST(list_inner_product(c.cvec, c.cvec)
-              - 2 * list_inner_product(e.qvec, c.cvec) AS BIGINT) AS d,
-         ROW_NUMBER() OVER (
-           PARTITION BY e.vec_id
-           ORDER BY list_inner_product(c.cvec, c.cvec)
-                    - 2 * list_inner_product(e.qvec, c.cvec), c.cid
-         ) AS rnk
-  FROM qv e CROSS JOIN cent c
-),
-cells AS (SELECT vec_id, cid AS cell, d FROM assigned WHERE rnk = 1),
-edges AS (
-  SELECT a.vec_id AS a, b.vec_id AS b
-  FROM cells a JOIN cells b ON a.cell = b.cell AND a.vec_id < b.vec_id
-  JOIN qv ea ON ea.vec_id = a.vec_id
-  JOIN qv eb ON eb.vec_id = b.vec_id
-  WHERE list_cosine_similarity(ea.dvec, eb.dvec) >= 0.38
-),
-sym AS (SELECT a, b FROM edges UNION SELECT b AS a, a AS b FROM edges),
-reach AS (
-  SELECT vec_id AS id, vec_id AS comp FROM cells
-  UNION
-  SELECT s.b AS id, r.comp FROM reach r JOIN sym s ON s.a = r.id
-),
-comp AS (SELECT id AS vec_id, MIN(comp) AS cluster_id FROM reach GROUP BY id),
-ranked AS (
-  SELECT co.vec_id, ce.cell, ce.d, co.cluster_id,
-         ROW_NUMBER() OVER (
-           PARTITION BY co.cluster_id
-           ORDER BY ce.d DESC, CAST(co.vec_id AS VARCHAR)
-         ) AS rr
-  FROM comp co JOIN cells ce ON ce.vec_id = co.vec_id
-)
-SELECT r.vec_id, r.cell, r.d AS cdist, r.cluster_id,
-       rep.vec_id AS rep_id, r.vec_id = rep.vec_id AS is_kept
-FROM ranked r
-JOIN ranked rep ON rep.cluster_id = r.cluster_id AND rep.rr = 1
-ORDER BY r.vec_id
 """
 
 
@@ -1725,50 +1423,15 @@ FROM documents ORDER BY doc_id
 """
 
 
-def dedup_ngram_jaccard_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact 2-gram Jaccard near-dup pairs within lang blocks (dedup op)."""
-    from entitylinking_spark.operators.dedup import ngram_jaccard_pairs
-
-    d = _t(spark, sf_dir, "documents")
-    out = ngram_jaccard_pairs(d, block_cols=["lang"], n=2, threshold=0.2)
-    return out.select(
-        "id_l", "id_r", _duck_round(F.col("jaccard"), 6).alias("jaccard_r")
-    ).orderBy("id_l", "id_r")
-
-
-NGRAM_SQL = """
-WITH g AS (
-  SELECT CAST(doc_id AS VARCHAR) AS doc_id, lang,
-         CASE WHEN len(toks) >= 2
-              THEN list_distinct(list_transform(range(1, len(toks)),
-                                                i -> toks[i] || ' ' || toks[i+1]))
-              ELSE list_distinct(toks) END AS grams
-  FROM (SELECT doc_id, lang,
-               list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'),
-                           t -> t <> '') AS toks
-        FROM documents)
-)
-SELECT l.doc_id AS id_l, r.doc_id AS id_r,
-       ROUND(CASE WHEN len(list_distinct(l.grams || r.grams)) = 0 THEN 1.0
-                  ELSE CAST(len(list_intersect(l.grams, r.grams)) AS DOUBLE)
-                       / len(list_distinct(l.grams || r.grams)) END, 6) AS jaccard_r
-FROM g l JOIN g r ON l.lang = r.lang AND l.doc_id < r.doc_id
-WHERE CASE WHEN len(list_distinct(l.grams || r.grams)) = 0 THEN 1.0
-           ELSE CAST(len(list_intersect(l.grams, r.grams)) AS DOUBLE)
-                / len(list_distinct(l.grams || r.grams)) END >= 0.2
-ORDER BY id_l, id_r
-"""
-
-
 # ---------------------------------------------------------------------------
 # sketch / EM / pipeline queries with constructed-duplicate oracles
 #
-# The raw `documents` table has no near-duplicates, so the dedup/ER queries
-# run over an AUGMENTED corpus both engines construct identically: each
+# The raw `documents` table has no near-duplicates, so the ER query
+# runs over an AUGMENTED corpus both engines construct identically: each
 # doc_id % 3 == 0 gets a near-copy (+3 tokens), % 6 == 0 a second-degree
 # copy (+5 tokens, chained similarity), % 5 == 0 a copy whose DISTINCT
 # token set is unchanged (first token repeated). Ids are zero-padded so
-# string MIN == numeric MIN. Cluster oracles are exact-similarity edges +
+# string MIN == numeric MIN. The cluster oracle is exact-similarity edges +
 # a recursive-CTE transitive closure in DuckDB.
 # ---------------------------------------------------------------------------
 
@@ -1810,8 +1473,8 @@ reach AS (
   UNION
   SELECT s.b AS id, r.comp FROM reach r JOIN sym s ON s.a = r.id
 )
-SELECT id AS {id_name}, MIN(comp) AS cluster_id FROM reach GROUP BY id
-ORDER BY {id_name}
+SELECT id AS row_id, MIN(comp) AS cluster_id FROM reach GROUP BY id
+ORDER BY row_id
 """
 
 _JACCARD_SQL = (
@@ -1878,36 +1541,7 @@ edges AS (
   WHERE {_JACCARD_SQL} >= 0.6
 ),
 """
-    + _CC_SQL.format(id_name="row_id")
-)
-
-
-def dedup_minhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash/LSH dedup in VERIFIED mode: LSH (32 bands x 2 rows) generates
-    candidates, the keep decision is exact token-trigram Jaccard >= 0.6 —
-    so the DuckDB all-pairs oracle is exact given candidate recall (planted
-    pairs sit at J >= 0.8: per-pair miss probability < 1e-14)."""
-    from entitylinking_spark.operators.dedup import dedup_minhash_lsh
-
-    return dedup_minhash_lsh(
-        _augmented_docs(spark, sf_dir), threshold=0.6, num_bands=32,
-        verify_ngram=3,
-    ).orderBy("doc_id")
-
-
-DEDUP_MINHASH_SQL = (
-    "WITH RECURSIVE "
-    + _AUG_SQL.strip()
-    + ", "
-    + _GRAMS_SQL.strip()
-    + f""",
-edges AS (
-  SELECT l.doc_id AS a, r.doc_id AS b
-  FROM grams l JOIN grams r ON l.doc_id < r.doc_id
-  WHERE {_JACCARD_SQL} >= 0.6
-),
-"""
-    + _CC_SQL.format(id_name="doc_id")
+    + _CC_SQL
 )
 
 
@@ -1995,51 +1629,6 @@ SELECT doc_id, CAST(rank AS INT) AS rank, ROUND(score, 6) AS score_r FROM (
   FROM scored
 ) WHERE rank <= 10 ORDER BY rank
 """
-
-
-def dedup_simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash dedup with the md5-derived RELATIONAL fingerprint
-    (functions/relhash.py): DuckDB recomputes the exact same 60-bit
-    fingerprints, and the pigeonhole segment blocking has guaranteed recall
-    for hamming <= radius, so cluster parity is exact by construction."""
-    from entitylinking_spark.functions.relhash import simhash_relational
-    from entitylinking_spark.operators.dedup import dedup_simhash
-
-    aug = _augmented_docs(spark, sf_dir)
-    fps = simhash_relational(aug, id_col="doc_id", text_col="text")
-    return dedup_simhash(aug, radius=3, fingerprints=fps, bits=60).orderBy("doc_id")
-
-
-DEDUP_SIMHASH_SQL = (
-    "WITH RECURSIVE "
-    + _AUG_SQL.strip()
-    + f""",
-toks AS (
-  SELECT doc_id, unnest(list_distinct(list_filter(
-      regexp_split_to_array(lower(text), '[^a-z0-9_]+'), t -> t <> ''))) AS tok
-  FROM aug
-),
-h AS (SELECT doc_id, {_H60_SQL.format(x='tok')} AS th FROM toks),
-bits AS (
-  SELECT doc_id, b, SUM(CASE WHEN (th >> b) & 1 = 1 THEN 1 ELSE -1 END) AS vote
-  FROM h CROSS JOIN range(60) r(b) GROUP BY doc_id, b
-),
-fp0 AS (
-  SELECT doc_id,
-         CAST(SUM(CASE WHEN vote > 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS fp
-  FROM bits GROUP BY doc_id
-),
-fp AS (
-  SELECT a.doc_id, COALESCE(fp0.fp, 0) AS fp FROM aug a LEFT JOIN fp0 USING (doc_id)
-),
-edges AS (
-  SELECT l.doc_id AS a, r.doc_id AS b
-  FROM fp l JOIN fp r ON l.doc_id < r.doc_id
-  WHERE bit_count(xor(l.fp, r.fp)) <= 3
-),
-"""
-    + _CC_SQL.format(id_name="doc_id")
-)
 
 
 def bt_rank_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2548,36 +2137,6 @@ FROM documents ORDER BY media_id
 """
 
 
-def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing fingerprints (Schleimer'03) in the relational md5-derived
-    form (functions/relhash.py) so DuckDB recomputes the exact values. The
-    one-pass Arrow variant (textstats.fingerprint_udf) is the scale path
-    and stays pytest-covered."""
-    from entitylinking_spark.functions.relhash import winnow_fingerprints
-
-    d = _t(spark, sf_dir, "documents")
-    return winnow_fingerprints(d, id_col="doc_id", text_col="text",
-                               n=3, window=4).orderBy("doc_id")
-
-
-DOC_FP_SQL = (
-    "WITH t AS (SELECT doc_id, list_filter(regexp_split_to_array(lower(text), "
-    "'[^a-z0-9_]+'), x -> x <> '') AS toks FROM documents),\n"
-    "g AS (SELECT doc_id, CASE WHEN len(toks) >= 3 THEN "
-    "list_transform(range(1, len(toks)-1), i -> toks[i]||' '||toks[i+1]||' '||toks[i+2]) "
-    "ELSE list_filter([array_to_string(toks, ' ')], s -> len(s) > 0) END AS grams FROM t),\n"
-    "e AS (SELECT doc_id, len(grams) AS n, generate_subscripts(grams, 1) - 1 AS pos, "
-    "unnest(grams) AS gram FROM g),\n"
-    f"h AS (SELECT doc_id, n, pos, {_H60_SQL.format(x='gram')} AS gh FROM e),\n"
-    "p AS (SELECT doc_id, pos, n, MIN(gh) OVER (PARTITION BY doc_id ORDER BY pos "
-    "ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS win_min FROM h),\n"
-    "f AS (SELECT doc_id, array_to_string(list_sort(list(DISTINCT win_min)), ',') AS fingerprint "
-    "FROM p WHERE pos <= greatest(n - 4, 0) GROUP BY doc_id)\n"
-    "SELECT d.doc_id, COALESCE(f.fingerprint, '') AS fingerprint "
-    "FROM documents d LEFT JOIN f USING (doc_id) ORDER BY d.doc_id"
-)
-
-
 def linking_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity-linking candidate generation (operators/linking.py
     candidate_channels — the reference's retrieval fan-out,
@@ -2777,7 +2336,6 @@ _ORACLE_CHECKED: dict[str, tuple[Callable, str]] = {
     "j3_channel_merge": (j3_channel_merge, J3_SQL),
     "t2_boosted_topk": (t2_boosted_topk, T2_SQL),
     "x4_cut_context": (x4_cut_context, X4_SQL),
-    "dedup_ngram_jaccard_docs": (dedup_ngram_jaccard_docs, NGRAM_SQL),
     "media_payload_audit": (media_payload_audit, MEDIA_AUDIT_SQL),
     "x9_bm25_topk": (x9_bm25_topk, X9_BM25_SQL),
     "a7_recall_at_k": (a7_recall_at_k, A7_SQL),
@@ -2785,17 +2343,12 @@ _ORACLE_CHECKED: dict[str, tuple[Callable, str]] = {
     "doc_quality": (doc_quality, DOC_QUALITY_SQL),
     "doc_repetition": (doc_repetition, DOC_REPETITION_SQL),
     "dup_lines": (dup_lines, DUP_LINES_SQL),
-    "embedding_near_dup": (embedding_near_dup, EMB_NEAR_DUP_SQL),
-    "embedding_dup_clusters": (embedding_dup_clusters, EMB_DUP_CLUSTERS_SQL),
     "g5_overlapping_groups": (g5_overlapping_groups, G5_SQL),
     "g5_repair_oracle": (g5_repair_oracle, G5_REPAIR_SQL),
     "er_clusters": (er_clusters, ER_CLUSTERS_SQL),
-    "dedup_minhash_docs": (dedup_minhash_docs, DEDUP_MINHASH_SQL),
-    "dedup_simhash_docs": (dedup_simhash_docs, DEDUP_SIMHASH_SQL),
     "bt_rank_orders": (bt_rank_orders, BT_RANK_SQL),
     "pl_rank_orders": (pl_rank_orders, PL_RANK_SQL),
     "davidson_rank_orders": (davidson_rank_orders, DAVIDSON_RANK_SQL),
-    "doc_fingerprints": (doc_fingerprints, DOC_FP_SQL),
     "parse_responses": (parse_responses, PARSE_RESPONSES_SQL),
     # the decode itself is a declared stub (multimodal._stub_decode), but
     # its md5-derived grid is recomputable by DuckDB, so even this query is
@@ -2806,12 +2359,9 @@ _ORACLE_CHECKED: dict[str, tuple[Callable, str]] = {
     "pmi_bigrams": (pmi_bigrams, PMI_BIGRAMS_SQL),
     "corpus_length_profile": (corpus_length_profile, LENGTH_PROFILE_SQL),
     "embedding_moments": (embedding_moments, EMBEDDING_MOMENTS_SQL),
-    "cluster_reps": (cluster_reps, CLUSTER_REPS_SQL),
-    "semdedup_docs": (semdedup_docs, SEMDEDUP_SQL),
     "resize_thumbs": (resize_thumbs, RESIZE_THUMBS_SQL),
     "bpe_pair_counts": (bpe_pair_counts, BPE_PAIR_COUNTS_SQL),
     "oov_docs": (oov_docs, OOV_DOCS_SQL),
-    "hard_negatives_probe": (hard_negatives_probe, HARD_NEG_SQL),
     "heavy_tokens": (heavy_tokens, HEAVY_TOKENS_SQL),
     "tfidf_terms": (tfidf_terms, TFIDF_TERMS_SQL),
 }

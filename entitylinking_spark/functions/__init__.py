@@ -3,8 +3,6 @@ expression; Arrow-batched pandas UDFs otherwise (never per-row Python UDFs).
 """
 
 from entitylinking_spark.functions.hashing import (  # noqa: F401
-    minhash_udf,
-    simhash_udf,
     band_keys,
     minhash_similarity,
 )

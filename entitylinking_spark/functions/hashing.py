@@ -1,4 +1,4 @@
-"""Hash-sketch kernels: MinHash, LSH band keys, SimHash.
+"""Hash-sketch kernels: MinHash and LSH band keys.
 
 These replace the reference's embedding-based approximate nearest-neighbour
 candidate generation (SentenceTransformer encode + np.dot top-k —
@@ -192,10 +192,6 @@ def make_shingle_set_udf(shingle_k: int = 3):
     return shingles
 
 
-# Default instance used by the pipeline.
-minhash_udf = make_minhash_udf()
-
-
 def band_keys(sig_col: str | Column, num_bands: int, rows_per_band: int) -> Column:
     """JVM-side LSH band keys from a MinHash signature column.
 
@@ -257,47 +253,3 @@ def minhash_similarity(sig_l: str | Column, sig_r: str | Column) -> Column:
         lambda acc, v: acc + v,
     )
     return matches.cast("double") / F.size(l).cast("double")
-
-
-def make_simhash_udf(bits: int = 64):
-    """Build a pandas UDF: content string -> long SimHash fingerprint.
-
-    Vectorized: token hashes for the whole batch are computed in one
-    hash_array call; per-row bit-vote sums use np.add.reduceat.
-    """
-    if bits != 64:
-        raise ValueError("only 64-bit simhash supported")
-
-    @F.pandas_udf(T.LongType())
-    def simhash(content: pd.Series) -> pd.Series:
-        filled = content.fillna("")
-        toks = filled.str.lower().str.findall(_TOKEN_RE)
-        tok_lists = toks.tolist()
-        raw = filled.tolist()
-        flat: list[str] = []
-        offsets = np.empty(len(tok_lists), dtype=np.int64)
-        for i, tl in enumerate(tok_lists):
-            offsets[i] = len(flat)
-            flat.extend(tl if tl else [f"\x00raw:{raw[i]}"])
-        base = pd.util.hash_array(np.array(flat, dtype=object))
-        # (n_tokens, 64) sign matrix -> reduceat row sums -> sign -> bits
-        bits_mat = ((base[:, None] >> np.arange(64, dtype=np.uint64)[None, :]) & np.uint64(1)).astype(np.int64)
-        votes = bits_mat * 2 - 1
-        row_votes = np.add.reduceat(votes, offsets, axis=0)
-        out_bits = (row_votes > 0).astype(np.uint64)
-        fp = np.zeros(len(offsets), dtype=np.uint64)
-        for j in range(64):
-            fp |= out_bits[:, j] << np.uint64(j)
-        return pd.Series(fp.view(np.int64))
-
-    return simhash
-
-
-simhash_udf = make_simhash_udf()
-
-
-def hamming_distance64(a: str | Column, b: str | Column) -> Column:
-    """JVM-side Hamming distance between two 64-bit fingerprints."""
-    ca = F.col(a) if isinstance(a, str) else a
-    cb = F.col(b) if isinstance(b, str) else b
-    return F.bit_count(ca.bitwiseXOR(cb))

@@ -99,13 +99,6 @@ def ngram_hash_set(text_col: str | Column, n: int) -> Column:
     return F.transform(ngram_set(text_col, n), lambda g: F.xxhash64(g))
 
 
-def exact_jaccard(a: str | Column, b: str | Column) -> Column:
-    """Exact Jaccard of two array columns; empty-vs-empty counts as 1.0."""
-    inter = F.size(F.array_intersect(_c(a), _c(b))).cast("double")
-    union = F.size(F.array_union(_c(a), _c(b))).cast("double")
-    return F.when(union == 0, F.lit(1.0)).otherwise(inter / union)
-
-
 def token_jaccard(a: str | Column, b: str | Column) -> Column:
     """Exact Jaccard over distinct word tokens of two strings (JVM-native, U4)."""
     ta = F.array_distinct(tokenize(a))

@@ -18,7 +18,7 @@ derived JVM-side from the signature (functions/hashing.py).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -102,24 +102,22 @@ class ERConfig:
     # decision-equivalent and name_sim reports lev_sim. False restores the
     # round-2 behavior (JW for every unequal-name survivor).
     jw_decision_band: bool = True
-    extra: dict = field(default_factory=dict)
 
     def __post_init__(self):
         if self.num_bands * self.rows_per_band > self.num_perm:
             raise ValueError("num_bands*rows_per_band must be <= num_perm")
         # CLAMP (don't raise) the coarse name-channel gate to the available
-        # permutations: callers like dedup_minhash_lsh build small-num_perm
-        # configs that never touch the coarse keys, and a hard error here was
-        # a round-2 regression (ADVICE r2). Clamping keeps block_candidates
+        # permutations: a small-num_perm config whose fine bands fit is
+        # valid, and a hard error here rejected it only because of the
+        # coarse defaults (ADVICE r2). Clamping keeps block_candidates
         # well-defined for every config; the clamped values participate in
         # the checkpoint fingerprint, so resumes stay consistent.
         if self.coarse_bands * self.coarse_rows > self.num_perm:
             rows = min(self.coarse_rows, self.num_perm)
             bands = max(1, self.num_perm // rows)
             # visible clamp (ADVICE r3): silent absorption hid config typos
-            # that change coarse-gate selectivity — warn so explicitly-
-            # misconfigured gates stay diagnosable while internally-built
-            # small-num_perm configs keep working
+            # that change coarse-gate selectivity — warn so misconfigured
+            # gates stay diagnosable while small-num_perm configs keep working
             import warnings
 
             warnings.warn(

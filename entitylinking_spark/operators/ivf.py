@@ -19,7 +19,7 @@ Spark mapping (no index structure, just relational ops):
              (a natural cluster in the data IS a hot cell)
   score+k    exact cosine inside probed cells, per-query rank window
 
-Cross-engine exactness (the relhash.py / srp integer pattern): centroids
+Cross-engine exactness (the srp integer pattern): centroids
 and vectors are floor-quantized by 2**12 — float32 inputs scale by a power
 of two EXACTLY in double, so the quantized components are deterministic
 integers, and the assignment score ip(c,c) - 2*ip(x,c) (argmin == nearest
@@ -147,32 +147,6 @@ def make_cell_probe_udf(centroids_q: np.ndarray, nprobe: int):
         else:
             idx = np.argsort(d, axis=1, kind="stable")[:, :nprobe]
         return pd.Series(list(idx.astype(np.int32)))
-
-    return probe
-
-
-def make_cell_dist_udf(centroids_q: np.ndarray):
-    """Arrow-batched NEAREST cell + exact integer assignment score per
-    vector: (cell, d) with d = ip(c,c) - 2*ip(x,c) for the winning cell
-    (monotone in squared L2 distance at fixed norm(x), so argmin/argmax
-    over d within one cell ranks members by distance to THAT centroid).
-    d stays well under 2**53 (module note), so float64 BLAS computes it
-    exactly and a DuckDB list_inner_product oracle recomputes it
-    bit-for-bit — `semdedup` uses d as its deterministic keep policy."""
-    cent = np.ascontiguousarray(centroids_q, dtype=np.float64)
-    cc = (cent * cent).sum(axis=1)  # ip(c,c), exact integers
-
-    @F.pandas_udf("cell int, d bigint")
-    def probe(vecs: pd.Series) -> pd.DataFrame:
-        if len(vecs) == 0:
-            return pd.DataFrame({"cell": pd.Series([], dtype="int32"),
-                                 "d": pd.Series([], dtype="int64")})
-        q = _quantize(_stack_vecs(vecs.to_numpy()))
-        d = cc[None, :] - 2.0 * (q @ cent.T)
-        idx = np.argmin(d, axis=1)  # first occurrence = lowest cell id
-        best = d[np.arange(len(idx)), idx]
-        return pd.DataFrame({"cell": idx.astype(np.int32),
-                             "d": best.astype(np.int64)})
 
     return probe
 

@@ -33,6 +33,10 @@ def candidate_pairs(blocks: DataFrame, cfg: ERConfig = ERConfig(),
                     observation: Observation | None = None) -> DataFrame:
     """(block_key,row_id[,n_units]) -> distinct (id_l,id_r,block_key), id_l < id_r.
 
+    `census`: the block_census of `blocks`, when the caller builds it as
+    its own layer (resolve's core does, so a tracer wrapping
+    `block_census` can time and count it); computed here otherwise.
+
     `observation`: optional sink for the census_aggregates, collected by
     the sized-table checkpoint below; no output depends on it.
 

@@ -127,8 +127,8 @@ def lsh_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
 # inputs scale by 2^12 EXACTLY in double, so the floor is deterministic and
 # every dot product is pure BIGINT arithmetic. That gives (a) a bucket
 # function with no float-summation-order ambiguity (the DuckDB oracle
-# recomputes it bit-for-bit — the relhash.py pattern), and (b) a JVM-native
-# whole-stage-codegen bucket expression with no Python in the path.
+# recomputes it bit-for-bit from the same md5-derived integers), and (b) a
+# JVM-native whole-stage-codegen bucket expression with no Python in the path.
 # Quantization changes each hyperplane direction by <= 2^-12 per component —
 # immaterial to LSH quality.
 
@@ -213,18 +213,6 @@ def _probe_buckets(bucket: Column, n_planes: int, probe_bits: int) -> Column:
             for j in range(i + 1, n_planes)
         ]
     return F.array_distinct(F.array(*probes))
-
-
-@F.pandas_udf(T.DoubleType())
-def _dot_arrow(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Arrow-batched dot product: one BLAS einsum per batch. The scale
-    kernel for pair-heavy cosine work — Catalyst higher-order functions
-    are interpreted per element, measured ~4x slower at ~1M pairs."""
-    if len(a) == 0:
-        return pd.Series([], dtype="float64")
-    ma = _stack_vecs(a.to_numpy()).astype(np.float64, copy=False)
-    mb = _stack_vecs(b.to_numpy()).astype(np.float64, copy=False)
-    return pd.Series(np.einsum("ij,ij->i", ma, mb))
 
 
 def _stack_vecs(cells) -> np.ndarray:
@@ -564,11 +552,11 @@ def hard_negatives(embeddings: DataFrame, assignments: DataFrame,
     """Mined hard negatives for contrastive/embedding training: per
     anchor, the top-k most-similar vectors NOT in the anchor's duplicate
     cluster (the near-but-not-same examples retriever training wants —
-    dedup output becomes the positive set, this is its complement).
+    the duplicate clusters are the positive set, this is its complement).
 
-    assignments: (id_col, cluster_col) from ANY dedup operator (semdedup,
-    embedding_dup_clusters, dedup_exact...). queries defaults to the
-    whole corpus.
+    assignments: (id_col, cluster_col) from any clustering, e.g.
+    connected_components over near-duplicate edges or resolve()'s
+    clusters. queries defaults to the whole corpus.
 
     method='exact' ranks AFTER the exclusion, so every anchor gets
     exactly k negatives (fewer only when the corpus runs out) — the
@@ -577,7 +565,7 @@ def hard_negatives(embeddings: DataFrame, assignments: DataFrame,
     (default 4*k + 8) candidates BEFORE exclusion and re-ranks the
     survivors — the corpus-scale path; an anchor inside a duplicate
     cluster larger than retrieve_k can come back short (the documented
-    slack trade; raise retrieve_k or dedup first).
+    slack trade; raise retrieve_k or collapse duplicates first).
 
     Returns (query_id, vec_id, cosine, neg_rank).
     """

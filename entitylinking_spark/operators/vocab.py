@@ -312,7 +312,7 @@ def tfidf_vectors(docs: DataFrame, vocab: DataFrame,
     """Dense TF-IDF document vectors over a FIXED vocabulary frame — the
     classical no-model featurization that bridges the text operators
     into the embedding stack (pca_fit/pca_project, ivf_topk,
-    lsh_topk_shuffle, semdedup all take the output directly).
+    lsh_topk_shuffle all take the output directly).
 
     vocab: (token_col, idf_col) — e.g. `vocabulary(...)` pruned to top-K
     by the caller (dimension = vocab row count; keep it dimension-sized:

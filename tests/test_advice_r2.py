@@ -3,8 +3,8 @@
 1. len_ratio prune is disabled in estimate mode (verify_jaccard=False) —
    the min/max unit-count bound only holds for the exact verify Jaccard.
 2. ERConfig clamps (not raises) the coarse name-channel gate when
-   num_perm is too small for the defaults; dedup_minhash_lsh with
-   num_perm=16 works again.
+   num_perm is too small for the defaults; resolve() with num_perm=16
+   runs end to end on the clamped config.
 3. score_pairs' equal-name split is null-safe: a pair with a NULL fname
    is scored, not silently dropped from both branches.
 4. Iceberg fingerprint plumbing: write() records the fingerprint property
@@ -48,15 +48,20 @@ def test_erconfig_clamps_coarse_gate_to_num_perm():
     assert (dflt.coarse_bands, dflt.coarse_rows) == (16, 2)
 
 
-def test_dedup_minhash_small_num_perm_runs(spark):
-    from entitylinking_spark.operators.dedup import dedup_minhash_lsh
+def test_resolve_small_num_perm_runs(spark):
+    """A clamped coarse gate resolves end to end: one label per row, and on
+    this fixture the same clusters as the default config."""
+    from entitylinking_spark.plans.pipeline import resolve
+    from entitylinking_spark.synthdata import generate_repo_files
 
-    docs = spark.createDataFrame(
-        [(i, f"the quick brown fox {i % 2} jumps over the lazy dog") for i in range(6)],
-        ["doc_id", "text"],
-    )
-    out = dedup_minhash_lsh(docs, num_perm=16, num_bands=8, threshold=0.9)
-    assert out.count() == 6
+    df = spark.createDataFrame(generate_repo_files(60, seed=42).rows)
+    with pytest.warns(UserWarning, match="coarse gate clamped"):
+        small = ERConfig(num_perm=16, num_bands=8, rows_per_band=2,
+                         suppress_shingle_df=None)
+    rows = resolve(df, small, id_col="row_id").clusters.collect()
+    assert len(rows) == len({r["row_id"] for r in rows}) == 60
+    want = resolve(df, ERConfig(), id_col="row_id").clusters.collect()
+    assert dict(map(tuple, rows)) == dict(map(tuple, want))
 
 
 def test_null_fname_pair_not_dropped(spark):

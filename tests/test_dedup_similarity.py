@@ -1,137 +1,8 @@
-"""Dedup strategies + similarity search on small deterministic corpora."""
+"""Exact and LSH embedding top-k search on a small deterministic corpus."""
 
 import pytest
-from pyspark.sql import functions as F
 
-from entitylinking_spark.operators.dedup import (
-    dedup_exact,
-    dedup_minhash_lsh,
-    dedup_simhash,
-    embedding_near_dup_pairs,
-    ngram_jaccard_pairs,
-)
 from entitylinking_spark.operators.similarity import brute_force_topk, lsh_topk
-
-
-def _corpus(spark):
-    base = " ".join(f"tok{i}" for i in range(100))
-    near = " ".join(f"tok{i}" for i in range(98)) + " other words"
-    far = " ".join(f"zzz{i}" for i in range(100))
-    rows = [
-        (1, base), (2, base),      # exact dup pair
-        (3, near),                 # near dup of 1/2
-        (4, far), (5, "tiny"),
-    ]
-    return spark.createDataFrame(rows, ["doc_id", "text"])
-
-
-def test_dedup_exact(spark):
-    out = {r["doc_id"]: (r["rep_id"], r["is_duplicate"])
-           for r in dedup_exact(_corpus(spark)).collect()}
-    assert out[1] == (1, False)
-    assert out[2] == (1, True)
-    assert out[3][1] is False
-
-
-def test_dedup_minhash_lsh_transitive(spark):
-    out = {r["doc_id"]: r["cluster_id"]
-           for r in dedup_minhash_lsh(_corpus(spark), threshold=0.6).collect()}
-    assert out["1"] == out["2"] == out["3"]   # exact + near in one cluster
-    assert out["4"] != out["1"] and out["5"] != out["1"]
-
-
-def test_dedup_simhash(spark):
-    # simhash radius 3 targets *tiny* perturbations: 1 token of 100 changed
-    base = " ".join(f"tok{i}" for i in range(100))
-    near = " ".join(f"tok{i}" for i in range(99)) + " changed"
-    far = " ".join(f"zzz{i}" for i in range(100))
-    df = spark.createDataFrame(
-        [(1, base), (2, base), (3, near), (4, far)], ["doc_id", "text"]
-    )
-    out = {r["doc_id"]: r["cluster_id"] for r in dedup_simhash(df, radius=6).collect()}
-    assert out["1"] == out["2"] == out["3"]
-    assert out["4"] != out["1"]
-
-
-def test_dedup_simhash_mass_duplication(spark):
-    """Round-3 verdict #7: identical fingerprints are pre-grouped (one rep
-    per distinct fp enters segment blocking), so a mass-duplicated corpus
-    does not explode within-bucket pair volume — and clusters still match
-    a brute-force hamming check."""
-    base = " ".join(f"tok{i}" for i in range(100))
-    near = " ".join(f"tok{i}" for i in range(99)) + " changed"
-    rows = [(i, base) for i in range(250)]          # one fp, 250 rows
-    rows += [(1000, near), (2000, " ".join(f"zzz{i}" for i in range(100)))]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = {r["doc_id"]: r["cluster_id"] for r in dedup_simhash(df, radius=6).collect()}
-    mass = {out[str(i)] for i in range(250)}
-    assert len(mass) == 1                            # all identical rows together
-    assert out["1000"] in mass                       # near dup joins the cluster
-    assert out["2000"] not in mass
-    # pair volume: only DISTINCT fingerprints enter blocking — the 250
-    # identical rows contribute ONE representative, so candidate pairs stay
-    # O(distinct²), not O(rows²)
-    from entitylinking_spark.functions.hashing import make_simhash_udf
-    from entitylinking_spark.operators.blocking import ERConfig
-    from entitylinking_spark.operators.pairs import candidate_pairs
-
-    sh = make_simhash_udf()
-    keyed = df.select(F.col("doc_id").cast("string").alias("row_id"),
-                      sh("text").alias("fp"))
-    n_distinct = keyed.select("fp").distinct().count()
-    assert n_distinct <= 3
-
-
-def test_ngram_jaccard_pairs(spark):
-    corpus = _corpus(spark).withColumn("grp", F.lit("g0"))
-    got = {(r["id_l"], r["id_r"]): r["jaccard"]
-           for r in ngram_jaccard_pairs(corpus, block_cols=["grp"], threshold=0.5).collect()}
-    assert got[("1", "2")] == pytest.approx(1.0)
-    assert ("1", "3") in got and got[("1", "3")] > 0.8
-    assert all(not (a == "4" or b == "4") for a, b in got)
-
-
-def test_ngram_jaccard_rejects_unblocked(spark):
-    with pytest.raises(ValueError, match="block_cols"):
-        ngram_jaccard_pairs(_corpus(spark))
-
-
-def test_ngram_jaccard_salted_matches_plain_join(spark):
-    """Routing through candidate_pairs (cap/triangle-salt) must find exactly
-    the pairs a plain blocked self-join finds — tiny cap forces salting."""
-    corpus = _corpus(spark).withColumn("grp", F.lit("g0"))
-    plain = {(r["id_l"], r["id_r"]): round(r["jaccard"], 9)
-             for r in ngram_jaccard_pairs(corpus, block_cols=["grp"],
-                                          threshold=0.1, block_cap=500).collect()}
-    salted = {(r["id_l"], r["id_r"]): round(r["jaccard"], 9)
-              for r in ngram_jaccard_pairs(corpus, block_cols=["grp"],
-                                           threshold=0.1, block_cap=2).collect()}
-    assert plain == salted and plain
-
-
-def test_dedup_releases_cached_frames(spark):
-    """Round-1 verdict: dedup ops persisted the keyed signature frame with
-    no unpersist handle. They now materialize via localCheckpoint and
-    release the cache before returning."""
-    cache_mgr = spark._jsparkSession.sharedState().cacheManager()
-    cache_mgr.clearCache()
-    out1 = dedup_minhash_lsh(_corpus(spark), threshold=0.6)
-    out2 = dedup_simhash(_corpus(spark), radius=3)
-    assert out1.count() == 5 and out2.count() == 5
-    # the keyed signature frames were persist()ed through the Dataset cache
-    # manager; both must be released by the time the call returns
-    # (localCheckpoint artifacts live outside the cache manager and are
-    # GC-cleaned by the ContextCleaner)
-    assert cache_mgr.isEmpty()
-
-
-def test_dedup_verified_mode(spark):
-    """verify_ngram: keep decision on exact n-gram Jaccard, not the sketch."""
-    out = {r["doc_id"]: r["cluster_id"]
-           for r in dedup_minhash_lsh(_corpus(spark), threshold=0.6,
-                                      verify_ngram=3).collect()}
-    assert out["1"] == out["2"] == out["3"]
-    assert out["4"] != out["1"] and out["5"] != out["1"]
 
 
 def _embeddings(spark):
@@ -141,77 +12,6 @@ def _embeddings(spark):
         (5, [-1.0, 0.0, 0.0]),
     ]
     return spark.createDataFrame(rows, ["vec_id", "embedding"])
-
-
-def test_embedding_near_dup(spark):
-    got = {(r["id_l"], r["id_r"]) for r in
-           embedding_near_dup_pairs(_embeddings(spark), threshold=0.95).collect()}
-    assert got == {("1", "2")}
-
-
-def _pseudo_embeddings(spark, n, dim=8):
-    """Deterministic pseudorandom unit-cube embeddings (sha256-derived)."""
-    import hashlib
-
-    rows = []
-    for i in range(n):
-        h = hashlib.sha256(str(i).encode()).digest()
-        rows.append((i, [(b - 128) / 128.0 for b in h[:dim]]))
-    return spark.createDataFrame(rows, ["vec_id", "embedding"])
-
-
-def test_near_dup_auto_geometry_tracks_corpus(spark):
-    """Round-4 verdict #1: with n_planes unset the bucket geometry derives
-    from the corpus count (auto_n_planes), so E[bucket] tracks block_cap
-    instead of N/2^k — the near-dup twin of the ann_topk auto-sizing."""
-    from entitylinking_spark.metrics import MetricsCollector
-    from entitylinking_spark.operators.similarity import auto_n_planes
-
-    cap = 8
-    m_small, m_big = MetricsCollector(), MetricsCollector()
-    embedding_near_dup_pairs(_pseudo_embeddings(spark, 64), threshold=0.99,
-                             block_cap=cap, metrics=m_small).count()
-    embedding_near_dup_pairs(_pseudo_embeddings(spark, 1024), threshold=0.99,
-                             block_cap=cap, metrics=m_big).count()
-    rec_s = next(s for s in m_small.stages if s["stage"] == "near_dup_buckets")
-    rec_b = next(s for s in m_big.stages if s["stage"] == "near_dup_buckets")
-    assert rec_s["n_planes"] == auto_n_planes(64, cap)
-    assert rec_b["n_planes"] == auto_n_planes(1024, cap)
-    assert rec_b["n_planes"] > rec_s["n_planes"]
-    # bucket census tracks the cap as the corpus grows 16x: mean NON-EMPTY
-    # bucket size stays O(cap), instead of growing linearly in N
-    assert rec_b["mean_block"] <= 4 * cap
-
-
-def test_near_dup_mega_bucket_skip(spark):
-    """The finite default mega-bucket skip: a degenerate mass-collision
-    bucket (all-identical vectors) is dropped and counted instead of
-    generating O(S^2) pairs; skip_block_threshold=2**31-1 restores the
-    exhaustive behavior."""
-    from entitylinking_spark.metrics import MetricsCollector
-
-    n = 200
-    same = spark.createDataFrame(
-        [(i, [1.0, 0.5, -0.25, 0.125]) for i in range(n)],
-        ["vec_id", "embedding"],
-    )
-    m = MetricsCollector()
-    out = embedding_near_dup_pairs(same, threshold=0.9, block_cap=2, metrics=m)
-    assert out.count() == 0
-    rec = next(s for s in m.stages if s["stage"] == "near_dup_buckets")
-    assert rec["n_skipped"] == 1 and rec["skip_block_threshold"] == 128
-    exhaustive = embedding_near_dup_pairs(
-        same, threshold=0.9, block_cap=2, skip_block_threshold=2**31 - 1
-    )
-    assert exhaustive.count() == n * (n - 1) // 2
-
-
-def test_near_dup_empty_embeddings_raises(spark):
-    """ADVICE r4: dim inference on an empty frame must raise a clear error,
-    not 'NoneType is not subscriptable'."""
-    empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    with pytest.raises(ValueError, match="pass dim="):
-        embedding_near_dup_pairs(empty)
 
 
 def test_brute_force_topk_exact(spark):
@@ -238,44 +38,3 @@ def test_brute_force_multiple_queries(spark):
     out = brute_force_topk(emb, q, k=1).collect()
     best = {r["query_id"]: r["vec_id"] for r in out}
     assert best == {0: 1, 1: 3}
-
-
-def test_cluster_representatives_policies(spark):
-    from entitylinking_spark.operators.dedup import cluster_representatives
-
-    assign = spark.createDataFrame(
-        [(1, "a"), (2, "a"), (3, "a"), (4, "b"), (5, "b"), (6, "c")],
-        ["doc_id", "cluster_id"])
-    feats = spark.createDataFrame(
-        [(1, 10.0), (2, 30.0), (3, 30.0), (4, 5.0), (5, 2.0), (6, 7.0)],
-        ["doc_id", "quality"])
-    best = {r["doc_id"]: r for r in cluster_representatives(
-        assign, feats, "quality").collect()}
-    assert best[1]["rep_id"] == 2          # max quality, tie -> min id
-    assert best[2]["is_rep"] and not best[3]["is_rep"]
-    assert best[4]["rep_id"] == 4
-    assert best[6]["is_rep"]               # singleton is its own rep
-    worst = {r["doc_id"]: r["rep_id"] for r in cluster_representatives(
-        assign, feats, "quality", ascending=True).collect()}
-    assert worst[1] == 1 and worst[4] == 5
-
-
-def test_near_dup_arrow_kernel_matches_native(spark):
-    import numpy as np
-
-    from entitylinking_spark.operators.dedup import embedding_near_dup_pairs
-
-    rng = np.random.default_rng(3)
-    base = rng.normal(size=(5, 12))
-    rows = []
-    for i in range(40):
-        v = base[i % 5] + rng.normal(scale=0.01, size=12)
-        rows.append((i, [float(x) for x in v / np.linalg.norm(v)]))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    a = sorted(map(tuple, embedding_near_dup_pairs(
-        emb, threshold=0.9, n_planes=3, dim=12).collect()))
-    b = sorted(map(tuple, embedding_near_dup_pairs(
-        emb, threshold=0.9, n_planes=3, dim=12, kernel="arrow").collect()))
-    # identical pair sets; cosine values equal to float tolerance
-    assert [x[:2] for x in a] == [x[:2] for x in b]
-    assert all(abs(x[2] - y[2]) < 1e-12 for x, y in zip(a, b))

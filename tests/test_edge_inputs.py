@@ -8,7 +8,6 @@ as a matter of course, so these must not crash.
 from pyspark.sql import functions as F
 
 from entitylinking_spark.operators.blocking import ERConfig
-from entitylinking_spark.operators.dedup import dedup_minhash_lsh
 from entitylinking_spark.operators.linking import link_mentions
 from entitylinking_spark.plans.pipeline import resolve
 
@@ -54,12 +53,6 @@ def test_link_mentions_empty_entities(spark):
     e = spark.createDataFrame([], ENTITY_SCHEMA)
     out = {r["mention_id"]: r for r in link_mentions(m, e).collect()}
     assert out["m1"]["entity_id"] is None  # fallback ladder end state
-
-
-def test_dedup_minhash_empty_docs(spark):
-    empty = spark.createDataFrame([], DOC_SCHEMA)
-    out = dedup_minhash_lsh(empty, id_col="doc_id", text_col="text")
-    assert out.count() == 0
 
 
 def test_vocab_empty_and_single(spark):

@@ -7,9 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from entitylinking_spark.functions.hashing import (
-    hamming_distance64,
     make_minhash_udf,
-    make_simhash_udf,
     minhash_similarity,
 )
 from entitylinking_spark.functions.strings import (
@@ -78,22 +76,6 @@ class TestMinHash:
         assert sigs[0] == sigs[1]
         # different token-less contents must NOT collide
         assert sigs[2] != sigs[3] and sigs[0] != sigs[2]
-
-
-class TestSimHash:
-    def test_similar_strings_close(self, spark):
-        a = " ".join(f"tok{i}" for i in range(100))
-        b = " ".join(f"tok{i}" for i in range(99)) + " other"
-        c = " ".join(f"zzz{i}" for i in range(100))
-        df = spark.createDataFrame([(a, b), (a, c)], ["x", "y"])
-        sh = make_simhash_udf()
-        out = (
-            df.withColumn("hx", sh("x")).withColumn("hy", sh("y"))
-            .select(hamming_distance64("hx", "hy").alias("d")).collect()
-        )
-        d_sim, d_diff = out[0]["d"], out[1]["d"]
-        assert d_sim < d_diff
-        assert d_sim <= 8
 
 
 class TestStringKernels:

@@ -628,14 +628,6 @@ FROM documents ORDER BY doc_id
 """
 
 
-# 60-bit md5-derived hash of a string (similarity.srp_planes' hyperplane weights)
-_H60_SQL = (
-    "list_sum(list_transform(range(15), i -> "
-    "(strpos('0123456789abcdef', substr(md5({x}), i+1, 1)) - 1)"
-    " * (1::BIGINT << (4*(14-i)))))"
-)
-
-
 def doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LLM-pipeline quality scoring (textstats.quality_score): blended
     length / stopword / punctuation heuristic, recomputed exactly by
@@ -771,43 +763,6 @@ ORDER BY d.doc_id
 """
 
 
-def embedding_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact quantized embedding moments (embeddings.quantized_moment_sums,
-    first 8 dims): per-dim sums, upper-triangle cross sums, and the row
-    count over floor(x*4096) integers — every partial exact int64, so
-    DuckDB recomputes the sums bit-for-bit (the PCA-fit input)."""
-    from entitylinking_spark.operators.embeddings import (
-        quantized_moment_sums,
-    )
-
-    e = _t(spark, sf_dir, "embeddings")
-    return quantized_moment_sums(e, max_dim=8).orderBy("i", "j")
-
-
-EMBEDDING_MOMENTS_SQL = """
-WITH q AS (
-  SELECT vec_id,
-         list_transform(embedding[1:8],
-                        e -> CAST(floor(CAST(e AS DOUBLE) * 4096) AS BIGINT))
-           AS qv
-  FROM embeddings
-),
-g AS (
-  SELECT vec_id, unnest(qv) AS x,
-         unnest(range(0, len(qv))) AS i
-  FROM q
-)
-SELECT CAST(a.i AS INT) AS i, CAST(b.i AS INT) AS j, SUM(a.x * b.x) AS s
-FROM g a JOIN g b ON a.vec_id = b.vec_id AND a.i <= b.i
-GROUP BY 1, 2
-UNION ALL
-SELECT CAST(i AS INT), -1, SUM(x) FROM g GROUP BY 1
-UNION ALL
-SELECT -1, -1, count(*) FROM q
-ORDER BY i, j
-"""
-
-
 def vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus vocabulary build (vocab.vocabulary): token dictionary with
     tf/df and smoothed idf, min_df=2 pruned, top-50 by (tf desc, token) —
@@ -901,106 +856,6 @@ SELECT lang AS "group", count(*) AS n_docs,
        ROUND(quantile_cont(n_chars, 0.9), 6) AS p90_r,
        ROUND(quantile_cont(n_chars, 0.99), 6) AS p99_r
 FROM documents GROUP BY lang ORDER BY "group"
-"""
-
-
-def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T1/X14 embedding top-k: exact cosine top-5 for vec_id < 3 queries."""
-    from entitylinking_spark.operators.similarity import brute_force_topk
-
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        # full-double cosine (same 4-dp boundary guard as ann_topk_shuffle)
-        "embedding", F.transform("embedding", lambda x: x.cast("double"))
-    )
-    q = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = brute_force_topk(emb, q, k=5)
-    return out.select(
-        "query_id", "vec_id", "rank", F.round("cosine", 4).alias("cosine_r")
-    ).orderBy("query_id", "rank")
-
-
-SIM_TOPK_SQL = """
-WITH q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 3),
-scored AS (
-  SELECT q.query_id, e.vec_id,
-         list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(q.qvec AS DOUBLE[])) AS cosine
-  FROM embeddings e CROSS JOIN q
-),
-ranked AS (
-  SELECT query_id, vec_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
-  FROM scored
-)
-SELECT query_id, vec_id, CAST(rank AS INT) AS rank, ROUND(cosine, 4) AS cosine_r
-FROM ranked WHERE rank <= 5 ORDER BY query_id, rank
-"""
-
-
-def ivf_topk_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T1 scale path, IVF variant (operators/ivf.py): corpus partitioned
-    into 16 Voronoi cells around data-seeded quantized centroids (vec_id <
-    16), queries vec_id < 3 probe their 2 nearest cells, exact cosine
-    top-5 inside. Cell assignment is pure integer arithmetic (floor(x *
-    2**12), a power-of-two scale — exact in double), so DuckDB recomputes
-    every cell id bit-for-bit; the final cosine uses the same full-double
-    4-dp guard as similarity_topk."""
-    from entitylinking_spark.operators.ivf import ivf_topk, seed_centroids
-
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.transform("embedding", lambda x: x.cast("double"))
-    )
-    cents = seed_centroids(emb, 16)
-    q = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = ivf_topk(emb, q, k=5, centroids=cents, nprobe=2)
-    return out.select(
-        "query_id", "vec_id", "rank", F.round("cosine", 4).alias("cosine_r")
-    ).orderBy("query_id", "rank")
-
-
-IVF_TOPK_SQL = """
-WITH qv AS (
-  SELECT vec_id,
-         list_transform(embedding, x -> floor(CAST(x AS DOUBLE) * 4096.0)) AS qvec,
-         CAST(embedding AS DOUBLE[]) AS dvec
-  FROM embeddings
-),
-cent AS (
-  SELECT vec_id AS cid, qvec AS cvec FROM qv ORDER BY vec_id LIMIT 16
-),
-assigned AS (
-  SELECT e.vec_id, c.cid,
-         ROW_NUMBER() OVER (
-           PARTITION BY e.vec_id
-           ORDER BY list_inner_product(c.cvec, c.cvec)
-                    - 2 * list_inner_product(e.qvec, c.cvec), c.cid
-         ) AS rnk
-  FROM qv e CROSS JOIN cent c
-),
-cells AS (SELECT vec_id, cid AS cell FROM assigned WHERE rnk = 1),
-probes AS (
-  SELECT vec_id AS query_id, cid AS cell FROM assigned
-  WHERE vec_id < 3 AND rnk <= 2
-),
-scored AS (
-  SELECT p.query_id, ce.vec_id,
-         list_cosine_similarity(ec.dvec, eq.dvec) AS cosine
-  FROM probes p
-  JOIN cells ce ON ce.cell = p.cell
-  JOIN qv ec ON ec.vec_id = ce.vec_id
-  JOIN qv eq ON eq.vec_id = p.query_id
-),
-ranked AS (
-  SELECT query_id, vec_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, vec_id) AS rank
-  FROM scored
-)
-SELECT query_id, vec_id, CAST(rank AS INT) AS rank, ROUND(cosine, 4) AS cosine_r
-FROM ranked WHERE rank <= 5 ORDER BY query_id, rank
 """
 
 
@@ -1170,84 +1025,6 @@ SELECT mention_id, group_id,
          AS entity_ids
 FROM allm GROUP BY mention_id, group_id
 ORDER BY mention_id, group_id
-"""
-
-
-
-
-def ann_topk_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-scale ANN top-k (round-3): EVERY embedding row queries the
-    index — the reference's per-mention probe shape
-    (/root/reference/Sparkle/database.py:165-183) with a corpus-sized query
-    side, so nothing is broadcast: SRP bucket shuffle join + 1-bit
-    multi-probe + hot-bucket salting. The SRP planes are integer-quantized
-    md5-derived weights and the embedding components are floor(x*4096), so
-    every bucket bit is pure BIGINT arithmetic that DuckDB recomputes
-    bit-for-bit (candidate sets match exactly; cosine ranking follows the
-    SIM_TOPK precedent)."""
-    from entitylinking_spark.operators.similarity import lsh_topk_shuffle
-
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        # full-double cosine arithmetic (float32 products shift ~1e-7 and
-        # can land on a 4-dp rounding boundary vs DuckDB's DOUBLE[] math)
-        "embedding", F.transform("embedding", lambda x: x.cast("double"))
-    )
-    q = emb.select(F.col("vec_id").alias("query_id"), "embedding")
-    out = lsh_topk_shuffle(emb, q, k=3, n_planes=8, probe_bits=1, dim=64)
-    return out.select(
-        "query_id", "vec_id", "rank", F.round("cosine", 4).alias("cosine_r")
-    ).orderBy("query_id", "rank")
-
-
-ANN_TOPK_SQL = f"""
-WITH planes AS (
-  SELECT p, d,
-         ({_H60_SQL.format(x="'srp:' || CAST(p AS VARCHAR) || ':' || CAST(d AS VARCHAR)")})
-           % 4096 - 2048 AS w
-  FROM range(8) tp(p) CROSS JOIN range(64) td(d)
-),
-qe AS (
-  SELECT vec_id,
-         list_transform(embedding,
-                        x -> CAST(floor(CAST(x AS DOUBLE) * 4096) AS BIGINT)) AS e
-  FROM embeddings
-),
-dots AS (
-  SELECT q.vec_id, pl.p, SUM(q.e[pl.d + 1] * pl.w) AS dot
-  FROM qe q CROSS JOIN planes pl
-  GROUP BY 1, 2
-),
-buckets AS (
-  SELECT vec_id,
-         CAST(SUM(CASE WHEN dot > 0 THEN (1::BIGINT << p) ELSE 0 END) AS BIGINT) AS bucket
-  FROM dots GROUP BY 1
-),
-probes AS (
-  SELECT vec_id AS query_id, bucket AS pbucket FROM buckets
-  UNION
-  SELECT b.vec_id, xor(b.bucket, (1::BIGINT << f.j))
-  FROM buckets b CROSS JOIN range(8) f(j)
-),
-cand AS (
-  SELECT pr.query_id, cb.vec_id
-  FROM probes pr JOIN buckets cb ON cb.bucket = pr.pbucket
-),
-scored AS (
-  SELECT c.query_id, c.vec_id,
-         list_cosine_similarity(CAST(ce.embedding AS DOUBLE[]),
-                                CAST(qv.embedding AS DOUBLE[])) AS cosine
-  FROM cand c
-  JOIN embeddings ce ON ce.vec_id = c.vec_id
-  JOIN embeddings qv ON qv.vec_id = c.query_id
-),
-ranked AS (
-  SELECT query_id, vec_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, vec_id) AS rank
-  FROM scored
-)
-SELECT query_id, vec_id, CAST(rank AS INT) AS rank, ROUND(cosine, 4) AS cosine_r
-FROM ranked WHERE rank <= 3 ORDER BY query_id, rank
 """
 
 
@@ -2329,8 +2106,6 @@ _ORACLE_CHECKED: dict[str, tuple[Callable, str]] = {
     "dedup_exact_docs": (dedup_exact_docs, DEDUP_EXACT_SQL),
     "g3_connected_components": (g3_connected_components, G3_SQL),
     "lang_id_stopword": (lang_id_stopword, LANG_ID_SQL),
-    "similarity_topk": (similarity_topk, SIM_TOPK_SQL),
-    "ivf_topk_probe": (ivf_topk_probe, IVF_TOPK_SQL),
     "a2_collect_sorted": (a2_collect_sorted, A2_SQL),
     "q_cube_counts": (q_cube_counts, CUBE_SQL),
     "j3_channel_merge": (j3_channel_merge, J3_SQL),
@@ -2339,7 +2114,6 @@ _ORACLE_CHECKED: dict[str, tuple[Callable, str]] = {
     "media_payload_audit": (media_payload_audit, MEDIA_AUDIT_SQL),
     "x9_bm25_topk": (x9_bm25_topk, X9_BM25_SQL),
     "a7_recall_at_k": (a7_recall_at_k, A7_SQL),
-    "ann_topk_shuffle": (ann_topk_shuffle, ANN_TOPK_SQL),
     "doc_quality": (doc_quality, DOC_QUALITY_SQL),
     "doc_repetition": (doc_repetition, DOC_REPETITION_SQL),
     "dup_lines": (dup_lines, DUP_LINES_SQL),
@@ -2358,7 +2132,6 @@ _ORACLE_CHECKED: dict[str, tuple[Callable, str]] = {
     "vocab_topk": (vocab_topk, VOCAB_TOPK_SQL),
     "pmi_bigrams": (pmi_bigrams, PMI_BIGRAMS_SQL),
     "corpus_length_profile": (corpus_length_profile, LENGTH_PROFILE_SQL),
-    "embedding_moments": (embedding_moments, EMBEDDING_MOMENTS_SQL),
     "resize_thumbs": (resize_thumbs, RESIZE_THUMBS_SQL),
     "bpe_pair_counts": (bpe_pair_counts, BPE_PAIR_COUNTS_SQL),
     "oov_docs": (oov_docs, OOV_DOCS_SQL),
@@ -2366,15 +2139,8 @@ _ORACLE_CHECKED: dict[str, tuple[Callable, str]] = {
     "tfidf_terms": (tfidf_terms, TFIDF_TERMS_SQL),
 }
 
-_ROWS_ONLY: dict[str, Callable] = {}
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for name, (fn, _) in _ORACLE_CHECKED.items():
-        out[name] = fn
-    out.update(_ROWS_ONLY)
-    return out
+    return {name: fn for name, (fn, _) in _ORACLE_CHECKED.items()}
 
 
 def oracle_sql() -> dict[str, str]:

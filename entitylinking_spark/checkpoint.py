@@ -7,43 +7,25 @@ automatically. Here the same idea becomes checkpoint tables with completion
 markers: a stage whose marker exists is read back instead of recomputed, so
 a killed run resumes from the last complete stage (north_rule).
 
-Backend: `writeTo(catalog.table)` when an Iceberg catalog is configured
-(deployment), partitioned Parquet + a `_STAGE_COMPLETE` marker file
-otherwise (this sandbox has no Iceberg jars — SURVEY.md §7). Both expose
-identical semantics to the pipeline.
+Backend: partitioned Parquet + a driver-written `_STAGE_COMPLETE` JSON
+marker per stage, which also carries the stage's config/input fingerprint.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import re
 import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 
 
-def validate_fingerprint(fp: str) -> str:
-    """Fingerprints are interpolated into ALTER TABLE SQL: restrict to a
-    safe charset (ours are hex; ADVICE r3 — a quote would break the
-    statement / open an injection surface if fingerprints ever derive
-    from user-supplied config strings)."""
-    if not re.fullmatch(r"[0-9a-zA-Z_.:-]+", str(fp)):
-        raise ValueError(
-            f"unsafe checkpoint fingerprint {fp!r}: expected only "
-            "[0-9a-zA-Z_.:-]"
-        )
-    return str(fp)
-
-
 class CheckpointStore:
-    def __init__(self, root: str | None, spark: SparkSession,
-                 iceberg_catalog: str | None = None):
+    def __init__(self, root: str | None, spark: SparkSession):
         """root=None disables checkpointing (pure in-memory run)."""
         self.root = root
         self.spark = spark
-        self.iceberg_catalog = iceberg_catalog
         if root:
             os.makedirs(root, exist_ok=True)
 
@@ -59,32 +41,14 @@ class CheckpointStore:
     def enabled(self) -> bool:
         return self.root is not None
 
-    _FP_PROP = "elspark.fingerprint"
-
     def is_complete(self, stage: str, fingerprint: str | None = None) -> bool:
         """Complete AND (when a fingerprint is given) written under the same
         config/input fingerprint. A marker from a different fingerprint is
         stale — round-1 advice: resume keyed on stage name alone silently
-        returned tables computed with a different ERConfig or input.
-
-        Iceberg backend: the fingerprint is stored as the table property
-        `elspark.fingerprint` (write()) and compared here, so both backends
-        expose the same invalidation semantics (ADVICE r2 — previously
-        tableExists() alone let a stale Iceberg stage resume). A property
-        read failure is treated as stale (recompute), never as complete.
+        returned tables computed with a different ERConfig or input. A
+        marker read failure is treated as stale (recompute), never as
+        complete.
         """
-        if self.iceberg_catalog:
-            tbl = f"{self.iceberg_catalog}.{stage}"
-            try:
-                if not self.spark.catalog.tableExists(tbl):
-                    return False
-                if fingerprint is None:
-                    return True
-                rows = self.spark.sql(f"SHOW TBLPROPERTIES {tbl}").collect()
-                props = {r["key"]: r["value"] for r in rows}
-                return props.get(self._FP_PROP) == fingerprint
-            except Exception:
-                return False
         if not (self.enabled and os.path.exists(self._marker(stage))):
             return False
         if fingerprint is None:
@@ -105,18 +69,6 @@ class CheckpointStore:
         """
         if not self.enabled:
             return df
-        if self.iceberg_catalog:
-            tbl = f"{self.iceberg_catalog}.{stage}"
-            df.writeTo(tbl).createOrReplace()
-            fp = (meta or {}).get("fingerprint")
-            if fp is not None:
-                # mirrors the Parquet marker: is_complete() compares this
-                # property for stale-stage invalidation
-                self.spark.sql(
-                    f"ALTER TABLE {tbl} SET TBLPROPERTIES "
-                    f"('{self._FP_PROP}'='{validate_fingerprint(fp)}')"
-                )
-            return self.spark.read.table(tbl)
         path = self._dir(stage)
         if os.path.exists(path):
             shutil.rmtree(path)
@@ -126,8 +78,6 @@ class CheckpointStore:
         return self.spark.read.parquet(path)
 
     def read(self, stage: str) -> DataFrame:
-        if self.iceberg_catalog:
-            return self.spark.read.table(f"{self.iceberg_catalog}.{stage}")
         return self.spark.read.parquet(self._dir(stage))
 
     def get_or_compute(self, stage: str, compute,
@@ -137,18 +87,13 @@ class CheckpointStore:
         fingerprint) is invalidated and recomputed."""
         if self.is_complete(stage, fingerprint=fingerprint):
             return self.read(stage)
-        if self.enabled and not self.iceberg_catalog and os.path.exists(self._marker(stage)):
+        if self.enabled and os.path.exists(self._marker(stage)):
             self.invalidate(stage)
         meta = {"fingerprint": fingerprint} if fingerprint is not None else None
         return self.write(stage, compute(), meta=meta)
 
     def invalidate(self, stage: str) -> None:
         if not self.enabled:
-            return
-        if self.iceberg_catalog:
-            self.spark.sql(
-                f"DROP TABLE IF EXISTS {self.iceberg_catalog}.{stage}"
-            )
             return
         path = self._dir(stage)
         if os.path.exists(path):
@@ -165,26 +110,13 @@ class CheckpointStore:
         expressed on plain Parquet with a `_batch_id` column)."""
         if not self.enabled:
             raise ValueError("append() requires a checkpoint root")
-        if self.iceberg_catalog:
-            tbl = f"{self.iceberg_catalog}.{stage}"
-            if self.spark.catalog.tableExists(tbl):
-                df.writeTo(tbl).append()
-            else:
-                df.writeTo(tbl).create()
-            return
         df.write.mode("append").parquet(self._dir(stage))
 
     def list_stages(self, prefix: str = "") -> list[str]:
-        """Stage names under this store that start with `prefix` (both
-        backends; used to locate the newest versioned state commit)."""
+        """Stage names under this store that start with `prefix` (used to
+        locate the newest versioned state commit)."""
         if not self.enabled:
             return []
-        if self.iceberg_catalog:
-            try:
-                tables = self.spark.catalog.listTables(self.iceberg_catalog)
-            except Exception:
-                return []
-            return [t.name for t in tables if t.name.startswith(prefix)]
         return [
             d for d in os.listdir(self.root)
             if d.startswith(prefix) and os.path.isdir(os.path.join(self.root, d))

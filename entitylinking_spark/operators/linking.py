@@ -151,8 +151,8 @@ def candidate_channels(mentions: DataFrame, entities: DataFrame,
     # slim (corpus, document_id, sig, band_key) frame materialized ONCE:
     # the stop-band census and the anti-joined left side both read it, and
     # without the checkpoint Catalyst runs the MinHash Arrow kernel over
-    # the entity texts twice (the embedding_near_dup_pairs pattern). Slim =
-    # e_text is dropped before materialization; sig is num_perm ints.
+    # the entity texts twice. Slim = e_text is dropped before
+    # materialization; sig is num_perm ints.
     e_bands = bands(
         e.select("corpus", "document_id", mh(F.col("e_text")).alias("sig"))
     ).localCheckpoint(eager=True)

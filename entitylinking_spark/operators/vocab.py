@@ -221,8 +221,7 @@ def heavy_hitters(docs: DataFrame, min_count: int,
     Three passes, two corpus scans:
       1. per-partition CMS partial sums (mapInPandas, np.add.at), merged
          by summation on the driver — depth x width int64 (4x256k = 8 MB
-         default), the same partial-aggregation shape as
-         embeddings.quantized_moment_sums;
+         default);
       2. map-side candidate filter: the merged sketch broadcasts and a
          token survives only if min(row estimates) >= min_count;
       3. exact groupBy COUNT of the survivors (the only shuffle) and the
@@ -262,8 +261,7 @@ def heavy_hitters(docs: DataFrame, min_count: int,
     # one map-side-combined sum) and collect only the MERGED sketch:
     # driver memory is O(depth*width), independent of the partition
     # count — collecting raw per-partition sketches would be
-    # O(partitions*width) (10k partitions x 2 MB = 20 GB; the
-    # quantized_moment_sums discipline)
+    # O(partitions*width) (10k partitions x 2 MB = 20 GB)
     merged = (
         docs.mapInPandas(partials, "r int, pos long, v long")
         .groupBy("r", "pos").agg(F.sum("v").alias("v"))
@@ -310,9 +308,7 @@ def tfidf_vectors(docs: DataFrame, vocab: DataFrame,
                   token_col: str = "token", idf_col: str = "idf",
                   l2_normalize: bool = True) -> DataFrame:
     """Dense TF-IDF document vectors over a FIXED vocabulary frame — the
-    classical no-model featurization that bridges the text operators
-    into the embedding stack (pca_fit/pca_project, ivf_topk,
-    lsh_topk_shuffle all take the output directly).
+    classical no-model featurization of the text operators.
 
     vocab: (token_col, idf_col) — e.g. `vocabulary(...)` pruned to top-K
     by the caller (dimension = vocab row count; keep it dimension-sized:

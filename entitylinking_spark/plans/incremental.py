@@ -173,8 +173,7 @@ def resolve_increment(
 #     runs: it rewrites the committed rows into generation N+1 tables,
 #     commits a meta pointing at them, then drops generation N — the same
 #     write-new/commit/drop-old discipline, so compaction is crash-safe
-#     too. (On the Iceberg backend, native table maintenance
-#     (rewrite_data_files) is the production alternative.)
+#     too.
 #
 # Crash/replay safety (foreachBatch is at-least-once): load filters rows
 # beyond the last COMMITTED batch id, and a replayed batch that re-appends
@@ -240,7 +239,7 @@ def save_state(state: IncrementalState, store, batch_id: int,
     increasing per store — foreachBatch's batch_id with a stable streaming
     checkpoint). Write cost: O(this increment) for keyed/content appends
     plus the slim (row_id, cluster_id) snapshot — the one O(corpus) term,
-    two short columns, Iceberg/Parquet-compressed.
+    two short columns, Parquet-compressed.
 
     `suspect=True` records this batch in meta `suspect_batches`: pass it
     when a previous attempt at the SAME batch may have appended before

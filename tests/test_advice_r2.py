@@ -7,8 +7,6 @@
    runs end to end on the clamped config.
 3. score_pairs' equal-name split is null-safe: a pair with a NULL fname
    is scored, not silently dropped from both branches.
-4. Iceberg fingerprint plumbing: write() records the fingerprint property
-   (exercised here only at the API level — no Iceberg jars in-sandbox).
 """
 
 import pytest
@@ -82,9 +80,3 @@ def test_null_fname_pair_not_dropped(spark):
     assert scored[0]["score"] == pytest.approx(
         cfg.w_name * scored[0]["name_sim"] + cfg.w_content * 1.0
     )
-
-
-def test_checkpoint_fingerprint_prop_name():
-    from entitylinking_spark.checkpoint import CheckpointStore
-
-    assert CheckpointStore._FP_PROP == "elspark.fingerprint"

@@ -1,13 +1,11 @@
 """Round-3 ADVICE fixes: jw_evaluated contract, visible coarse-gate clamp,
-fingerprint charset validation, malformed-WAV errors (the WAV case lives in
-test_media_decoders.py)."""
+malformed-WAV errors (the WAV case lives in test_media_decoders.py)."""
 
 import dataclasses
 
 import pytest
 from pyspark.sql import functions as F
 
-from entitylinking_spark.checkpoint import validate_fingerprint
 from entitylinking_spark.operators.blocking import ERConfig, with_keys
 from entitylinking_spark.operators.scoring import score_pairs
 from entitylinking_spark.synthdata import generate_repo_files
@@ -71,9 +69,3 @@ def test_coarse_gate_clamp_warns():
         cfg = ERConfig(num_perm=8, num_bands=4, rows_per_band=2,
                        coarse_bands=16, coarse_rows=2)
     assert cfg.coarse_bands * cfg.coarse_rows <= cfg.num_perm
-
-
-def test_fingerprint_charset():
-    assert validate_fingerprint("deadbeef01") == "deadbeef01"
-    with pytest.raises(ValueError, match="unsafe checkpoint fingerprint"):
-        validate_fingerprint("x'; DROP TABLE t; --")

@@ -64,7 +64,7 @@ def _duck_round(col, digits: int):
     half (e.g. a per-doc ratio c/n with n divisible by 5): the binary
     double sits a hair off the half, BigDecimal honors that side, while
     the FP product rounds back ONTO the half and std::round takes it away
-    from zero. doc_repetition/dup_lines went driver-red on exactly this
+    from zero. Two per-doc ratio queries went driver-red on exactly this
     class in round 5 (rows+schema green, hash red, bit-exact locally).
 
     Emulation measured 0/8111 disagreements vs DuckDB 1.0.0 ROUND on a
@@ -601,261 +601,6 @@ G3_SQL = """
 SELECT printf('v%08d', vec_id) AS row_id,
        printf('v%08d', MIN(vec_id) OVER (PARTITION BY label)) AS cluster_id
 FROM embeddings ORDER BY row_id
-"""
-
-
-def lang_id_stopword(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language-ID heuristic label (string output only — no float compare)."""
-    from entitylinking_spark.operators.textstats import detect_language
-
-    d = _t(spark, sf_dir, "documents")
-    return d.select("doc_id", detect_language("text").alias("detected")).orderBy("doc_id")
-
-
-_SW = "'the','of','and','to','in','a','is','that','it','for','on','as','with','was','be','by','are','this','have','from','or','an','at','not','but','had','his','they','you','which','one','all','were','her','she','there'"
-
-LANG_ID_SQL = f"""
-SELECT doc_id,
-       CASE WHEN len(list_intersect(list_distinct(list_filter(
-                    regexp_split_to_array(lower(text), '[^a-z0-9_]+'), t -> t <> '')),
-                  [{_SW}]))
-                 >= 0.08 * len(list_distinct(list_filter(
-                    regexp_split_to_array(lower(text), '[^a-z0-9_]+'), t -> t <> '')))
-            AND len(list_distinct(list_filter(
-                    regexp_split_to_array(lower(text), '[^a-z0-9_]+'), t -> t <> ''))) > 0
-            THEN 'en' ELSE 'other' END AS detected
-FROM documents ORDER BY doc_id
-"""
-
-
-def doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LLM-pipeline quality scoring (textstats.quality_score): blended
-    length / stopword / punctuation heuristic, recomputed exactly by
-    DuckDB (token parity proven by x6; stopword parity by lang_id)."""
-    from entitylinking_spark.operators.textstats import quality_score
-
-    d = _t(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id", _duck_round(quality_score("text"), 4).alias("quality_r")
-    ).orderBy("doc_id")
-
-
-_TOKS_SQL = ("list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), "
-             "t -> t <> '')")
-
-DOC_QUALITY_SQL = f"""
-WITH t AS (
-  SELECT doc_id,
-         len({_TOKS_SQL}) AS ntok,
-         len(list_distinct({_TOKS_SQL})) AS ndis,
-         len(list_intersect(list_distinct({_TOKS_SQL}), [{_SW}])) AS hits,
-         length(text) AS nchar,
-         length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) AS npunct
-  FROM documents
-)
-SELECT doc_id,
-       ROUND(
-         0.4 * least(CAST(ntok AS DOUBLE) / 200.0, 1.0)
-       + 0.3 * least((CASE WHEN ndis = 0 THEN 0.0
-                           ELSE CAST(hits AS DOUBLE) / ndis END) / 0.3, 1.0)
-       + 0.3 * (1.0 - greatest((CASE WHEN nchar = 0 THEN 0.0
-                                     ELSE CAST(npunct AS DOUBLE) / nchar END)
-                               - 0.15, 0.0) / 0.85)
-       , 4) AS quality_r
-FROM t ORDER BY doc_id
-"""
-
-
-def doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LLM-pipeline Gopher-style repetition signals (textstats.
-    repetition_stats, Rae et al. 2021 Table A1 token variant): per-doc
-    top-bigram and duplicate-bigram occurrence fractions. Fractions are
-    one IEEE double division of two exact integers in both engines, so
-    4-dp rounding is deterministic."""
-    from entitylinking_spark.operators.textstats import repetition_stats
-
-    d = _t(spark, sf_dir, "documents")
-    out = repetition_stats(d, n=2)
-    return out.select(
-        "doc_id",
-        F.col("n_grams").cast("long").alias("n_grams"),
-        F.col("top_gram_count").cast("long").alias("top_gram_count"),
-        _duck_round(F.col("top_gram_frac"), 4).alias("top_gram_frac_r"),
-        _duck_round(F.col("dup_gram_frac"), 4).alias("dup_gram_frac_r"),
-    ).orderBy("doc_id")
-
-
-DOC_REPETITION_SQL = f"""
-WITH toks AS (SELECT doc_id, {_TOKS_SQL} AS t FROM documents),
-bg AS (
-  SELECT doc_id,
-         unnest(list_transform(generate_series(1, len(t) - 1),
-                               i -> t[i] || ' ' || t[i + 1])) AS gram
-  FROM toks
-),
-per_gram AS (SELECT doc_id, gram, count(*) AS c FROM bg GROUP BY 1, 2),
-per_doc AS (
-  SELECT doc_id, sum(c) AS n_grams, max(c) AS top_gram_count,
-         CAST(max(c) AS DOUBLE) / sum(c) AS topf,
-         CAST(sum(c) - count(*) AS DOUBLE) / sum(c) AS dupf
-  FROM per_gram GROUP BY 1
-)
-SELECT d.doc_id,
-       COALESCE(p.n_grams, 0) AS n_grams,
-       COALESCE(p.top_gram_count, 0) AS top_gram_count,
-       ROUND(COALESCE(p.topf, 0.0), 4) AS top_gram_frac_r,
-       ROUND(COALESCE(p.dupf, 0.0), 4) AS dup_gram_frac_r
-FROM documents d LEFT JOIN per_doc p ON d.doc_id = p.doc_id
-ORDER BY d.doc_id
-"""
-
-
-def dup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LLM-pipeline duplicate-line stats (textstats.duplicate_line_stats):
-    the documents table is reshaped into 3 lines per doc (the first 40
-    chars repeated twice + the next 40), so every doc has a known
-    duplicate line and the char-weighted fraction is exercised."""
-    from entitylinking_spark.operators.textstats import duplicate_line_stats
-
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.concat_ws(
-            "\n",
-            F.substring("text", 1, 40),
-            F.substring("text", 1, 40),
-            F.substring("text", 41, 40),
-        ).alias("text"),
-    )
-    out = duplicate_line_stats(d)
-    return out.select(
-        "doc_id",
-        F.col("n_lines").cast("long").alias("n_lines"),
-        _duck_round(F.col("dup_line_frac"), 4).alias("dup_line_frac_r"),
-        _duck_round(F.col("dup_line_char_frac"), 4).alias("dup_line_char_frac_r"),
-    ).orderBy("doc_id")
-
-
-DUP_LINES_SQL = """
-WITH d AS (
-  SELECT doc_id,
-         substr(text, 1, 40) || chr(10) || substr(text, 1, 40)
-         || chr(10) || substr(text, 41, 40) AS text
-  FROM documents
-),
-ln AS (
-  SELECT doc_id, unnest(string_split(text, chr(10))) AS line FROM d
-),
-nz AS (SELECT doc_id, line FROM ln WHERE trim(line) <> ''),
-per_line AS (SELECT doc_id, line, count(*) AS c FROM nz GROUP BY 1, 2),
-per_doc AS (
-  SELECT doc_id, sum(c) AS n_lines,
-         CAST(sum(c) - count(*) AS DOUBLE) / sum(c) AS dupf,
-         CAST(sum((c - 1) * length(line)) AS DOUBLE)
-           / sum(c * length(line)) AS dupcf
-  FROM per_line GROUP BY 1
-)
-SELECT d.doc_id,
-       COALESCE(p.n_lines, 0) AS n_lines,
-       ROUND(COALESCE(p.dupf, 0.0), 4) AS dup_line_frac_r,
-       ROUND(COALESCE(p.dupcf, 0.0), 4) AS dup_line_char_frac_r
-FROM d LEFT JOIN per_doc p ON d.doc_id = p.doc_id
-ORDER BY d.doc_id
-"""
-
-
-def vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus vocabulary build (vocab.vocabulary): token dictionary with
-    tf/df and smoothed idf, min_df=2 pruned, top-50 by (tf desc, token) —
-    a deterministic total order, so the LIMIT sets agree."""
-    from entitylinking_spark.operators.vocab import vocabulary
-
-    d = _t(spark, sf_dir, "documents")
-    out = vocabulary(d, min_df=2, max_vocab=50)
-    return out.select(
-        "token", "tf", "df", F.round("idf", 6).alias("idf_r")
-    )
-
-
-VOCAB_TOPK_SQL = f"""
-WITH toks AS (
-  SELECT doc_id, unnest({_TOKS_SQL}) AS token FROM documents
-),
-v AS (
-  SELECT token, count(*) AS tf, count(DISTINCT doc_id) AS df
-  FROM toks GROUP BY 1 HAVING count(DISTINCT doc_id) >= 2
-),
-n AS (SELECT count(*) AS n FROM documents)
-SELECT token, tf, df,
-       ROUND(ln((n + 1.0) / (df + 1.0)) + 1.0, 6) AS idf_r
-FROM v, n ORDER BY tf DESC, token ASC LIMIT 50
-"""
-
-
-def pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Adjacent-bigram PMI (vocab.bigram_pmi, min_count=8): collocation
-    score ln(p12/(p1 p2)) with occurrence-count probabilities; the same
-    division/log order in both engines, rounded to 6."""
-    from entitylinking_spark.operators.vocab import bigram_pmi
-
-    d = _t(spark, sf_dir, "documents")
-    out = bigram_pmi(d, min_count=8)
-    return out.select(
-        "w1", "w2", "n_pair", F.round("pmi", 6).alias("pmi_r")
-    ).orderBy("w1", "w2")
-
-
-PMI_BIGRAMS_SQL = f"""
-WITH toks AS (SELECT doc_id, {_TOKS_SQL} AS t FROM documents),
-uni AS (SELECT unnest(t) AS token FROM toks),
-ucnt AS (SELECT token, count(*) AS n_tok FROM uni GROUP BY 1),
-big AS (
-  SELECT unnest(list_transform(generate_series(1, len(t) - 1),
-                               i -> array_to_string(t[i:i+1], ' '))) AS bigram
-  FROM toks
-),
-bcnt AS (
-  SELECT bigram, count(*) AS n_pair FROM big GROUP BY 1
-  HAVING count(*) >= 8
-),
-tot AS (SELECT (SELECT count(*) FROM uni) AS t_uni,
-               (SELECT count(*) FROM big) AS t_bi)
-SELECT split_part(bigram, ' ', 1) AS w1,
-       split_part(bigram, ' ', 2) AS w2,
-       n_pair,
-       ROUND(ln((n_pair / t_bi) /
-                ((u1.n_tok / t_uni) * (u2.n_tok / t_uni))), 6) AS pmi_r
-FROM bcnt
-JOIN ucnt u1 ON u1.token = split_part(bigram, ' ', 1)
-JOIN ucnt u2 ON u2.token = split_part(bigram, ' ', 2), tot
-ORDER BY w1, w2
-"""
-
-
-def corpus_length_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language exact length percentiles (vocab.length_profile):
-    Spark percentile() and DuckDB quantile_cont share the linear-
-    interpolation definition, so the values match to rounding."""
-    from entitylinking_spark.operators.vocab import length_profile
-
-    d = _t(spark, sf_dir, "documents")
-    out = length_profile(d, group_col="lang", length_col="n_chars",
-                         percentiles=(0.5, 0.9, 0.99))
-    return out.select(
-        "group", "n_docs",
-        _duck_round(F.col("mean_len"), 6).alias("mean_len_r"),
-        _duck_round(F.col("p50"), 6).alias("p50_r"),
-        _duck_round(F.col("p90"), 6).alias("p90_r"),
-        _duck_round(F.col("p99"), 6).alias("p99_r"),
-    ).orderBy("group")
-
-
-LENGTH_PROFILE_SQL = """
-SELECT lang AS "group", count(*) AS n_docs,
-       ROUND(avg(n_chars), 6) AS mean_len_r,
-       ROUND(quantile_cont(n_chars, 0.5), 6) AS p50_r,
-       ROUND(quantile_cont(n_chars, 0.9), 6) AS p90_r,
-       ROUND(quantile_cont(n_chars, 0.99), 6) AS p99_r
-FROM documents GROUP BY lang ORDER BY "group"
 """
 
 
@@ -1623,191 +1368,6 @@ FROM m ORDER BY media_id
 """
 
 
-def tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TF-IDF featurization (vocab.tfidf_vectors) in sparse row form:
-    every document's nonzero components over the top-50 vocabulary,
-    re-labeled with their tokens. DuckDB recomputes vocab, tf, idf, the
-    per-doc l2 norm and each component (6dp — transcendental tail)."""
-    from entitylinking_spark.operators.vocab import tfidf_vectors, vocabulary
-
-    d = _t(spark, sf_dir, "documents")
-    v = vocabulary(d, max_vocab=50)
-    toks = sorted(r["token"] for r in v.select("token").collect())
-    out = tfidf_vectors(d, v)
-    names = F.array(*[F.lit(t) for t in toks])
-    return (
-        out.select(
-            "doc_id", F.posexplode("tfidf").alias("_p", "val")
-        )
-        .filter(F.col("val") != 0.0)
-        .select(
-            "doc_id",
-            F.element_at(names, F.col("_p") + 1).alias("token"),
-            F.round("val", 6).alias("val_r"),
-        )
-        .orderBy("doc_id", "token")
-    )
-
-
-TFIDF_TERMS_SQL = """
-WITH toks AS (
-  SELECT doc_id, t AS token
-  FROM documents,
-       UNNEST(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'),
-                          x -> x <> '')) u(t)
-),
-vc AS (
-  SELECT token, COUNT(*) AS tf, COUNT(DISTINCT doc_id) AS df
-  FROM toks GROUP BY token
-),
-nn AS (SELECT COUNT(*) AS n FROM documents),
-vocab AS (
-  SELECT token, ln((n + 1.0) / (df + 1.0)) + 1.0 AS idf
-  FROM vc, nn ORDER BY tf DESC, token LIMIT 50
-),
-dt AS (
-  SELECT tk.doc_id, tk.token, COUNT(*) AS tf, ANY_VALUE(v.idf) AS idf
-  FROM toks tk JOIN vocab v ON v.token = tk.token
-  GROUP BY tk.doc_id, tk.token
-),
-nrm AS (
-  SELECT doc_id, sqrt(SUM(tf * idf * tf * idf)) AS l2 FROM dt GROUP BY doc_id
-)
-SELECT dt.doc_id, dt.token,
-       ROUND(dt.tf * dt.idf / nrm.l2, 6) AS val_r
-FROM dt JOIN nrm USING (doc_id)
-ORDER BY dt.doc_id, dt.token
-"""
-
-
-def heavy_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-min-sketch heavy hitters (vocab.heavy_hitters): tokens with
-    >= 80 corpus occurrences and their EXACT counts. The sketch only
-    prunes (CMS never underestimates -> no false negatives), so the
-    output equals the plain GROUP BY ... HAVING answer DuckDB computes —
-    the 10^12-row win is the shuffle carrying candidate occurrences,
-    not the vocabulary."""
-    from entitylinking_spark.operators.vocab import heavy_hitters
-
-    d = _t(spark, sf_dir, "documents")
-    return heavy_hitters(d, min_count=80).orderBy("token")
-
-
-HEAVY_TOKENS_SQL = """
-SELECT t AS token, CAST(COUNT(*) AS BIGINT) AS n
-FROM documents,
-     UNNEST(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'),
-                        x -> x <> '')) u(t)
-GROUP BY t HAVING COUNT(*) >= 80 ORDER BY token
-"""
-
-
-def oov_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vocabulary-coverage check (vocab.oov_rate): per-doc OOV token share
-    against the corpus's own top-200 vocabulary (total-ordered tf DESC,
-    token ASC so the cut is deterministic). oov_rate is one division of
-    exact longs — bit-equal across engines; NULL (token-less docs)
-    coalesces to the -1.0 sentinel."""
-    from entitylinking_spark.operators.vocab import oov_rate, vocabulary
-
-    d = _t(spark, sf_dir, "documents")
-    v = vocabulary(d)
-    top = (
-        v.withColumn(
-            "_r",
-            F.row_number().over(Window.orderBy(F.desc("tf"), "token")),
-        )
-        .filter(F.col("_r") <= 200)
-        .select("token")
-    )
-    return (
-        oov_rate(d, top)
-        .select(
-            "doc_id", "n_tokens", "n_oov",
-            F.coalesce("oov_rate", F.lit(-1.0)).alias("oov_rate"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-OOV_DOCS_SQL = """
-WITH toks AS (
-  SELECT doc_id, t
-  FROM documents,
-       UNNEST(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'),
-                          x -> x <> '')) u(t)
-),
-vocab AS (
-  SELECT t AS token, COUNT(*) AS tf FROM toks GROUP BY t
-),
-top AS (
-  SELECT token FROM (
-    SELECT token, ROW_NUMBER() OVER (ORDER BY tf DESC, token) AS r
-    FROM vocab
-  ) WHERE r <= 200
-),
-per AS (
-  SELECT tk.doc_id,
-         CAST(COUNT(*) AS BIGINT) AS n_tokens,
-         CAST(SUM(CASE WHEN tp.token IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_oov
-  FROM toks tk LEFT JOIN top tp ON tp.token = tk.t
-  GROUP BY tk.doc_id
-)
-SELECT d.doc_id,
-       COALESCE(p.n_tokens, 0) AS n_tokens,
-       COALESCE(p.n_oov, 0) AS n_oov,
-       COALESCE(CAST(p.n_oov AS DOUBLE) / p.n_tokens, -1.0) AS oov_rate
-FROM documents d LEFT JOIN per p ON p.doc_id = d.doc_id
-ORDER BY d.doc_id
-"""
-
-
-def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The counting heart of BPE tokenizer training (operators/bpe.py):
-    weighted adjacent character-pair counts over the corpus word-frequency
-    table — step 0 of train_bpe, whose argmax is the first merge. Top 40
-    by (count DESC, pair ASC) so the cut is total-ordered; DuckDB
-    recomputes words, weights, pairs and ranks exactly."""
-    from entitylinking_spark.operators.bpe import _pair_counts, word_counts
-
-    d = _t(spark, sf_dir, "documents")
-    words = word_counts(d).select(
-        "word", "n", F.split("word", "(?!$)").alias("syms")
-    )
-    w = Window.orderBy(F.desc("cnt"), "a", "b")
-    return (
-        _pair_counts(words)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 40)
-        .select("rank", "a", "b", "cnt")
-        .orderBy("rank")
-    )
-
-
-BPE_PAIR_COUNTS_SQL = """
-WITH words AS (
-  SELECT w, COUNT(*) AS n
-  FROM documents,
-       UNNEST(regexp_split_to_array(lower(text), '[^a-z0-9_]+')) t(w)
-  WHERE w <> '' GROUP BY w
-),
-pairs AS (
-  SELECT substr(w, i, 1) AS a, substr(w, i + 1, 1) AS b,
-         CAST(SUM(n) AS BIGINT) AS cnt
-  FROM words,
-       UNNEST(list_transform(range(1, length(w)), x -> CAST(x AS INT))) u(i)
-  GROUP BY 1, 2
-),
-ranked AS (
-  SELECT ROW_NUMBER() OVER (ORDER BY cnt DESC, a, b) AS rank, a, b, cnt
-  FROM pairs
-)
-SELECT CAST(rank AS INT) AS rank, a, b, cnt
-FROM ranked WHERE rank <= 40 ORDER BY rank
-"""
-
-
 def resize_thumbs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The REAL image path oracle-checked end to end (no stub anywhere):
     deterministic 4x4 RGB P6 payloads (pixel = first-60-md5-bits of
@@ -2105,7 +1665,6 @@ _ORACLE_CHECKED: dict[str, tuple[Callable, str]] = {
     "j6_label_in_candidates": (j6_label_in_candidates, J6_SQL),
     "dedup_exact_docs": (dedup_exact_docs, DEDUP_EXACT_SQL),
     "g3_connected_components": (g3_connected_components, G3_SQL),
-    "lang_id_stopword": (lang_id_stopword, LANG_ID_SQL),
     "a2_collect_sorted": (a2_collect_sorted, A2_SQL),
     "q_cube_counts": (q_cube_counts, CUBE_SQL),
     "j3_channel_merge": (j3_channel_merge, J3_SQL),
@@ -2114,9 +1673,6 @@ _ORACLE_CHECKED: dict[str, tuple[Callable, str]] = {
     "media_payload_audit": (media_payload_audit, MEDIA_AUDIT_SQL),
     "x9_bm25_topk": (x9_bm25_topk, X9_BM25_SQL),
     "a7_recall_at_k": (a7_recall_at_k, A7_SQL),
-    "doc_quality": (doc_quality, DOC_QUALITY_SQL),
-    "doc_repetition": (doc_repetition, DOC_REPETITION_SQL),
-    "dup_lines": (dup_lines, DUP_LINES_SQL),
     "g5_overlapping_groups": (g5_overlapping_groups, G5_SQL),
     "g5_repair_oracle": (g5_repair_oracle, G5_REPAIR_SQL),
     "er_clusters": (er_clusters, ER_CLUSTERS_SQL),
@@ -2129,14 +1685,7 @@ _ORACLE_CHECKED: dict[str, tuple[Callable, str]] = {
     # value-checked end to end through the mapInPandas plumbing
     "media_features_demo": (media_features_demo, MEDIA_FEATURES_SQL),
     "linking_channels": (linking_channels, LINKING_CHANNELS_SQL),
-    "vocab_topk": (vocab_topk, VOCAB_TOPK_SQL),
-    "pmi_bigrams": (pmi_bigrams, PMI_BIGRAMS_SQL),
-    "corpus_length_profile": (corpus_length_profile, LENGTH_PROFILE_SQL),
     "resize_thumbs": (resize_thumbs, RESIZE_THUMBS_SQL),
-    "bpe_pair_counts": (bpe_pair_counts, BPE_PAIR_COUNTS_SQL),
-    "oov_docs": (oov_docs, OOV_DOCS_SQL),
-    "heavy_tokens": (heavy_tokens, HEAVY_TOKENS_SQL),
-    "tfidf_terms": (tfidf_terms, TFIDF_TERMS_SQL),
 }
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

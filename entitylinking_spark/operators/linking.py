@@ -201,15 +201,17 @@ def rank_candidates(cands: DataFrame, top_k: int = 10,
             F.col("ch_score") / F.max("ch_score").over(ch_max)
         ),
     )
-    weights = (
-        F.when(F.col("channel") == "name", F.lit(w_name))
-        .when(F.col("channel").isin("token", "bm25"), F.lit(w_token))
-        .otherwise(F.lit(w_sketch))
-    )
-    fused = (
-        normed.withColumn("w_score", weights * F.col("norm_score"))
-        .groupBy("mention_id", "document_id")
-        .agg(F.sum("w_score").alias("score"))
+    # each (mention, document, channel) has at most one row, so a
+    # conditional max picks each channel's value and the weighted terms
+    # are added in one fixed order — a row-wise sum would add them in
+    # shuffle order and the float score would depend on the plan
+    def channel(*names: str):
+        picked = F.when(F.col("channel").isin(*names), F.col("norm_score"))
+        return F.coalesce(F.max(picked), F.lit(0.0))
+
+    fused = normed.groupBy("mention_id", "document_id").agg(
+        (F.lit(w_name) * channel("name") + F.lit(w_token) * channel("token", "bm25")
+         + F.lit(w_sketch) * channel("sketch")).alias("score")
     )
     w = Window.partitionBy("mention_id").orderBy(F.desc("score"), F.col("document_id"))
     return fused.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= top_k)

@@ -1,7 +1,7 @@
 """Incremental entity resolution over an accumulating corpus.
 
 Extension beyond the reference (which is pure batch — SURVEY.md §2.9):
-as new file snapshots arrive (e.g. from streaming/ingest.stream_keyed),
+as new file snapshots arrive (e.g. from streaming/ingest.stream_resolve),
 each increment resolves clusters WITHOUT re-scoring the old corpus.
 `resolve_increment` is the second entry into the resolution core in
 plans/pipeline.py (`resolve` is the first, a fold into an empty state):

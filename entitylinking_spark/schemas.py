@@ -24,17 +24,6 @@ REPO_FILES = T.StructType(
     ]
 )
 
-# Keyed rows after the blocking-key derivation stage.
-KEYED = T.StructType(
-    list(REPO_FILES.fields)
-    + [
-        T.StructField("row_id", T.StringType(), False),
-        T.StructField("content_sha", T.StringType(), False),  # invariant column
-        T.StructField("fname", T.StringType(), False),
-        T.StructField("minhash", T.ArrayType(T.LongType()), False),
-    ]
-)
-
 # Candidate pair after the block join (ids only + features needed to score).
 SCORED_PAIRS = T.StructType(
     [
@@ -55,13 +44,6 @@ EDGES = T.StructType(
     [
         T.StructField("src", T.StringType(), False),
         T.StructField("dst", T.StringType(), False),
-    ]
-)
-
-CLUSTERS = T.StructType(
-    [
-        T.StructField("row_id", T.StringType(), False),
-        T.StructField("cluster_id", T.StringType(), False),
     ]
 )
 
@@ -109,16 +91,6 @@ RANKED = T.StructType(
         T.StructField("entity_id", T.StringType(), False),
         T.StructField("score", T.DoubleType(), False),
         T.StructField("rank", T.IntegerType(), False),
-    ]
-)
-
-# Labeled pairwise ground truth (FIXTURES.md §2).
-LABELED_PAIRS = T.StructType(
-    [
-        T.StructField("id_l", T.StringType(), False),
-        T.StructField("id_r", T.StringType(), False),
-        T.StructField("block_key", T.StringType(), False),
-        T.StructField("is_match", T.BooleanType(), False),
     ]
 )
 

@@ -1,52 +1,19 @@
 """Structured Streaming extension: incremental repo_files ingestion.
 
 The reference is pure batch (SURVEY.md §2.9 — stage files, no streams).
-This module is the forward-looking extension noted there: as new file
-snapshots land in a directory/Iceberg table, stream them through the
-key-derivation stage (sha256 invariant, MinHash signature, blocking keys)
-into an append-only keyed table. The batch pipeline then resolves clusters
-over the accumulated keyed table — incremental candidate generation
-without recomputing signatures for old rows.
-
-Also provides a streaming corpus monitor (windowed counts by lang with a
-watermark) as the stateful-aggregation example.
+This module is the forward-looking extension noted there: `stream_resolve`
+reads new file snapshots from a Parquet directory and folds each
+micro-batch into the accumulated resolution state through foreachBatch
+(plans/incremental.resolve_increment), so clusters after the backlog drains
+equal a batch resolve over the same corpus.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from entitylinking_spark.operators.blocking import ERConfig, with_keys
+from entitylinking_spark.operators.blocking import ERConfig
 from entitylinking_spark.schemas import REPO_FILES
-
-
-def stream_keyed(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    cfg: ERConfig = ERConfig(),
-    id_col: str | None = None,
-    available_now: bool = True,
-):
-    """readStream(parquet dir) -> with_keys -> append parquet sink.
-
-    with_keys is stateless row-wise derivation, so it composes with
-    Structured Streaming unchanged — one definition for batch and stream.
-    `available_now=True` processes the current backlog and stops (the
-    testable mode); False runs continuously.
-    """
-    src = spark.readStream.schema(REPO_FILES).parquet(input_dir)
-    keyed = with_keys(src, cfg, id_col=id_col)
-    writer = (
-        keyed.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_resolve(
@@ -149,27 +116,3 @@ def stream_resolve(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start(), holder
-
-
-def stream_corpus_monitor(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Windowed per-lang arrival counts with late-data watermarking.
-
-    events: a streaming DataFrame with (ts timestamp, lang string). Returns
-    the windowed aggregate (write with outputMode 'append' after the
-    watermark closes windows).
-    """
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "lang")
-        .agg(F.count("*").alias("n_files"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "lang",
-            "n_files",
-        )
-    )

@@ -17,7 +17,6 @@ MENTION_SCHEMA = ("corpus string, mention_id string, context_document_id string,
                   "label_document_id string, start_index int, end_index int, "
                   "text string, category string")
 ENTITY_SCHEMA = "document_id string, title string, text string, corpus string"
-DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
 
 
 def test_resolve_empty_corpus(spark):
@@ -53,23 +52,4 @@ def test_link_mentions_empty_entities(spark):
     e = spark.createDataFrame([], ENTITY_SCHEMA)
     out = {r["mention_id"]: r for r in link_mentions(m, e).collect()}
     assert out["m1"]["entity_id"] is None  # fallback ladder end state
-
-
-def test_vocab_empty_and_single(spark):
-    """The vocab operators through the same degenerate probes."""
-    from entitylinking_spark.operators.vocab import (
-        bigram_pmi, length_profile, vocabulary,
-    )
-
-    empty = spark.createDataFrame([], DOC_SCHEMA)
-    one = spark.createDataFrame(
-        [(1, "only one document here", "en", "src0", 22)], DOC_SCHEMA
-    )
-    assert vocabulary(empty).count() == 0
-    assert vocabulary(one).count() == 4
-    assert bigram_pmi(empty).count() == 0  # eager-totals empty guard
-    assert bigram_pmi(one, min_count=1).count() == 3
-    assert length_profile(empty).count() == 0
-    prof = length_profile(one).collect()
-    assert len(prof) == 1 and prof[0]["p50"] == 22
 

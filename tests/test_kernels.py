@@ -117,6 +117,11 @@ class TestStringKernels:
         df = spark.createDataFrame([("Hello, World_1! foo-bar",)], ["s"])
         toks = df.select(tokenize("s").alias("t")).collect()[0]["t"]
         assert toks == ["hello", "world_1", "foo", "bar"]
+        # non-ASCII letters split a token; CJK and punctuation are dropped
+        tricky = "Hello, WORLD!  café naïve_x 42-7 中文 a_b"
+        df = spark.createDataFrame([(tricky,)], ["s"])
+        toks = df.select(tokenize("s").alias("t")).collect()[0]["t"]
+        assert toks == ["hello", "world", "caf", "na", "ve_x", "42", "7", "a_b"]
 
     def test_token_jaccard(self, spark):
         df = spark.createDataFrame([("a b c", "b c d"), ("a a b", "a b"), ("", "")], ["x", "y"])

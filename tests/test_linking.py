@@ -80,6 +80,38 @@ def test_rank_candidates_deterministic_order(spark):
     assert ranks == list(range(1, len(rows) + 1))
 
 
+def test_rank_candidates_score_fixed_order(spark):
+    """The fused score adds w_name·name + w_token·token + w_sketch·sketch
+    in that order whatever the row order or plan. d1's three terms
+    (0.495, 0.08, 0.204) sum to three different doubles in the three
+    addition orders; d2 (each channel's max) normalizes d1's scores to
+    themselves. m2 takes its token score from the bm25 channel."""
+    rows = [
+        ("m1", "d1", "name", 0.99), ("m1", "d1", "token", 0.4),
+        ("m1", "d1", "sketch", 0.68), ("m1", "d2", "name", 1.0),
+        ("m1", "d2", "token", 1.0), ("m1", "d2", "sketch", 1.0),
+        ("m2", "d1", "bm25", 2.0), ("m2", "d1", "sketch", 0.68),
+        ("m2", "d2", "bm25", 5.0), ("m2", "d2", "sketch", 1.0),
+    ]
+    schema = "mention_id string, document_id string, channel string, ch_score double"
+
+    def scores(order):
+        cands = spark.createDataFrame(order, schema).coalesce(1)
+        return {
+            (r["mention_id"], r["document_id"]): r["score"]
+            for r in rank_candidates(cands).collect()
+        }
+
+    forward, backward = scores(rows), scores(rows[::-1])
+    assert forward == backward
+    assert forward == {
+        ("m1", "d1"): 0.5 * 0.99 + 0.2 * 0.4 + 0.3 * 0.68,
+        ("m1", "d2"): 0.5 * 1.0 + 0.2 * 1.0 + 0.3 * 1.0,
+        ("m2", "d1"): 0.5 * 0.0 + 0.2 * (2.0 / 5.0) + 0.3 * 0.68,
+        ("m2", "d2"): 0.5 * 0.0 + 0.2 * 1.0 + 0.3 * 1.0,
+    }
+
+
 def _skew_dfs(spark, n_common=10):
     # one corpus; n_common entities share the first title token "common"
     # AND an identical description (mass-collision for the sketch bands);

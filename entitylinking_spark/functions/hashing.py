@@ -103,6 +103,20 @@ def _shingle_hashes(
     return vals, out_offsets
 
 
+def row_gram_segments(text: pd.Series, k: int):
+    """Batch helper for per-row gram statistics: tokenize (the shared
+    lower+`[A-Za-z0-9_]+` convention), hash all grams in one rolling
+    combine, and return (token_lists, flat_hashes, row_bounds) where row
+    i's gram hashes are flat_hashes[bounds[i]:bounds[i+1]] — VALID ONLY
+    when len(token_lists[i]) >= k (below that _shingle_hashes substitutes
+    token/sentinel hashes; callers must treat those rows as gram-less)."""
+    filled = text.fillna("")
+    tok_lists = filled.str.lower().str.findall(_TOKEN_RE).tolist()
+    base, offsets = _shingle_hashes(tok_lists, filled.tolist(), k)
+    bounds = np.append(offsets, base.size)
+    return tok_lists, base, bounds
+
+
 def make_minhash_udf(num_perm: int = 64, shingle_k: int = 3,
                      blacklist: np.ndarray | None = None):
     """Build a pandas UDF: content string -> array<long> MinHash signature.

@@ -1,12 +1,73 @@
-"""Multimodal plumbing."""
+"""Text-analysis + multimodal plumbing."""
 
 import pytest
+from pyspark.sql import functions as F
 
 from entitylinking_spark.operators.multimodal import (
     extract_features,
     frame_sample_plan,
     media_stats,
 )
+from entitylinking_spark.operators.textstats import (
+    bpe_ish_token_count,
+    corpus_stats,
+    detect_language,
+    fingerprint_udf,
+    punct_ratio,
+    quality_score,
+    stopword_ratio,
+    token_count,
+)
+
+EN = "the quick brown fox is one of the animals that you have seen in a story"
+XX = "zzz qqq www rrr ttt yyy uuu iii ooo ppp"
+
+
+class TestTextStats:
+    def test_token_count(self, spark):
+        df = spark.createDataFrame([("a b c",), ("",)], ["text"])
+        out = [r["n"] for r in df.select(token_count("text").alias("n")).collect()]
+        assert out == [3, 0]
+
+    def test_bpe_ish_counts_more_than_words(self, spark):
+        df = spark.createDataFrame([("hello, world! x2",)], ["text"])
+        r = df.select(bpe_ish_token_count("text").alias("n")).collect()[0]
+        assert r["n"] == 3 + 1 + 2  # words hello/world/x + digit-run 2 + , ! chars
+
+    def test_stopword_and_lang(self, spark):
+        df = spark.createDataFrame([(EN,), (XX,)], ["text"])
+        out = df.select(
+            stopword_ratio("text").alias("sw"), detect_language("text").alias("lang")
+        ).collect()
+        assert out[0]["sw"] > 0.3 and out[0]["lang"] == "en"
+        assert out[1]["sw"] == 0.0 and out[1]["lang"] == "other"
+
+    def test_punct_ratio(self, spark):
+        df = spark.createDataFrame([("ab!?",), ("abcd",)], ["text"])
+        out = [r["p"] for r in df.select(punct_ratio("text").alias("p")).collect()]
+        assert out[0] == pytest.approx(0.5)
+        assert out[1] == 0.0
+
+    def test_quality_score_orders_sensibly(self, spark):
+        good = " ".join([EN] * 20)
+        bad = "!!! ??? ### $$$ %%%"
+        df = spark.createDataFrame([(good,), (bad,)], ["text"])
+        out = [r["q"] for r in df.select(quality_score("text").alias("q")).collect()]
+        assert out[0] > 0.8 > out[1]
+
+    def test_corpus_stats(self, spark):
+        df = spark.createDataFrame(
+            [("en", "a b c"), ("en", "d e"), ("fr", "x")], ["lang", "text"]
+        )
+        out = {r["lang"]: r for r in corpus_stats(df).collect()}
+        assert out["en"]["n_docs"] == 2
+        assert out["en"]["avg_tokens"] == pytest.approx(2.5)
+
+    def test_fingerprint_deterministic_and_sensitive(self, spark):
+        df = spark.createDataFrame([(EN,), (EN,), (XX,)], ["text"])
+        out = [r["f"] for r in df.select(fingerprint_udf("text").alias("f")).collect()]
+        assert out[0] == out[1]
+        assert out[0] != out[2]
 
 
 class TestMultimodal:

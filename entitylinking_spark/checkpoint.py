@@ -8,7 +8,8 @@ markers: a stage whose marker exists is read back instead of recomputed, so
 a killed run resumes from the last complete stage (north_rule).
 
 Backend: partitioned Parquet + a driver-written `_STAGE_COMPLETE` JSON
-marker per stage, which also carries the stage's config/input fingerprint.
+marker per stage, written atomically (temp file + rename), which also
+carries the stage's config/input fingerprint or a commit record.
 """
 
 from __future__ import annotations
@@ -19,6 +20,7 @@ import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class CheckpointStore:
@@ -54,18 +56,29 @@ class CheckpointStore:
         if fingerprint is None:
             return True
         try:
-            with open(self._marker(stage)) as f:
-                meta = json.load(f)
+            return self.marker(stage).get("fingerprint") == fingerprint
         except Exception:
             return False
-        return meta.get("fingerprint") == fingerprint
+
+    def marker(self, stage: str) -> dict:
+        with open(self._marker(stage)) as f:
+            return json.load(f)
+
+    def mark_complete(self, stage: str, meta: dict | None = None) -> None:
+        """Write the stage's marker atomically: a temp file (its `_` prefix
+        hides it from Parquet scans), then a rename — the commit point."""
+        os.makedirs(self._dir(stage), exist_ok=True)
+        tmp = self._marker(stage) + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump({"stage": stage, "completed_at": time.time(), **(meta or {})}, f)
+        os.replace(tmp, self._marker(stage))
 
     def write(self, stage: str, df: DataFrame, meta: dict | None = None) -> DataFrame:
         """Write `df` as the stage table, mark complete, return a fresh read.
 
         Returning the re-read DataFrame (not `df`) truncates lineage for all
         downstream stages — the same reason the reference rereads its stage
-        files.
+        files. It takes `df`'s schema, so the write is the only Spark job.
         """
         if not self.enabled:
             return df
@@ -73,12 +86,24 @@ class CheckpointStore:
         if os.path.exists(path):
             shutil.rmtree(path)
         df.write.mode("overwrite").parquet(path)
-        with open(self._marker(stage), "w") as f:
-            json.dump({"stage": stage, "completed_at": time.time(), **(meta or {})}, f)
-        return self.spark.read.parquet(path)
+        self.mark_complete(stage, meta)
+        return self.read(stage, schema=df.schema)
 
-    def read(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(self._dir(stage))
+    def read(self, stage: str, schema: StructType | None = None,
+             files: list[str] | None = None) -> DataFrame:
+        """Scan the stage table, or only its `files`. With a `schema` no
+        inference job runs. Past 32 `files` (Spark's parallel partition
+        discovery threshold) listing them is one Spark job."""
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        if files is None:
+            return reader.parquet(self._dir(stage))
+        return reader.parquet(*(os.path.join(self._dir(stage), f) for f in files))
+
+    def part_files(self, stage: str) -> list[str]:
+        """Names of the stage table's Parquet data files, sorted."""
+        path = self._dir(stage)
+        names = os.listdir(path) if os.path.isdir(path) else []
+        return sorted(f for f in names if f.endswith(".parquet") and f[0] not in "_.")
 
     def get_or_compute(self, stage: str, compute,
                        fingerprint: str | None = None) -> DataFrame:
@@ -99,18 +124,20 @@ class CheckpointStore:
         if os.path.exists(path):
             shutil.rmtree(path)
 
-    def append(self, stage: str, df: DataFrame) -> None:
-        """Append rows to a stage table WITHOUT a completion marker.
+    def append(self, stage: str, df: DataFrame) -> list[str]:
+        """Append rows to a stage table WITHOUT a completion marker, and
+        return the names of the files this append added.
 
         This is the O(new-rows) persistence primitive for accumulating
         state (plans/incremental.save_state): appends carry no commit
-        semantics of their own — callers commit by writing a separate
-        versioned marker/meta stage AFTER the appends land, and filter
-        un-committed rows out on read (the Iceberg-snapshot pattern,
-        expressed on plain Parquet with a `_batch_id` column)."""
+        semantics of their own — callers record the added files in a
+        separate versioned marker AFTER the appends land and read only
+        recorded files (the Iceberg-snapshot pattern on plain Parquet)."""
         if not self.enabled:
             raise ValueError("append() requires a checkpoint root")
+        before = set(self.part_files(stage))
         df.write.mode("append").parquet(self._dir(stage))
+        return [f for f in self.part_files(stage) if f not in before]
 
     def list_stages(self, prefix: str = "") -> list[str]:
         """Stage names under this store that start with `prefix` (used to

@@ -34,6 +34,12 @@ from pyspark.sql import DataFrame, Window, functions as F
 from entitylinking_spark.functions.strings import tokenize
 
 
+def _ordered_sum(col: str):
+    """The group's sum of `col`, added in ascending order: `F.sum` adds in
+    shuffle order, so its last bits would depend on the physical plan."""
+    return F.aggregate(F.array_sort(F.collect_list(col)), F.lit(0.0), lambda a, x: a + x)
+
+
 def bm25_scores(docs: DataFrame, query_terms: list[str], id_col: str = "doc_id",
                 text_col: str = "text", k1: float = 1.2, b: float = 0.75,
                 idf_variant: str = "plus", epsilon: float = 0.25) -> DataFrame:
@@ -102,7 +108,7 @@ def bm25_scores(docs: DataFrame, query_terms: list[str], id_col: str = "doc_id",
             / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))),
         )
     )
-    return scored.groupBy("_id").agg(F.sum("term_score").alias("score")).select(
+    return scored.groupBy("_id").agg(_ordered_sum("term_score").alias("score")).select(
         F.col("_id").alias(id_col), "score"
     )
 
@@ -180,7 +186,7 @@ def bm25_channel(mentions: DataFrame, entities: DataFrame,
     )
     return (
         scored.groupBy("mention_id", "_id")
-        .agg(F.sum("term_score").alias("ch_score"))
+        .agg(_ordered_sum("term_score").alias("ch_score"))
         .select(
             "mention_id", F.col("_id").alias("document_id"),
             F.lit("bm25").alias("channel"), "ch_score",

@@ -43,9 +43,12 @@ Correctness caveats (documented, enforced where cheap):
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructType
 
 from entitylinking_spark.metrics import observed
 from entitylinking_spark.operators.blocking import ERConfig, with_keys
@@ -131,14 +134,8 @@ def resolve_increment(
     n_pairs = observed(core.observations["pairs_scored"]).get("n") or 0
     for df in core.persisted:
         df.unpersist()
-    # O(new) state carry (round-4 verdict #2): ONLY this increment's rows
-    # were materialized (new_keyed / new_content localCheckpoints above);
-    # the accumulated frames are lazy unions over the per-increment
-    # checkpointed leaves, so increment k writes O(|increment k|) rows,
-    # not O(corpus). The union tree grows one node per increment — plan
-    # size O(#increments), each leaf already materialized. For unbounded
-    # runs, compact via CheckpointStore stage tables at a cadence of the
-    # caller's choosing.
+    # O(new) state carry (round-4 verdict #2): the union tree grows one
+    # node per increment; save_state + load_state (below) collapse it
     return IncrementalState(
         keyed=all_keyed,
         content=all_content,
@@ -162,33 +159,29 @@ def resolve_increment(
 #     round-4-verdict discipline carried to durability) to a pair of
 #     GENERATION tables (incr_state_{keyed,content}_g<N>) tagged with a
 #     `_batch_id` column;
-#   * every save writes the slim clusters snapshot plus a 1-row meta frame
-#     as NEW stages versioned by a monotonic COMMIT SEQUENCE
-#     (incr_state_meta_c<seq>); the meta records the batch id AND the
-#     physical table names, and its completion marker is the atomic commit
-#     point. Nothing referenced by the previous commit is touched until
-#     the new commit lands, so a crash mid-save always leaves a readable
-#     prior state; superseded clusters/meta versions are pruned after.
-#   * compact_state() bounds the append tables' file count for unbounded
-#     runs: it rewrites the committed rows into generation N+1 tables,
-#     commits a meta pointing at them, then drops generation N — the same
-#     write-new/commit/drop-old discipline, so compaction is crash-safe
-#     too.
+#   * every save also writes the slim clusters snapshot as a NEW stage
+#     versioned by a monotonic COMMIT SEQUENCE (incr_state_clusters_c<seq>),
+#     concurrently with the appends. Then the driver commits: the marker of
+#     the data-less stage incr_state_meta_c<seq> is the COMMIT RECORD (batch
+#     id, tables, their schemas, the append tables' committed part files);
+#     its atomic rename is the commit point. Nothing the previous commit
+#     references is touched until the new commit lands, so a crash
+#     mid-save leaves a readable prior state; older versions are pruned.
+#   * load_state builds its frames from the record alone: no Spark job up
+#     to 32 files per append table (Spark's parallel partition discovery
+#     threshold), one listing job past it. compact_state() bounds the file
+#     count: it rewrites the committed rows into generation N+1 tables,
+#     commits a record pointing at them, then drops generation N — the same
+#     write-new/commit/drop-old discipline, so compaction is crash-safe too.
 #
-# Crash/replay safety (foreachBatch is at-least-once): load filters rows
-# beyond the last COMMITTED batch id, and a replayed batch that re-appends
-# the same delta is neutralized by a read-side dropDuplicates on row_id
-# (row ids are content-keyed and unique per corpus row). That dedupe is a
-# full-table shuffle, so it is SCOPED: duplicates can only exist in a
-# batch whose first append attempt crashed after writing but before the
-# meta commit — i.e. the first batch a restarted process folds. Such
-# batches are recorded in meta as `suspect_batches` (save_state
-# suspect=True, set by stream_resolve on its first post-load fold); load
-# dedupes ONLY those batches' rows and unions the rest straight off the
-# scan — no shuffle at all in the no-crash case. compact_state dedupes
-# while rewriting and clears the list. A state reloaded from the store
-# reads straight from the stage tables, so the in-memory union tree
-# collapses to one scan per frame.
+# Crash/replay safety (foreachBatch is at-least-once): files of an append
+# that never committed are in no record, so no load reads them. A batch
+# that a crashed attempt may still have been appending to (a restarted
+# driver's first fold, save_state(suspect=True); a first commit onto
+# leftover appends) is recorded in `suspect_batches`, and load dedupes
+# ONLY its rows on row_id (content-keyed, unique per corpus row): the
+# no-crash load is shuffle-free. compact_state dedupes while rewriting and
+# clears the list. A reloaded state scans the stage tables: no union tree.
 
 _ST_KEYED_GEN = "incr_state_keyed_g"  # + generation
 _ST_CONTENT_GEN = "incr_state_content_g"  # + generation
@@ -196,50 +189,51 @@ _ST_CLUSTERS = "incr_state_clusters_c"  # + commit seq
 _ST_META = "incr_state_meta_c"  # + commit seq
 
 
+def _meta_seqs(store) -> list[int]:
+    n = len(_ST_META)
+    return [int(st[n:]) for st in store.list_stages(_ST_META) if st[n:].isdigit()]
+
+
 def _latest_commit(store) -> tuple[int, dict] | None:
-    """(seq, meta dict) of the newest COMMITTED save, or None."""
-    import json as _json
-
-    best = None
-    for st in store.list_stages(_ST_META):
-        try:
-            v = int(st[len(_ST_META):])
-        except ValueError:
-            continue
-        if store.is_complete(st) and (best is None or v > best):
-            best = v
-    if best is None:
+    """(seq, commit record) of the newest COMMITTED save, or None."""
+    done = [v for v in _meta_seqs(store) if store.is_complete(f"{_ST_META}{v}")]
+    if not done:
         return None
-    row = store.read(f"{_ST_META}{best}").first()
-    return best, _json.loads(row["meta_json"])
+    if (record := store.marker(f"{_ST_META}{max(done)}").get("commit")) is None:
+        raise ValueError(f"{_ST_META}{max(done)} holds no commit record: an "
+                         "older state layout; rebuild it from the source data")
+    return max(done), record
 
 
-def _commit(store, spark, seq: int, meta: dict) -> None:
-    """Write clusters+meta stages for commit `seq`, then prune older
-    commit versions (never generation tables — compact_state owns those)."""
-    import json as _json
-
-    store.write(
-        f"{_ST_META}{seq}",
-        spark.createDataFrame([(_json.dumps(meta),)], "meta_json string"),
-    )
-    for st in store.list_stages(_ST_CLUSTERS) + store.list_stages(_ST_META):
-        prefix = _ST_CLUSTERS if st.startswith(_ST_CLUSTERS) else _ST_META
-        try:
-            v = int(st[len(prefix):])
-        except ValueError:
-            continue
-        if v < seq:
+def _commit(store, seq: int, meta: dict) -> None:
+    """Commit `meta` as the record of commit `seq`, then prune older
+    commit versions and unreferenced clusters snapshots (never generation
+    tables — compact_state owns those)."""
+    store.mark_complete(f"{_ST_META}{seq}", {"commit": meta})
+    for st in store.list_stages(_ST_CLUSTERS):
+        if st != meta["clusters_table"]:
             store.invalidate(st)
+    for v in _meta_seqs(store):
+        if v < seq:
+            store.invalidate(f"{_ST_META}{v}")
+
+
+def _concurrently(spark, *fns) -> list:
+    """Run `fns` on threads that inherit the caller's job group (pyspark's
+    InheritableThread mechanism); their results, or the first error."""
+    with ThreadPoolExecutor(len(fns)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(fn)) for fn in fns]
+        return [f.result() for f in futures]
 
 
 def save_state(state: IncrementalState, store, batch_id: int,
                suspect: bool = False) -> None:
-    """Persist `state` after folding batch `batch_id` (monotonically
-    increasing per store — foreachBatch's batch_id with a stable streaming
-    checkpoint). Write cost: O(this increment) for keyed/content appends
-    plus the slim (row_id, cluster_id) snapshot — the one O(corpus) term,
-    two short columns, Parquet-compressed.
+    """Persist `state` after folding batch `batch_id`, which must be above
+    the last committed batch id of the store (foreachBatch's batch_id with
+    a stable streaming checkpoint). Write cost: O(this increment) for
+    keyed/content appends plus the slim (row_id, cluster_id) snapshot — the
+    one O(corpus) term, two short columns, Parquet-compressed. The three
+    writes run concurrently; the commit is a driver-side file rename.
 
     `suspect=True` records this batch in meta `suspect_batches`: pass it
     when a previous attempt at the SAME batch may have appended before
@@ -248,39 +242,49 @@ def save_state(state: IncrementalState, store, batch_id: int,
     table. A first-ever commit onto a PRE-EXISTING append table (the
     crashed-before-first-commit case) is marked suspect automatically."""
     if state.delta_keyed is None or state.delta_content is None:
-        raise ValueError(
-            "state has no delta frames to persist (already saved/loaded?)"
-        )
+        raise ValueError("state has no delta frames to persist "
+                         "(already saved/loaded?)")
     bid = int(batch_id)
     prev = _latest_commit(store)
     if prev is None:
         seq, keyed_t, content_t = 0, f"{_ST_KEYED_GEN}0", f"{_ST_CONTENT_GEN}0"
-        suspects = []
+        suspects, keyed_files, content_files = [], [], []
         # append table exists but nothing ever committed: a first-batch
         # attempt crashed mid-append — its leftovers share our batch id
         if store.list_stages(keyed_t):
             suspect = True
     else:
-        seq = prev[0] + 1
-        keyed_t, content_t = prev[1]["keyed_table"], prev[1]["content_table"]
-        suspects = list(prev[1].get("suspect_batches", []))
+        seq, meta = prev[0] + 1, prev[1]
+        if bid <= meta["batch_id"]:
+            raise ValueError(f"batch id {bid} is not above the last "
+                             f"committed batch id {meta['batch_id']}")
+        keyed_t, content_t = meta["keyed_table"], meta["content_table"]
+        suspects = list(meta["suspect_batches"])
+        keyed_files, content_files = meta["keyed_files"], meta["content_files"]
     if suspect and bid not in suspects:
         suspects.append(bid)
     tag = F.lit(bid).alias("_batch_id")
-    store.append(keyed_t, state.delta_keyed.select("*", tag))
-    store.append(content_t, state.delta_content.select("*", tag))
-    spark = state.clusters.sparkSession
-    store.write(f"{_ST_CLUSTERS}{seq}", state.clusters)
+    keyed, content = (state.delta_keyed.select("*", tag),
+                      state.delta_content.select("*", tag))
+    clusters_t = f"{_ST_CLUSTERS}{seq}"
+    keyed_new, content_new, _ = _concurrently(state.clusters.sparkSession,
+        lambda: store.append(keyed_t, keyed),
+        lambda: store.append(content_t, content),
+        lambda: store.write(clusters_t, state.clusters))
     bl = state.blacklist
-    _commit(store, spark, seq, {
+    _commit(store, seq, {
         "batch_id": bid,
         "n_pairs_scored": int(state.n_pairs_scored),
         # uint64 grams survive JSON as arbitrary-precision ints
         "blacklist": None if bl is None else [int(x) for x in bl],
         "keyed_table": keyed_t,
         "content_table": content_t,
-        "clusters_table": f"{_ST_CLUSTERS}{seq}",
+        "clusters_table": clusters_t,
         "suspect_batches": suspects,
+        "keyed_files": sorted(keyed_files + keyed_new),
+        "content_files": sorted(content_files + content_new),
+        "schemas": {n: df.schema.jsonValue() for n, df in (
+            ("keyed", keyed), ("content", content), ("clusters", state.clusters))},
     })
 
 
@@ -290,13 +294,19 @@ def last_saved_batch_id(store) -> int | None:
     return None if prev is None else prev[1]["batch_id"]
 
 
-def _committed_frame(store, table: str, bid: int,
-                     suspects: list[int]) -> DataFrame:
-    """Committed rows of an append table. Only `suspects` batches (crash-
+def _read(store, meta: dict, name: str) -> DataFrame:
+    """Table `name` of a commit record: recorded schema and files, no job."""
+    return store.read(meta[f"{name}_table"],
+                      schema=StructType.fromJson(meta["schemas"][name]),
+                      files=meta.get(f"{name}_files"))
+
+
+def _committed_frame(store, meta: dict, name: str) -> DataFrame:
+    """Committed rows of an append table. Only suspect batches (crash-
     replay candidates) pay a dedupe shuffle; everything else streams
     straight off the scan — in the no-crash case this is shuffle-free."""
-    df = store.read(table).filter(F.col("_batch_id") <= bid)
-    sus = [b for b in suspects if b <= bid]
+    df = _read(store, meta, name)
+    sus = meta["suspect_batches"]
     if sus:
         dup = df.filter(F.col("_batch_id").isin(sus)).dropDuplicates(["row_id"])
         df = df.filter(~F.col("_batch_id").isin(sus)).unionByName(dup)
@@ -305,22 +315,21 @@ def _committed_frame(store, table: str, bid: int,
 
 def load_state(store, spark) -> IncrementalState | None:
     """Rebuild the accumulated state from the newest committed save, or
-    None if the store holds no state. The returned frames scan the stage
-    tables directly (no union tree — loading doubles as in-memory plan
-    compaction for a long-running process: save, then reload)."""
+    None if the store holds no state. Runs no Spark job (the commit record
+    has all it needs); the frames scan the stage tables directly (no union
+    tree — loading doubles as in-memory plan compaction for a
+    long-running process: save, then reload)."""
     import numpy as np
 
     prev = _latest_commit(store)
     if prev is None:
         return None
     meta = prev[1]
-    bid = meta["batch_id"]
     bl = meta["blacklist"]
-    sus = meta.get("suspect_batches", [])
     return IncrementalState(
-        keyed=_committed_frame(store, meta["keyed_table"], bid, sus),
-        content=_committed_frame(store, meta["content_table"], bid, sus),
-        clusters=store.read(meta["clusters_table"]),
+        keyed=_committed_frame(store, meta, "keyed"),
+        content=_committed_frame(store, meta, "content"),
+        clusters=_read(store, meta, "clusters"),
         n_pairs_scored=meta["n_pairs_scored"],
         blacklist=None if bl is None else np.array(bl, dtype=np.uint64),
     )
@@ -332,7 +341,7 @@ def compact_state(store, spark) -> IncrementalState | None:
     leaves O(shuffle partitions) small parquet files; K batches -> O(K)
     files scanned per load until compacted). Crash-safe by the same
     write-new/commit/drop-old discipline as save_state: generation N+1 is
-    fully written, a meta commit points at it, only then is generation N
+    fully written, a commit record points at it, only then is generation N
     dropped. Call at any cadence (e.g. stream_resolve(compact_every=N));
     cost is one O(corpus) rewrite, amortized over the cadence. Returns the
     reloaded (compacted) state, or None if the store holds no state."""
@@ -340,24 +349,20 @@ def compact_state(store, spark) -> IncrementalState | None:
     if prev is None:
         return None
     seq, meta = prev[0] + 1, dict(prev[1])
-    bid = meta["batch_id"]
     old_keyed, old_content = meta["keyed_table"], meta["content_table"]
     gen = int(old_keyed[len(_ST_KEYED_GEN):]) + 1
     new_keyed, new_content = f"{_ST_KEYED_GEN}{gen}", f"{_ST_CONTENT_GEN}{gen}"
-    sus = meta.get("suspect_batches", [])
-    tag = F.lit(bid).alias("_batch_id")
-    store.write(new_keyed,
-                _committed_frame(store, old_keyed, bid, sus).select("*", tag))
-    store.write(new_content,
-                _committed_frame(store, old_content, bid, sus).select("*", tag))
-    # clusters are already a single slim table; re-point the new commit at
-    # a fresh copy so the pruning rule (commit versions < seq) stays simple
-    clusters = store.read(meta["clusters_table"])
-    store.write(f"{_ST_CLUSTERS}{seq}", clusters)
-    # the rewrite deduped the suspect batches — the new generation is clean
+    tag = F.lit(meta["batch_id"]).alias("_batch_id")
+    _concurrently(spark,
+        lambda: store.write(new_keyed, _committed_frame(store, meta, "keyed").select("*", tag)),
+        lambda: store.write(new_content, _committed_frame(store, meta, "content").select("*", tag)))
+    # the rewrite deduped the suspect batches — the new generation is
+    # clean; the clusters snapshot is unchanged and stays referenced
     meta.update(keyed_table=new_keyed, content_table=new_content,
-                clusters_table=f"{_ST_CLUSTERS}{seq}", suspect_batches=[])
-    _commit(store, spark, seq, meta)
+                keyed_files=store.part_files(new_keyed),
+                content_files=store.part_files(new_content),
+                suspect_batches=[])
+    _commit(store, seq, meta)
     store.invalidate(old_keyed)
     store.invalidate(old_content)
     return load_state(store, spark)

@@ -5,7 +5,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from entitylinking_spark.operators.bm25 import bm25_scores, bm25_topk
+from entitylinking_spark.operators.bm25 import bm25_channel, bm25_scores, bm25_topk
 from entitylinking_spark.operators.linking import candidate_channels, link_mentions
 
 CORPUS = [
@@ -204,3 +204,40 @@ def test_okapi_epsilon_parity_with_library_port(spark):
            bm25_scores(docs, ["the"], idf_variant="okapi-epsilon").collect()}
     assert all(v < 0 for v in neg.values())
     assert all(v > 0 for v in flo.values())
+
+
+def _with_and_without_aqe(spark, build):
+    """Sorted rows of build() with adaptive execution on, then off."""
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key)
+    runs = []
+    try:
+        for aqe in ("true", "false"):
+            spark.conf.set(key, aqe)
+            runs.append(sorted(tuple(r) for r in build().collect()))
+    finally:
+        spark.conf.set(key, prev)
+    return runs
+
+
+def test_bm25_sums_do_not_depend_on_the_plan(spark):
+    """Per-term contributions are added in a fixed order, so scores are
+    bit-identical whether or not AQE reshapes the shuffles."""
+    import random
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(60)]
+    e = spark.createDataFrame(
+        [(f"e{i}", "c", " ".join(rng.choices(vocab, k=30))) for i in range(400)],
+        ["document_id", "corpus", "text"],
+    )
+    m = spark.createDataFrame(
+        [(f"m{i}", "c", " ".join(rng.choices(vocab, k=12))) for i in range(200)],
+        ["mention_id", "corpus", "text"],
+    )
+    on, off = _with_and_without_aqe(spark, lambda: bm25_channel(m, e))
+    assert len(on) > 10_000 and on == off
+    docs = e.select(F.col("document_id").alias("doc_id"), "text")
+    on, off = _with_and_without_aqe(
+        spark, lambda: bm25_topk(docs, vocab[:15], top_k=50))
+    assert len(on) == 50 and on == off

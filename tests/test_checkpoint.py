@@ -21,6 +21,19 @@ def test_write_marks_complete_and_rereads(spark, tmp_path):
     assert "stage1" in out.inputFiles()[0]
 
 
+def test_write_runs_one_job_and_keeps_the_schema(spark, tmp_path):
+    """The re-read takes the written frame's schema instead of inferring
+    it with a second job, and that schema is what inference would give."""
+    from test_job_budget import _count_jobs
+
+    store = CheckpointStore(str(tmp_path / "ck"), spark)
+    df = spark.range(5).selectExpr(
+        "id AS row_id", "array(id, id) AS band", "cast(id AS string) AS name")
+    out, n_jobs = _count_jobs(spark, "checkpoint-write", lambda: store.write("s", df))
+    assert n_jobs == 1
+    assert out.schema == spark.read.parquet(str(tmp_path / "ck" / "s")).schema
+
+
 def test_get_or_compute_skips_complete_stage(spark, tmp_path):
     store = CheckpointStore(str(tmp_path / "ck"), spark)
     calls = []

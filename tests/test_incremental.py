@@ -374,3 +374,30 @@ def test_compact_state_bounds_files_and_preserves_results(spark, fixture, tmp_pa
     s3 = resolve_increment(spark.createDataFrame(rows.iloc[b:]), compacted, CFG, id_col="row_id")
     inc = sorted((r["row_id"], r["cluster_id"]) for r in s3.clusters.collect())
     assert inc == _batch_clusters(spark, rows)
+
+
+def test_save_state_rejects_a_batch_id_not_above_the_last(spark, tmp_path):
+    """Batch ids must increase: a late, lower id raises before anything is
+    appended, and the committed state stays whole."""
+    from entitylinking_spark.checkpoint import CheckpointStore
+    from entitylinking_spark.plans.incremental import (
+        last_saved_batch_id,
+        load_state,
+        save_state,
+    )
+
+    rows = generate_repo_files(90, seed=3).rows
+    store = CheckpointStore(str(tmp_path / "state"), spark)
+    state = None
+    for bid, chunk in zip((5, 7), (rows.iloc[:30], rows.iloc[30:60])):
+        state = resolve_increment(spark.createDataFrame(chunk), state, CFG, id_col="row_id")
+        save_state(state, store, bid)
+    late = resolve_increment(spark.createDataFrame(rows.iloc[60:]), state, CFG, id_col="row_id")
+    with pytest.raises(ValueError, match="not above"):
+        save_state(late, store, 6)
+    with pytest.raises(ValueError, match="not above"):
+        save_state(late, store, 7)
+
+    assert last_saved_batch_id(store) == 7
+    loaded = load_state(store, spark)
+    assert loaded.keyed.count() == loaded.clusters.count() == 60

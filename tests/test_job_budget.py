@@ -9,8 +9,9 @@ jobs.
 
 import time
 
+from entitylinking_spark.checkpoint import CheckpointStore
 from entitylinking_spark.operators.blocking import ERConfig
-from entitylinking_spark.plans.incremental import resolve_increment
+from entitylinking_spark.plans.incremental import load_state, resolve_increment, save_state
 from entitylinking_spark.plans.pipeline import resolve
 from entitylinking_spark.synthdata import generate_repo_files
 
@@ -19,6 +20,10 @@ CFG = ERConfig(suppress_shingle_df=None)
 MAX_JOBS_RESOLVE = 29
 MAX_JOBS_FIRST_FOLD = 28
 MAX_JOBS_LATER_FOLD = 29
+# the keyed append, the content append and the clusters snapshot; the
+# commit record is a driver-written file, and the load reads only it
+MAX_JOBS_SAVE = 3
+MAX_JOBS_LOAD = 0
 
 
 def _in_group(sc, group, fn):
@@ -44,7 +49,7 @@ def _count_jobs(spark, group, fn):
     return out, len(tracker.getJobIdsForGroup(group))
 
 
-def test_jobs_per_operation_within_budget(spark):
+def test_jobs_per_operation_within_budget(spark, tmp_path):
     rows = generate_repo_files(400, seed=11).rows
     split = int(len(rows) * 0.8)
     df = spark.createDataFrame(rows)
@@ -58,10 +63,21 @@ def test_jobs_per_operation_within_budget(spark):
     s1, n_first = _count_jobs(
         spark, "budget-first-fold",
         lambda: resolve_increment(first, None, CFG, id_col="row_id"))
-    _, n_later = _count_jobs(
+    s2, n_later = _count_jobs(
         spark, "budget-later-fold",
         lambda: resolve_increment(later, s1, CFG, id_col="row_id"))
+    store = CheckpointStore(str(tmp_path / "state"), spark)
+    _, n_first_save = _count_jobs(
+        spark, "budget-first-save", lambda: save_state(s1, store, 0))
+    _, n_later_save = _count_jobs(
+        spark, "budget-later-save", lambda: save_state(s2, store, 1))
+    loaded, n_load = _count_jobs(
+        spark, "budget-load", lambda: load_state(store, spark))
 
     assert n_resolve <= MAX_JOBS_RESOLVE, f"resolve ran {n_resolve} jobs"
     assert n_first <= MAX_JOBS_FIRST_FOLD, f"first fold ran {n_first} jobs"
     assert n_later <= MAX_JOBS_LATER_FOLD, f"later fold ran {n_later} jobs"
+    assert n_first_save <= MAX_JOBS_SAVE, f"first save ran {n_first_save} jobs"
+    assert n_later_save <= MAX_JOBS_SAVE, f"later save ran {n_later_save} jobs"
+    assert n_load <= MAX_JOBS_LOAD, f"load ran {n_load} jobs"
+    assert loaded.keyed.count() == len(rows)
